@@ -48,11 +48,6 @@ def null_violations(df: DataFrame, not_null_cols: Sequence[str]) -> DataFrame:
     return df.where(cond) if cond is not None else df.limit(0)
 
 
-def domain_violations(df: DataFrame, col: str, allowed: Sequence[str]) -> DataFrame:
-    """CHECK col IN (...) violations (`sql/load/01_audit.sql:9`)."""
-    return df.where(~F.col(col).isin(list(allowed)) | F.col(col).isNull())
-
-
 def table_summary(df: DataFrame, ts_col: str | None = None) -> DataFrame:
     """COUNT(*) + optional MIN/MAX timestamp range
     (`sql/load/04_checks.sql:1-3`, `sql/mart/03_checks.sql:2-5`)."""

@@ -196,15 +196,12 @@ def jaccard_pairs(
     ``minhash_lsh_pairs``. NOTE: df_cap changes the measured set, so
     it is an approximation switch, off by default.
 
-    r12: the inverted-index join keys on ``xxhash64(shingle)`` — the
-    shingle strings die in the map-side projection AFTER the per-doc
-    distinct (set sizes stay exact string-distinct counts), so the
-    self-join shuffles and compares 8-byte keys instead of O(n·word)
-    strings (measured 4.9 s → 3.0 s at sf0.1, identical pairs). A
-    64-bit collision can only merge two DIFFERENT shingles across the
-    join (~distinct²/2⁶⁴ odds — the same documented class as the
-    ExactSubstr gram hashes and the span probes); equal shingles
-    always collide equal, so no pair is ever missed.
+    Join key: the postings carry the shingle STRING, so the self-join
+    shuffles and compares O(n·word)-byte strings and is exact — no two
+    different shingles can ever match. (r12 keyed this join on
+    ``xxhash64(shingle)``; the r13 postings rewrite dropped that key.
+    Restoring it would shrink the join to 8-byte keys at the cost of
+    the 64-bit collision class the ExactSubstr gram hashes document.)
     """
     df = fan_out_narrow_input(df)
     if n > 1:
@@ -215,12 +212,13 @@ def jaccard_pairs(
             F.explode(F.array_distinct(tokens(text_col))).alias("shingle"),
         )
     # Postings materialized ONCE (r13, the tf_cosine_pairs shape from
-    # 4f74b78): the (doc, shingle-hash) set used to be inlined into
+    # 4f74b78): the (doc, shingle) set used to be inlined into
     # BOTH self-join sides — each a scan + explode + window (two
     # exchanges) — and the per-doc set size rode through the Σdf² pair
     # flow as two extra 8-byte group-key columns. Now the postings
-    # localCheckpoint once (~16 B/row, the sparse set index a
-    # production pipeline persists), set sizes come from a tiny
+    # localCheckpoint once (one (doc id, shingle string) row per
+    # distinct shingle of a doc, the sparse set index a production
+    # pipeline persists), set sizes come from a tiny
     # groupBy of the SAME materialized rows (identical exact
     # string-distinct counts), and they re-attach by broadcast AFTER
     # the intersection aggregation.

@@ -25,8 +25,9 @@ Scale notes (100 TB posture):
     present in the source batch (dynamic partition overwrite) — the
     helper ``merge_upsert`` is layout-agnostic; ``run_merge`` in
     plans/hn_pipeline wires partition pruning.
-  * Metrics come from one extra aggregation over a tagged column, not
-    from re-running the join.
+  * Metrics are tallied by an ``Observation`` on the one job that
+    materializes the merged frame (an eager ``localCheckpoint``), not
+    by a second aggregation or a re-run of the join.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 ACTION_COL = "_merge_action"
@@ -115,29 +116,36 @@ def merge_upsert(
     keys: Sequence[str],
     freshness_col: str,
 ) -> tuple[DataFrame, MergeMetrics]:
-    """Merge and also compute the audit metrics (one extra job).
+    """Merge and also compute the audit metrics, with one Spark action.
 
-    The merged frame is cached only for the metric aggregation and
-    unpersisted before returning — callers that materialize the
-    result recompute the join once, but cached partitions no longer
-    accumulate across multi-batch loops (``--all-batches``, streaming
-    foreachBatch), which leaked storage memory across an ever-growing
-    chained plan (ADVICE r1).
+    Construction runs ONE eager ``localCheckpoint`` of the merged frame
+    (under AQE that action submits one job per shuffle stage of the
+    dedup and the join, plus the final one), and the inserted /
+    updated / kept tallies ride it as an unnamed ``Observation`` (a
+    fresh random name per call, so concurrent or repeated merges
+    cannot collide). The returned frame is that checkpoint: its
+    lineage is cut, so actions on it read the materialized rows
+    instead of recomputing the source parse, the dedup window and the
+    join, and a multi-batch loop's plan does not grow batch by batch.
+
+    No storage leak across multi-batch loops (``--all-batches``,
+    streaming foreachBatch; ADVICE r1): nothing enters the
+    CacheManager, which holds every persisted frame until an explicit
+    ``unpersist``. The checkpoint's blocks belong to its RDD, and the
+    ContextCleaner drops them once the returned frame is no longer
+    referenced, as when a loop replaces ``target`` with the next merge.
     """
     merged = merge_resolve(target, source, keys, freshness_col, keep_action=True)
-    merged = merged.persist()
-    try:
-        counts = {
-            r[ACTION_COL]: r["n"]
-            for r in merged.groupBy(ACTION_COL).agg(
-                F.count("*").alias("n")
-            ).collect()
-        }
-    finally:
-        merged.unpersist()
-    metrics = MergeMetrics(
-        inserted=counts.get("inserted", 0),
-        updated=counts.get("updated", 0),
-        kept=counts.get("kept", 0),
+    obs = Observation()
+    tally = {
+        a: F.sum((F.col(ACTION_COL) == a).cast("long")).alias(a)
+        for a in ("inserted", "updated", "kept")
+    }
+    out = (
+        merged.observe(obs, *tally.values())
+        .drop(ACTION_COL)
+        .localCheckpoint(eager=True)
     )
-    return merged.drop(ACTION_COL), metrics
+    counts = obs.get  # sums over an empty merge are NULL
+    metrics = MergeMetrics(**{a: counts[a] or 0 for a in tally})
+    return out, metrics

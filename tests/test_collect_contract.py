@@ -21,6 +21,7 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "reddit_hn_etl_sp
 ALLOWED = {
     ("__main__.py", "main"): "CLI demo: 1-row-per-component lineage frames",
     ("plans/hn_pipeline.py", "run_mart_checks"): "fixed check summary rows (one per check)",
+    ("plans/hn_pipeline.py", "validate_staging"): "1-row fused guard aggregate",
     ("plans/hn_pipeline.py", "affected_dates"): "distinct event dates in ONE ingest batch",
     ("plans/queries.py", "pca_project_top1"): "k-row component frame (k=1 here)",
     ("streaming/ingest.py", "_batch_stamp_epoch"): "distinct source filenames of one micro-batch / 1-row max aggregate",
@@ -29,7 +30,6 @@ ALLOWED = {
     ("streaming/ingest.py", "pq_index_drift_report"): "2-row aggregate (new vs snapshot recon_err stats)",
     ("operators/kmeans.py", "update_centroids"): "n_cells centroid rows (k-means k)",
     ("operators/kmeans.py", "update_centroids_minibatch"): "k·dim partial rows (k-means k)",
-    ("operators/merge.py", "merge_upsert"): "1-row inserted/updated metrics aggregate",
     ("operators/graph.py", "connected_components"): "1-row convergence probe (sum of label changes)",
     ("operators/graph.py", "connected_components_star._probe"): "1-row convergence probe",
     ("operators/similarity.py", "cosine_pairs_blocked"): "guarded: loud max_rows check precedes the collect",

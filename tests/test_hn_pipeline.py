@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from reddit_hn_etl_spark.operators.checks import CheckFailure
+from reddit_hn_etl_spark.operators.merge import ACTION_COL, merge_resolve, merge_upsert
 from reddit_hn_etl_spark.plans import hn_pipeline as hp
 from reddit_hn_etl_spark.sources import batches
 
@@ -182,3 +183,97 @@ def test_mart_checks_pass(staging1, staging2, marts):
     results = hp.run_mart_checks(merged, marts)
     assert {r.mart for r in results["summaries"]} == set(hp.MARTS)
     assert results["last_day_user_rows"][0].n == 2
+
+
+# --- validate_staging: one fused guard aggregate, same failures --------------
+
+
+def test_null_in_not_null_column_fails(staging1):
+    bad = staging1.withColumn(
+        "title", F.when(F.col("id") == 2, None).otherwise(F.col("title"))
+    )
+    with pytest.raises(CheckFailure, match="NULL in NOT NULL"):
+        hp.validate_staging(bad)
+
+
+def test_duplicate_id_fails(staging1):
+    with pytest.raises(CheckFailure, match=r"duplicate keys \['id'\]"):
+        hp.validate_staging(staging1.unionByName(staging1.where(F.col("id") == 3)))
+
+
+def test_null_reported_before_duplicate(staging1):
+    """The old probe order holds: a frame with both a NULL and a
+    duplicate id fails on the NULL."""
+    dup = staging1.unionByName(staging1.where(F.col("id") == 3))
+    bad = dup.withColumn(
+        "title", F.when(F.col("id") == 5, None).otherwise(F.col("title"))
+    )
+    with pytest.raises(CheckFailure, match="NULL in NOT NULL"):
+        hp.validate_staging(bad)
+
+
+# --- merge_upsert: metrics ride the materializing job -----------------------
+
+
+def _by_action(resolved):
+    """(rows, counts) per action of ``merge_resolve(keep_action=True)``."""
+    rows = resolved.collect()
+    counts = {a: 0 for a in ("inserted", "updated", "kept")}
+    for r in rows:
+        counts[r[ACTION_COL]] += 1
+    data = sorted(tuple(v for k, v in r.asDict().items() if k != ACTION_COL) for r in rows)
+    return data, counts
+
+
+@pytest.mark.parametrize("case", ["fixture", "empty_target", "empty_source", "both_empty"])
+def test_merge_upsert_matches_resolve(spark, staging1, staging2, case):
+    empty = staging1.where(F.lit(False))
+    target, source = {
+        "fixture": (staging1, staging2),
+        "empty_target": (empty, staging2),
+        "empty_source": (staging1, empty),
+        "both_empty": (empty, empty),
+    }[case]
+    args = dict(keys=["id"], freshness_col="extracted_at")
+    want_rows, want = _by_action(merge_resolve(target, source, keep_action=True, **args))
+    spark.catalog.clearCache()  # the session is shared; start from an empty cache
+    merged, m = merge_upsert(target, source, **args)
+    assert (m.inserted, m.updated, m.kept) == (want["inserted"], want["updated"], want["kept"])
+    assert sorted(tuple(r) for r in merged.collect()) == want_rows
+    # localCheckpoint, not persist: nothing is left in the CacheManager
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it submitted."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_landing_job_counts(spark, staging1, staging2):
+    """Jobs per call on the fixture (ROADMAP D4). Before the guards,
+    the merge metrics and the mart checks were each fused into one
+    query, the same calls submitted: validate_staging 6, merge_upsert 7
+    (and the caller's first action then recomputed the join),
+    run_mart_checks 18."""
+    _, n_validate = _jobs(spark, "jobs_validate", lambda: hp.validate_staging(staging2))
+    (merged, _), n_merge = _jobs(spark, "jobs_merge", lambda: hp.load_merge(staging1, staging2))
+    # marts over a materialized frame, so only the checks' own jobs count
+    marts = hp.build_marts(merged.localCheckpoint())
+    _, n_checks = _jobs(spark, "jobs_mart_checks", lambda: hp.run_mart_checks(merged, marts))
+    assert (n_validate, n_merge, n_checks) == (3, 5, 12)
+
+
+def test_mart_checks_planted_duplicate_key(staging1, staging2, marts):
+    merged, _ = hp.load_merge(staging1, staging2)
+    daily = marts["daily_story_metrics"]
+    planted = dict(marts, daily_story_metrics=daily.unionByName(daily.limit(1)))
+    with pytest.raises(CheckFailure, match=r"duplicate keys \['metric_date'\]"):
+        hp.run_mart_checks(merged, planted)

@@ -64,10 +64,7 @@ def _merge_model(target, source):
     return out, inserted, updated
 
 
-@given(target=rows, source=rows)
-@SET
-@pytest.mark.exhaustive
-def test_merge_matches_model(spark, target, source):
+def _check_merge(spark, target, source):
     # make target keys unique (staging invariant: PK per key)
     tgt = list({k: (k, m, v) for k, m, v in target}.values())
     t_df, s_df = _df(spark, tgt), _df(spark, source)
@@ -78,13 +75,31 @@ def test_merge_matches_model(spark, target, source):
         freshness_col="ts",
     )
     got = {r.k: ((r.ts - BASE).seconds // 60, r.v) for r in merged.collect()}
-    want, ins, upd = _merge_model(
-        [(k, m, v) for k, m, v in
-         {k: (k, m, v) for k, m, v in tgt}.values()],
-        source,
-    )
+    want, ins, upd = _merge_model(tgt, source)
     assert got == want
-    assert (metrics.inserted, metrics.updated) == (ins, upd)
+    assert (metrics.inserted, metrics.updated, metrics.kept) == (ins, upd, len(want) - ins - upd)
+
+
+@given(target=rows, source=rows)
+@SET
+@pytest.mark.exhaustive
+def test_merge_matches_model(spark, target, source):
+    _check_merge(spark, target, source)
+
+
+# Default-run slice of the battery above: empty sides, an equal-timestamp
+# tie (no update), a fresher and a staler copy, in-source duplicates.
+MERGE_SMOKE = [
+    ([], []),
+    ([(1, 5, 10), (2, 5, 20)], []),
+    ([], [(1, 5, 10), (1, 7, 11), (3, 0, -1)]),
+    ([(1, 5, 10), (2, 5, 20), (3, 5, 30)], [(1, 5, 99), (2, 6, 21), (3, 4, 31), (4, 0, 40), (4, 0, 41)]),
+]
+
+
+@pytest.mark.parametrize("target,source", MERGE_SMOKE)
+def test_merge_matches_model_smoke(spark, target, source):
+    _check_merge(spark, target, source)
 
 
 @given(data=rows)
