@@ -69,15 +69,6 @@ def epoch_to_ts(col: str | Column) -> Column:
     return F.timestamp_seconds(c)
 
 
-def batch_ts_from_filename(pattern_prefix: str = "hn_raw_") -> Column:
-    """S8: parse the batch timestamp out of the input file name
-    (`src/transform/hn_transform.py:29-36`) — deterministic lineage,
-    never wall clock (`src/common/files.py:9-13`)."""
-    name = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    stamp = F.regexp_extract(name, pattern_prefix + r"(\d{8}_\d{6})", 1)
-    return F.to_timestamp(stamp, "yyyyMMdd_HHmmss")
-
-
 _TRACKING_PARAM_RE = r"(?i)^(utm_|gclid=|fbclid=|ref=)"
 
 

@@ -197,23 +197,6 @@ def fingerprint_md5(text: str | Column, normalize: bool = True) -> Column:
     return F.md5(c)
 
 
-def rolling_hash_fingerprint(
-    text: str | Column, window: int = 8, keep: int = 4
-) -> Column:
-    """Winnowing-style fingerprint: xxhash64 of each ``window``-token
-    shingle, keep the ``keep`` smallest hashes as the doc sketch
-    (array<bigint>). Shared sketch values across docs indicate local
-    overlap (plagiarism-style detection) — a cheap per-row sketch that
-    joins on ``F.explode``."""
-    from ..operators.dedup import ngram_array
-
-    toks = tokens(text)
-    # elementwise hash over a zip_with-built gram array — no
-    # outer-capture lambda (see ngram_array)
-    hashes = F.transform(ngram_array(toks, window), F.xxhash64)
-    return F.slice(F.array_sort(hashes), 1, keep)
-
-
 def hashed_bucket(term: Column, n_buckets: int) -> Column:
     """Engine-portable hashed feature bucket: first 8 md5 hex chars as
     an integer, mod ``n_buckets`` (the same md5→int trick

@@ -176,6 +176,113 @@ def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
     )
 
 
+def _postings(
+    df: DataFrame, id_col: str, text_col: str, n: int, weighted: bool = False
+) -> DataFrame:
+    """Postings of the inverted-index pair kernel: ``(id_col, key)``,
+    one row per distinct word n-gram of a document, plus ``w``, the
+    n-gram's term frequency in the document, when ``weighted``.
+    Materialized with one eager ``localCheckpoint``, so every join
+    side, the df counts and the per-doc stats read the same rows. The
+    checkpoint runs one Spark job per stage: one, plus one when
+    ``weighted`` (the (doc, key) aggregation), plus one when the input
+    is narrower than the default parallelism (the repartition of
+    :func:`fan_out_narrow_input`).
+
+    Key: ``key = xxhash64(gram)``, 8 bytes whatever the gram's length.
+    Equal grams always hash equal, so no shared gram is ever missed;
+    the only error class is a 64-bit collision, which merges two
+    different grams at ~distinct²/2⁶⁴ odds (the class the ExactSubstr
+    gram hashes document) and can only raise an intersection, a dot
+    product or a df count.
+    """
+    grams = ngram_array(tokens(text_col), n)
+    if not weighted:
+        grams = F.array_distinct(grams)
+    posts = (
+        fan_out_narrow_input(df)
+        .select(F.col(id_col), F.explode(grams).alias("gram"))
+        .select(F.col(id_col), F.xxhash64("gram").alias("key"))
+    )
+    if weighted:
+        posts = posts.groupBy(id_col, "key").agg(F.count("*").alias("w"))
+    return posts.localCheckpoint(eager=True)
+
+
+def _overlaps(
+    pa: DataFrame,
+    pb: DataFrame,
+    id_col: str,
+    a: str,
+    b: str,
+    df_cap: int | None = None,
+    candidates: DataFrame | None = None,
+) -> DataFrame:
+    """``(a, b, dot, s_a, s_b)`` for every pair of documents sharing a
+    key: ``dot`` = Σ w_a·w_b over the shared keys and ``s`` = Σ w² per
+    document, with w = 1 for unweighted postings (so ``dot`` is |A∩B|
+    and ``s`` the set size). All integer sums, so every value is
+    independent of partitioning.
+
+    ``pa is pb`` is a self-join and keeps ``a < b`` only; otherwise
+    side A joins side B. ``df_cap`` drops keys in more than that many
+    side-B documents from the intersections only — ``s`` still counts
+    the full sets — through a broadcast anti-join against the banned
+    keys, of which there are at most Σdf/df_cap. ``candidates``, a
+    subset of the self-join's postings, limits scoring to the distinct
+    pairs that share one of its keys; those pairs are then scored over
+    their full postings.
+
+    A pair's rows are spread over the key partitions, so they are
+    repartitioned on ``(a, b)`` before the aggregation, which keeps its
+    hash tables group-sized; ``s`` is attached afterwards by broadcast
+    (one row per document, against a pair flow of Σdf² rows).
+    """
+    self_join = pa is pb
+    weighted = "w" in pa.columns
+
+    def side(p: DataFrame, name: str) -> DataFrame:
+        w = [F.col("w").alias(f"w_{name}")] if weighted else []
+        return p.select(F.col(id_col).alias(name), "key", *w)
+
+    def pairs(x: DataFrame, y: DataFrame) -> DataFrame:
+        rows = side(x, a).join(side(y, b), "key")
+        return rows.where(F.col(a) < F.col(b)) if self_join else rows
+
+    def stats(p: DataFrame, name: str, s: str) -> DataFrame:
+        sq = F.sum(F.col("w") * F.col("w")) if weighted else F.count("*")
+        return F.broadcast(p.groupBy(F.col(id_col).alias(name)).agg(sq.alias(s)))
+
+    s_a, s_b = stats(pa, a, "s_a"), stats(pb, b, "s_b")
+    if df_cap is not None:
+        banned = (
+            pb.groupBy("key").agg(F.count("*").alias("df"))
+            .where(F.col("df") > df_cap).select("key")
+        )
+        pa = pa.join(F.broadcast(banned), "key", "left_anti")
+        pb = pa if self_join else pb.join(F.broadcast(banned), "key", "left_anti")
+    if candidates is None:
+        rows = pairs(pa, pb)
+    else:
+        cand = pairs(candidates, candidates).select(a, b).distinct()
+        rows = cand.join(side(pa, a), a).join(side(pb, b), [b, "key"])
+    if weighted:
+        dot = F.sum(F.col(f"w_{a}") * F.col(f"w_{b}"))
+    else:
+        dot = F.count("*")
+    return (
+        rows.repartition(a, b).groupBy(a, b).agg(dot.alias("dot"))
+        .join(s_a, a).join(s_b, b)
+    )
+
+
+def _jaccard(ov: DataFrame, a: str, b: str, threshold: float) -> DataFrame:
+    """Jaccard scorer over :func:`_overlaps` of unweighted postings:
+    |A∩B| / (|A|+|B|−|A∩B|) ≥ threshold, rounded to 4 places."""
+    j = F.col("dot") / (F.col("s_a") + F.col("s_b") - F.col("dot"))
+    return ov.where(j >= threshold).select(a, b, F.round(j, 4).alias("jaccard"))
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -186,90 +293,24 @@ def jaccard_pairs(
 ) -> DataFrame:
     """All-pairs n-gram Jaccard similarity ≥ threshold.
 
-    Inverted-index join: explode to (doc, shingle), self-join on
-    shingle, count intersections, then |A∪B| = |A|+|B|−|A∩B|.
-    Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    Inverted-index self-join (:func:`_overlaps`): postings (doc,
+    n-gram key), joined on the key, intersections counted per pair,
+    then |A∪B| = |A|+|B|−|A∩B|. Output: (doc_a, doc_b, jaccard) with
+    doc_a < doc_b. The join key is the 64-bit n-gram hash described in
+    :func:`_postings`. Construction runs one Spark job, the postings
+    checkpoint (two for an input narrower than the default
+    parallelism; see :func:`_postings`).
 
     Scale: hot shingles blow up the candidate join quadratically;
     ``df_cap`` drops shingles occurring in more than that many docs
-    (stopword shingles carry no signal) — at 100 TB use that or
+    (stopword shingles carry no signal) from the intersections, while
+    the denominators keep the full set sizes — at 100 TB use that or
     ``minhash_lsh_pairs``. NOTE: df_cap changes the measured set, so
     it is an approximation switch, off by default.
-
-    Join key: the postings carry the shingle STRING, so the self-join
-    shuffles and compares O(n·word)-byte strings and is exact — no two
-    different shingles can ever match. (r12 keyed this join on
-    ``xxhash64(shingle)``; the r13 postings rewrite dropped that key.
-    Restoring it would shrink the join to 8-byte keys at the cost of
-    the 64-bit collision class the ExactSubstr gram hashes document.)
     """
-    df = fan_out_narrow_input(df)
-    if n > 1:
-        sh = word_shingles(df, id_col, text_col, n=n)
-    else:
-        sh = df.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(tokens(text_col))).alias("shingle"),
-        )
-    # Postings materialized ONCE (r13, the tf_cosine_pairs shape from
-    # 4f74b78): the (doc, shingle) set used to be inlined into
-    # BOTH self-join sides — each a scan + explode + window (two
-    # exchanges) — and the per-doc set size rode through the Σdf² pair
-    # flow as two extra 8-byte group-key columns. Now the postings
-    # localCheckpoint once (one (doc id, shingle string) row per
-    # distinct shingle of a doc, the sparse set index a production
-    # pipeline persists), set sizes come from a tiny
-    # groupBy of the SAME materialized rows (identical exact
-    # string-distinct counts), and they re-attach by broadcast AFTER
-    # the intersection aggregation.
-    posts = sh.localCheckpoint(eager=True)
-    sizes = posts.groupBy(id_col).agg(F.count("*").alias("set_size"))
-    if df_cap is not None:
-        freq = posts.groupBy("shingle").agg(F.count("*").alias("df"))
-        posts = posts.join(
-            F.broadcast(freq.where(F.col("df") <= df_cap).select("shingle")), "shingle"
-        )
-    a = posts.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = posts.select(F.col(id_col).alias("doc_b"), "shingle")
-    # Pair-key repartition BEFORE the intersection count (r13, guide
-    # §2.5/§2.3, measured on the tf twin): a pair's candidate rows are
-    # scattered across shingle partitions, so the map-side partial
-    # aggregate compresses almost nothing while building a
-    # near-distinct-pair-sized hash table per task; co-locating each
-    # pair first keeps the aggregation hash tables group-sized.
-    # Partition count follows spark.sql.shuffle.partitions.
-    inter = (
-        a.join(b, on="shingle")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .repartition(F.col("doc_a"), F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    joined = inter.join(
-        F.broadcast(
-            sizes.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("set_size").alias("size_a"),
-            )
-        ),
-        "doc_a",
-    ).join(
-        F.broadcast(
-            sizes.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("set_size").alias("size_b"),
-            )
-        ),
-        "doc_b",
-    )
-    return (
-        joined.withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    p = _postings(df, id_col, text_col, n)
+    ov = _overlaps(p, p, id_col, "doc_a", "doc_b", df_cap=df_cap)
+    return _jaccard(ov, "doc_a", "doc_b", threshold)
 
 
 def jaccard_pairs_cross(
@@ -281,14 +322,17 @@ def jaccard_pairs_cross(
     threshold: float = 0.5,
     df_cap: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard pairs BETWEEN two disjoint document sets
-    (r6): same inverted-index shape as :func:`jaccard_pairs`, but the
+    """Exact n-gram Jaccard pairs BETWEEN two disjoint document sets:
+    same inverted-index kernel as :func:`jaccard_pairs`, but the
     self-join becomes an A-side ⋈ B-side join — the decontamination
     shape, where A is a small benchmark and B the corpus. Candidate
     volume drops from Σ df² over the union to Σ df_A·df_B, i.e. the
     corpus never pair-scores against itself just to have those rows
     discarded. Callers must keep the id spaces disjoint. Output:
-    (id_a, id_b, jaccard) with jaccard ≥ threshold.
+    (id_a, id_b, jaccard) with jaccard ≥ threshold. The join key is the
+    64-bit n-gram hash described in :func:`_postings`. Construction
+    runs two Spark jobs, one postings checkpoint per side (one more per
+    side narrower than the default parallelism; see :func:`_postings`).
 
     Scale: one boilerplate shingle present in most bench AND corpus
     docs puts |A_df|·|B_df| candidates on a single shuffle bucket —
@@ -298,63 +342,12 @@ def jaccard_pairs_cross(
     corpus-rare shingles only, while the Jaccard denominators keep
     the FULL set sizes — identical semantics contract to
     :func:`jaccard_pairs`'s cap (pinned vs brute force in
-    tests/test_skew.py). The banned set (ubiquitous shingles) is at
-    most Σ df_b / cap entries — small by construction — so it
-    broadcasts as an anti-join; the allow-list would be
-    vocabulary-sized. Approximation switch, off by default.
+    tests/test_skew.py). Approximation switch, off by default.
     """
-
-    def sized_shingles(df: DataFrame) -> DataFrame:
-        df = fan_out_narrow_input(df)
-        if n > 1:
-            sh = word_shingles(df, id_col, text_col, n=n)
-        else:
-            sh = df.select(
-                F.col(id_col),
-                F.explode(F.array_distinct(tokens(text_col))).alias(
-                    "shingle"
-                ),
-            )
-        # 8-byte join keys, exact string-distinct set sizes — the
-        # same r12 trade as jaccard_pairs (see its docstring).
-        sh = sh.select(
-            F.col(id_col), F.xxhash64("shingle").alias("shingle")
-        )
-        return sh.withColumn(
-            "set_size", F.count("*").over(Window.partitionBy(id_col))
-        )
-
-    a = sized_shingles(df_a).select(
-        F.col(id_col).alias("id_a"), "shingle",
-        F.col("set_size").alias("size_a"),
-    )
-    b = sized_shingles(df_b).select(
-        F.col(id_col).alias("id_b"), "shingle",
-        F.col("set_size").alias("size_b"),
-    )
-    if df_cap is not None:
-        banned = (
-            b.groupBy("shingle")
-            .agg(F.count("*").alias("df_b"))
-            .where(F.col("df_b") > df_cap)
-            .select("shingle")
-        )
-        a = a.join(F.broadcast(banned), "shingle", "left_anti")
-        b = b.join(F.broadcast(banned), "shingle", "left_anti")
-    inter = (
-        a.join(b, on="shingle")
-        .groupBy("id_a", "id_b", "size_a", "size_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    pa = _postings(df_a, id_col, text_col, n)
+    pb = _postings(df_b, id_col, text_col, n)
+    ov = _overlaps(pa, pb, id_col, "id_a", "id_b", df_cap=df_cap)
+    return _jaccard(ov, "id_a", "id_b", threshold)
 
 
 def containment_pairs(
@@ -372,88 +365,40 @@ def containment_pairs(
     "A is substantially quoted inside B" (the direction matters, so
     both (a,b) and (b,a) can appear).
 
-    Same inverted-index shape as :func:`jaccard_pairs` — explode to
-    (doc, shingle), self-join on shingle with one reused exchange,
-    count intersections — and since |A∩B| plus BOTH set sizes
-    determine BOTH directions, the join runs CANONICALLY
-    (``doc_a < doc_b``, half the candidate/aggregate rows of the
-    naive ``!=`` join — measured 13.3s → ~10s at sf0.1) and a cheap
-    post-aggregation explode emits the two directed rows, each
-    filtered by its own denominator. Output: (doc_a, doc_b,
-    containment) meaning "doc_a is `containment`-contained in doc_b";
-    both (a,b) and (b,a) can appear.
+    Same inverted-index kernel as :func:`jaccard_pairs`, and since
+    |A∩B| plus BOTH set sizes determine BOTH directions, the self-join
+    runs CANONICALLY (``doc_a < doc_b``, half the candidate/aggregate
+    rows of the naive ``!=`` join) and a cheap post-aggregation
+    explode emits the two directed rows, each filtered by its own
+    denominator. Output: (doc_a, doc_b, containment) meaning "doc_a is
+    `containment`-contained in doc_b"; both (a,b) and (b,a) can
+    appear. The join key is the 64-bit n-gram hash described in
+    :func:`_postings`. Construction runs one Spark job, the postings
+    checkpoint (two for an input narrower than the default
+    parallelism; see :func:`_postings`).
 
     Scale: identical posture to jaccard_pairs — hot shingles are the
     quadratic risk; cap document frequency upstream or route through
     the MinHash index for web-scale corpora.
     """
-    df = fan_out_narrow_input(df)
-    if n > 1:
-        sh = word_shingles(df, id_col, text_col, n=n)
-    else:
-        sh = df.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(tokens(text_col))).alias("shingle"),
-        )
-    # Same r13 restructure as jaccard_pairs (see its comment):
-    # postings materialized once, intersection aggregation keyed on
-    # the pair only after a pair-key repartition, exact set sizes
-    # re-attached by broadcast. The postings key is xxhash64(shingle)
-    # — the r12 8-byte-key trade jaccard_pairs documents (equal
-    # shingles always collide equal, so no pair is missed; a 64-bit
-    # collision can only merge two different shingles at
-    # ~distinct²/2⁶⁴ odds), which r12 never applied here.
-    sh = sh.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
-    posts = sh.localCheckpoint(eager=True)
-    sizes = posts.groupBy(id_col).agg(F.count("*").alias("set_size"))
-    a = posts.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = posts.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, on="shingle")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .repartition(F.col("doc_a"), F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    ).join(
-        F.broadcast(
-            sizes.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("set_size").alias("size_a"),
-            )
-        ),
-        "doc_a",
-    ).join(
-        F.broadcast(
-            sizes.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("set_size").alias("size_b"),
-            )
-        ),
-        "doc_b",
-    )
-    directed = inter.select(
+    p = _postings(df, id_col, text_col, n)
+    ov = _overlaps(p, p, id_col, "doc_a", "doc_b")
+    directed = ov.select(
         F.explode(
             F.array(
-                F.struct(
-                    F.col("doc_a").alias("da"),
-                    F.col("doc_b").alias("db"),
-                    (F.col("inter") / F.col("size_a")).alias("c"),
-                ),
-                F.struct(
-                    F.col("doc_b").alias("da"),
-                    F.col("doc_a").alias("db"),
-                    (F.col("inter") / F.col("size_b")).alias("c"),
-                ),
+                *(
+                    F.struct(
+                        F.col(x).alias("doc_a"),
+                        F.col(y).alias("doc_b"),
+                        (F.col("dot") / F.col(s)).alias("c"),
+                    )
+                    for x, y, s in (("doc_a", "doc_b", "s_a"), ("doc_b", "doc_a", "s_b"))
+                )
             )
         ).alias("p")
-    )
-    return (
-        directed.where(F.col("p.c") >= threshold)
-        .select(
-            F.col("p.da").alias("doc_a"),
-            F.col("p.db").alias("doc_b"),
-            F.round("p.c", 4).alias("containment"),
-        )
+    ).select("p.*")
+    return directed.where(F.col("c") >= threshold).select(
+        "doc_a", "doc_b", F.round("c", 4).alias("containment")
     )
 
 
@@ -806,25 +751,29 @@ def jaccard_pairs_prefix(
     ppjoin-family candidate pruner (Chaudhuri et al. SSJoin; Xiao et
     al. WWW'08), the third scale path next to ``df_cap`` (approximate)
     and MinHash-LSH (probabilistic). Unlike both, the result is
-    IDENTICAL to :func:`jaccard_pairs`: prefix filtering only shrinks
-    the candidate set, never the answer.
+    IDENTICAL to :func:`jaccard_pairs`: both score the same postings
+    (keyed by the 64-bit n-gram hash described in :func:`_postings`),
+    and prefix filtering only shrinks the candidate set, never the
+    answer. Construction runs one Spark job, the postings checkpoint
+    (two for an input narrower than the default parallelism; see
+    :func:`_postings`).
 
-    Order all shingles by (document frequency asc, shingle); a pair
-    with J ≥ t must share a shingle within each side's first
-    ``|X| − ⌊t·|X|⌋ + 1`` shingles of that order (rare-first makes the
+    Order all n-gram keys by (document frequency asc, key); a pair
+    with J ≥ t must share a key within each side's first
+    ``|X| − ⌊t·|X|⌋ + 1`` keys of that order (rare-first makes the
     guaranteed-shared element cheap to join on). So the inverted-index
     self-join runs over PREFIXES only — the df-heavy head shingles
     that drive the quadratic candidate blowup never generate
     candidates from suffix positions — and the exact Jaccard is then
-    verified per candidate against the full shingle sets.
+    verified per candidate against the full postings.
 
     ⌊t·|X|⌋ is used instead of the tight ⌈t·|X|⌉−1 suffix bound: one
     extra prefix element costs a few candidates but makes the bound
     immune to float round-up (0.2·35 → 7.000…01 would otherwise
     truncate a required prefix position).
 
-    Plan: shingle df agg (one shuffle) joined back, per-doc rank
-    window, prefix self-join (one reused exchange), then the verify
+    Plan: key df agg (one shuffle) joined back, per-doc rank window,
+    prefix self-join into distinct candidate pairs, then the verify
     join streams each candidate pair's intersection — cost is
     candidates × avg set size, bounded by the pruned candidate count.
 
@@ -841,26 +790,12 @@ def jaccard_pairs_prefix(
     tail, and prefer ``df_cap``/MinHash when approximation is
     acceptable.
     """
-    df = fan_out_narrow_input(df)
-    if n > 1:
-        sh = word_shingles(df, id_col, text_col, n=n)
-    else:
-        sh = df.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(tokens(text_col))).alias("shingle"),
-        )
-    freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
+    p = _postings(df, id_col, text_col, n)
+    by_doc = Window.partitionBy(id_col)
     ranked = (
-        sh.join(freq, "shingle")
-        .withColumn(
-            "set_size", F.count("*").over(Window.partitionBy(id_col))
-        )
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy("df", "shingle")
-            ),
-        )
+        p.join(p.groupBy("key").agg(F.count("*").alias("df")), "key")
+        .withColumn("set_size", F.count("*").over(by_doc))
+        .withColumn("rank", F.row_number().over(by_doc.orderBy("df", "key")))
     )
     prefix_len = (
         F.col("set_size")
@@ -868,42 +803,8 @@ def jaccard_pairs_prefix(
         + 1
     )
     prefix = ranked.where(F.col("rank") <= prefix_len)
-    cand = (
-        prefix.select(F.col(id_col).alias("doc_a"), "shingle")
-        .join(prefix.select(F.col(id_col).alias("doc_b"), "shingle"), "shingle")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    full = ranked.select(F.col(id_col), "shingle", "set_size")
-    inter = (
-        cand.join(
-            full.select(
-                F.col(id_col).alias("doc_a"), "shingle",
-                F.col("set_size").alias("size_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            full.select(
-                F.col(id_col).alias("_bid"),
-                F.col("shingle").alias("shingle_b"),
-                F.col("set_size").alias("size_b"),
-            ),
-            (F.col("doc_b") == F.col("_bid"))
-            & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("doc_a", "doc_b", "size_a", "size_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    ov = _overlaps(p, p, id_col, "doc_a", "doc_b", candidates=prefix)
+    return _jaccard(ov, "doc_a", "doc_b", threshold)
 
 
 def positional_shingles(

@@ -57,12 +57,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TESTDATA_TABLES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def write_bucketed_table(
     df: DataFrame,
     table: str,

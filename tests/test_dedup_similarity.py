@@ -3,11 +3,16 @@ approximate true Jaccard, SimHash must find planted near-dups, and
 LSH kNN must recover most exact neighbors."""
 
 from __future__ import annotations
+
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from reddit_hn_etl_spark.operators import dedup, similarity
+
+from .conftest import _jobs
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank today"),
@@ -629,6 +634,43 @@ def test_jaccard_pairs_cross_equals_filtered_full(spark):
         ).collect()
     }
     assert cross == full and cross
+
+
+def test_df_cap_broadcasts_banned_keys_only(spark):
+    """The df cap broadcasts the keys it bans (at most Σdf/df_cap of
+    them), never the vocabulary-sized list of keys it keeps: the only
+    inner broadcast joins left attach the per-doc set sizes."""
+    out = dedup.jaccard_pairs(
+        _docs_df(spark), "doc_id", "text", n=1, threshold=0.2, df_cap=8
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    joins = re.findall(r"BroadcastHashJoin \[(\w+)#\d+L?\], \[\w+#\d+L?\], (\w+)", plan)
+    assert ("key", "LeftAnti") in joins
+    assert {k for k, how in joins if how == "Inner"} == {"doc_a", "doc_b"}
+
+
+def test_pair_kernel_construction_jobs(spark):
+    """Spark jobs each wrapper runs while it builds its plan, as their
+    docstrings declare: one postings checkpoint per input side, two
+    for the tf postings (their (doc, key) aggregation)."""
+    docs = _docs_df(spark)
+    a = docs.where(F.col("doc_id") % 2 == 0)
+    b = docs.where(F.col("doc_id") % 2 == 1)
+    calls = {
+        "jaccard_pairs": lambda: dedup.jaccard_pairs(docs, "doc_id", "text", df_cap=8),
+        "jaccard_pairs_prefix": lambda: dedup.jaccard_pairs_prefix(docs, "doc_id", "text"),
+        "jaccard_pairs_cross": lambda: dedup.jaccard_pairs_cross(a, b, "doc_id", "text"),
+        "containment_pairs": lambda: dedup.containment_pairs(docs, "doc_id", "text"),
+        "tf_cosine_pairs": lambda: similarity.tf_cosine_pairs(docs, "doc_id", "text"),
+    }
+    got = {name: _jobs(spark, f"jobs_{name}", fn)[1] for name, fn in calls.items()}
+    assert got == {
+        "jaccard_pairs": 1,
+        "jaccard_pairs_prefix": 1,
+        "jaccard_pairs_cross": 2,
+        "containment_pairs": 1,
+        "tf_cosine_pairs": 2,
+    }
 
 
 @pytest.mark.exhaustive

@@ -19,6 +19,8 @@ from reddit_hn_etl_spark.operators.merge import ACTION_COL, merge_resolve, merge
 from reddit_hn_etl_spark.plans import hn_pipeline as hp
 from reddit_hn_etl_spark.sources import batches
 
+from .conftest import _jobs
+
 UTC = dt.timezone.utc
 
 # epoch refs: 2024-01-15 23:59:30 UTC (near midnight) and neighbors
@@ -242,19 +244,6 @@ def test_merge_upsert_matches_resolve(spark, staging1, staging2, case):
     assert sorted(tuple(r) for r in merged.collect()) == want_rows
     # localCheckpoint, not persist: nothing is left in the CacheManager
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def _jobs(spark, group, fn):
-    """Run ``fn`` under a fresh job group; return its result and the
-    number of Spark jobs it submitted."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_landing_job_counts(spark, staging1, staging2):

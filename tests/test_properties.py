@@ -10,6 +10,8 @@ from __future__ import annotations
 import pytest
 
 import datetime as dt
+import math
+from collections import Counter
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -503,17 +505,31 @@ def _brute_jaccard(docs, n=2, threshold=0.2):
 @given(docs=jdocs_strategy)
 @SET
 def test_jaccard_pairs_match_brute_force(spark, docs):
-    from reddit_hn_etl_spark.operators.dedup import jaccard_pairs
+    from reddit_hn_etl_spark.operators.dedup import (
+        jaccard_pairs,
+        jaccard_pairs_cross,
+        jaccard_pairs_prefix,
+    )
 
     df = spark.createDataFrame(
         list(enumerate(docs)), "doc_id long, text string"
     )
+    want = _brute_jaccard(docs)
+    for op in (jaccard_pairs, jaccard_pairs_prefix):
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in op(df, "doc_id", "text", n=2, threshold=0.2).collect()
+        }
+        assert got == want, op.__name__
+    # cross pairs: even ids on side A, odd ids on side B
+    even = df.where(df.doc_id % 2 == 0)
+    odd = df.where(df.doc_id % 2 == 1)
     got = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_pairs(df, "doc_id", "text", n=2,
-                               threshold=0.2).collect()
+        (min(r.id_a, r.id_b), max(r.id_a, r.id_b)): r.jaccard
+        for r in jaccard_pairs_cross(even, odd, "doc_id", "text", n=2,
+                                     threshold=0.2).collect()
     }
-    assert got == _brute_jaccard(docs)
+    assert got == {p: j for p, j in want.items() if (p[0] + p[1]) % 2}
 
 
 @given(pairs=edges_strategy)
@@ -601,6 +617,7 @@ texts_strategy = st.lists(
 @SET
 def test_containment_matches_bruteforce(spark, docs, threshold):
     from reddit_hn_etl_spark.operators.dedup import containment_pairs
+    from reddit_hn_etl_spark.operators.similarity import tf_cosine_pairs
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
@@ -610,6 +627,26 @@ def test_containment_matches_bruteforce(spark, docs, threshold):
         ).collect()
     }
     assert got == _brute_containment(docs, threshold)
+    # the same unigram bags as tf vectors: Counter dot / (sqrt·sqrt)
+    got = {
+        (r.doc_a, r.doc_b): r.cosine_tf
+        for r in tf_cosine_pairs(
+            df, "doc_id", "text", n=1, threshold=threshold
+        ).collect()
+    }
+    tf = {i: Counter(t.lower().split()) for i, t in docs}
+    want = {}
+    for a in tf:
+        for b in tf:
+            dot = sum(tf[a][g] * tf[b][g] for g in tf[a])
+            if a >= b or not dot:
+                continue
+            sa = sum(v * v for v in tf[a].values())
+            sb = sum(v * v for v in tf[b].values())
+            cos = dot / (math.sqrt(sa) * math.sqrt(sb))
+            if cos >= threshold:
+                want[(a, b)] = round(cos, 4)
+    assert got == want
 
 
 # --- duplicate_spans vs brute force --------------------------------
