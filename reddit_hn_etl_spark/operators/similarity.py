@@ -79,6 +79,72 @@ def _topk_ties_mask(cos, k, np):
     return cosp >= thresh[None, :]
 
 
+def _topk_frame(
+    cids, m, cn, qids, qm, qn, k, query_id_col, id_col, exclude_self=False
+):
+    """The kNN family's one block scorer: (query_id, id, _cos) rows of
+    a corpus block (int64 ``cids``, float64 vectors ``m``, norms
+    ``cn``) against a query block (``qids``, ``qm``, ``qn``).
+
+    Scoring is vectorized across pairs while each pair keeps the
+    array-order accumulation (`_ordered_fold_dots`), so every _cos
+    double is bit-identical to the `dot(q, v) / (‖q‖·‖v‖)` expression.
+    Only rows that tie-or-beat their query's block-local k-th best
+    leave (`_topk_ties_mask`) — a superset of every query's global
+    top-k, so `_cosine_top_k` over the union returns exactly the rows
+    the all-pairs plan would. ``exclude_self`` drops id == query_id
+    pairs BEFORE the cut: filtering after a k+1 rank is wrong when an
+    exact-duplicate vector ties the self pair at cos = 1.0."""
+    import numpy as np
+    import pandas as pd
+
+    if not len(cids) or not len(qids):
+        return pd.DataFrame({query_id_col: [], id_col: [], "_cos": []})
+    outs = []
+    # Row-chunk so the (rows × queries) score block stays
+    # cache-resident whatever the block size.
+    step = max(1, min(len(cids), 4_194_304 // len(qids)))
+    for lo in range(0, len(cids), step):
+        cc = cids[lo : lo + step]
+        cos = _ordered_fold_dots(m[lo : lo + step], qm) / np.multiply.outer(
+            cn[lo : lo + step], qn
+        )
+        if exclude_self:
+            self_pair = cc[:, None] == qids[None, :]
+            cos[self_pair] = -np.inf
+        keep = _topk_ties_mask(cos, k, np)
+        if exclude_self:
+            keep &= ~self_pair
+        ri, qi = np.nonzero(keep)
+        outs.append(
+            pd.DataFrame(
+                {query_id_col: qids[qi], id_col: cc[ri], "_cos": cos[ri, qi]}
+            )
+        )
+    return pd.concat(outs, ignore_index=True)
+
+
+def _rank_top_k(scored, query_id_col, k, *order, rank="rank"):
+    """The kNN family's one per-query top-k: ``row_number`` over
+    ``order`` within each query, rows ranked ≤ k kept. The window is
+    query-partitioned (WindowGroupLimit prunes before the exchange),
+    never a global sort."""
+    w = Window.partitionBy(query_id_col).orderBy(*order)
+    return scored.withColumn(rank, F.row_number().over(w)).where(
+        F.col(rank) <= k
+    )
+
+
+def _cosine_top_k(scored, query_id_col, id_col, k):
+    """(query_id, id, cosine_sim, rank) from (query_id, id, _cos)
+    rows: rank 1..k on (desc cos, asc id), cosine rounded to 4."""
+    return _rank_top_k(
+        scored, query_id_col, k, F.desc("_cos"), F.asc(id_col)
+    ).select(
+        query_id_col, id_col, F.round("_cos", 4).alias("cosine_sim"), "rank"
+    )
+
+
 _INTEGRAL_ID_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
@@ -124,11 +190,12 @@ def knn_cosine_bruteforce(
     task-broadcast (the identical memory class as the old
     `F.broadcast(q)` plan, now guarded loudly by ``max_query_rows``
     instead of an 8 GB broadcast cap); the corpus crosses the Python
-    boundary once (id + vector only). Each batch emits only the
-    per-query rows that tie-or-beat its k-th best (ties kept), so the
-    final (desc cos, asc id) window ranks a candidates-superset and
-    returns exactly the rows the all-pairs plan would — pinned by
-    tests against the recorded oracle outputs.
+    boundary once (id + vector only). Each batch is scored by
+    `_topk_frame` (the block scorer the IVF cell kernel shares), which
+    emits only the per-query rows that tie-or-beat its k-th best (ties
+    kept), so the final (desc cos, asc id) window ranks a
+    candidates-superset and returns exactly the rows the all-pairs
+    plan would — pinned by tests against the recorded oracle outputs.
 
     Scale contract unchanged: one corpus scan, nothing corpus-sized
     on the driver; this remains the EXACT baseline (cost O(N·Q·d) by
@@ -137,11 +204,14 @@ def knn_cosine_bruteforce(
     Output: (query_id, vec_id, cosine_sim, rank) with rank 1..k,
     deterministic tie-break on vec_id.
 
-    NOTE: constructing this DataFrame is EAGER — it runs a budget
-    aggregate and collects the query set for the task broadcast
-    (r12 kernel; guarded by the rows×dim ``max_query_rows`` budget).
-    Ids must be integral types (loud TypeError otherwise — the
-    kernel holds them as int64).
+    NOTE: constructing this DataFrame is EAGER — it runs three Spark
+    jobs: the 1-row budget aggregate (two jobs under adaptive query
+    execution, its partial-aggregate shuffle stage and the final
+    stage) and the collect of the query set for the task broadcast.
+    The budget is checked before the collect: at most
+    ``max_query_rows`` × 64 rows×dim cells and at most
+    ``max_query_rows`` × 8 rows. Ids must be integral types (loud
+    TypeError otherwise — the kernel holds them as int64).
     """
     import numpy as np
 
@@ -152,26 +222,33 @@ def knn_cosine_bruteforce(
         (query_id_col, dict(queries.dtypes)[query_id_col]),
         (id_col, dict(corpus.dtypes)[id_col]),
     )
-    # NOTE (laziness contract): building this DataFrame runs Spark
-    # jobs NOW — a budget aggregate and then the query-set collect the
-    # broadcast kernel needs. The budget is rows×dim CELLS, not rows
-    # (ADVICE r12): driver collect + per-executor broadcast scale with
-    # both, and 1M rows at 768-dim is ~6 GB pickled — the row-only
-    # guard waved that through. The default envelope keeps the old
-    # 1M-rows-at-64-dim operating point; checked BEFORE the collect so
-    # the guard protects the driver, not just the executors.
+    # The budget is rows×dim CELLS (ADVICE r12): driver collect +
+    # per-executor broadcast scale with both, and 1M rows at 768-dim
+    # is ~6 GB pickled. The default envelope keeps the old
+    # 1M-rows-at-64-dim operating point. The row ceiling bounds the
+    # per-Row driver/pickle cost, which does not shrink with dim.
+    # Both are checked BEFORE the collect so the guard protects the
+    # driver, not just the executors.
     n_q, q_dim = queries.agg(
         F.count(F.lit(1)), F.max(F.size(vec_col))
     ).first()
+    alternative = (
+        "Use the IVF kNN-join (knn_cosine_ivf) for corpus-scale query sets."
+    )
     if n_q * (q_dim or 1) > max_query_rows * 64:
         raise ValueError(
             f"knn_cosine_bruteforce: query set is {n_q} rows × {q_dim} "
             f"dims = {n_q * (q_dim or 1)} cells > the "
             f"{max_query_rows * 64}-cell budget (max_query_rows="
             f"{max_query_rows} × 64); the driver collect and broadcast "
-            "scoring kernel would OOM. Use the IVF kNN-join "
-            "(knn_cosine_ivf(distributed_queries=True)) for "
-            "corpus-scale query sets."
+            f"scoring kernel would OOM. {alternative}"
+        )
+    if n_q > max_query_rows * 8:
+        raise ValueError(
+            f"knn_cosine_bruteforce: query set has {n_q} rows > the "
+            f"{max_query_rows * 8}-row ceiling (max_query_rows="
+            f"{max_query_rows} × 8); the driver collects one Row per "
+            f"query whatever the dim. {alternative}"
         )
     q_rows = queries.select(query_id_col, vec_col).collect()
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
@@ -190,36 +267,17 @@ def knn_cosine_bruteforce(
     )
 
     def score(batches):
-        import pandas as pd
-
         ids_q, qm, qn = b_q.value
-        n_q = len(ids_q)
         for pdf in batches:
-            if n_q == 0 or not len(pdf):
+            if not len(pdf):
                 continue
-            cids = pdf[id_col].to_numpy(dtype=np.int64)
             m = np.array(list(pdf[vec_col]), dtype=np.float64)
-            # Row-chunk so the (rows × queries) accumulator stays
-            # cache-resident regardless of the Arrow batch size.
-            step = max(1, min(len(cids), 4_194_304 // max(n_q, 1)))
-            for lo in range(0, len(cids), step):
-                mm, cc = m[lo : lo + step], cids[lo : lo + step]
-                dots = _ordered_fold_dots(mm, qm)
-                cn = np.sqrt(_ordered_fold_sq_norms(mm))
-                cos = dots / np.multiply.outer(cn, qn)
-                if exclude_self:
-                    cos[cc[:, None] == ids_q[None, :]] = -np.inf
-                keep = _topk_ties_mask(cos, k, np)
-                if exclude_self:
-                    keep &= cc[:, None] != ids_q[None, :]
-                ri, qi = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        query_id_col: ids_q[qi],
-                        id_col: cc[ri],
-                        "_cos": cos[ri, qi],
-                    }
-                )
+            yield _topk_frame(
+                pdf[id_col].to_numpy(dtype=np.int64),
+                m,
+                np.sqrt(_ordered_fold_sq_norms(m)),
+                ids_q, qm, qn, k, query_id_col, id_col, exclude_self,
+            )
 
     # The per-pair scoring is CPU-bound and runs at the INPUT
     # partitioning (no shuffle before it) — fan a narrow corpus out.
@@ -228,19 +286,7 @@ def knn_cosine_bruteforce(
         .select(id_col, vec_col)
         .mapInPandas(score, out_schema)
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("_cos"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.round("_cos", 4).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return _cosine_top_k(scored, query_id_col, id_col, k)
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -356,12 +402,7 @@ def knn_cosine_lsh(
         (dot(F.col("_qvec"), F.col(vec_col))
          / (F.col("_qn") * F.col("_cn"))).alias("_cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_cos"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round("_cos", 4).alias("cosine_sim"), "rank")
-    )
+    return _cosine_top_k(scored, query_id_col, id_col, k)
 
 
 def cosine_pairs_grid(
@@ -570,25 +611,23 @@ def _assign_probe_cells(
     """(id, cell, <vec_out>, <norm_out>): the ``n_probe`` nearest
     centroid cells per row, computed DISTRIBUTEDLY (blocked GEMM
     against the broadcast centroid matrix, n_probe rows emitted per
-    input row) — the corpus-scale twin of knn_cosine_ivf's
-    driver-side probe-list build, and with ``n_probe=1`` the CARRYING
-    cell assignment for the corpus side (the vector rides along, so
-    no join back to the source table is ever needed). Tie-break:
-    (-sim, cell index) on sims QUANTIZED to 12 decimals — without the
-    rounding, a mathematically exact tie can round differently under
-    the batch GEMM here vs the driver path's matrix-vector product
-    (different BLAS accumulation order) and the two paths would probe
-    different cells; 1e-12 is far below any meaningful cosine
-    difference (hypothesis found the divergence on an exact-tie
-    grid). ``norm_out`` is computed Spark-side with the same l2_norm
-    expression as the driver path (bit-identical summation), not in
-    numpy."""
+    input row) — the IVF probe list for the query side, and with
+    ``n_probe=1`` the CARRYING cell assignment for the corpus side
+    (the vector rides along, so no join back to the source table is
+    ever needed). Tie-break: (-sim, cell index) on sims QUANTIZED to
+    12 decimals — without the rounding, a mathematically exact tie
+    can round differently under different BLAS accumulation orders
+    (batch GEMM vs matrix-vector product) and a query would probe a
+    different cell than its own vector was assigned to; 1e-12 is far
+    below any meaningful cosine difference (hypothesis found the
+    divergence on an exact-tie grid). ``norm_out`` is computed
+    Spark-side with the `l2_norm` expression (array-order summation),
+    not in numpy."""
     import numpy as np
 
     spark = queries.sparkSession
     c = np.asarray(centroids, dtype=np.float64)
-    # Clamp like the collected path does implicitly (argsort over
-    # n_cells columns yields at most n_cells probes): n_probe >
+    # Probing more cells than exist is probing them all: n_probe >
     # n_cells would repeat ids n_probe times against an
     # order-matrix of only n_cells columns and die inside pandas
     # with an opaque length mismatch (ADVICE r10).
@@ -641,15 +680,13 @@ def _score_cells_cogroup(
     zip_with/aggregate fold per candidate pair: the cogroup IS the
     equi-join on cell (both sides shuffle by cell exactly as before),
     but each side's vectors cross the Python boundary ONCE PER CELL
-    instead of once per candidate pair through the joined rows, and
-    scoring is vectorized across pairs while each pair keeps the
-    ARRAY-ORDER accumulation (`_ordered_fold_dots`) — every _cos
-    double is bit-identical to the old `dot(_qvec, vec)/(_qn*_cn)`
-    expression (norms are the carried Spark-side `l2_norm` columns,
-    untouched). Only per-(cell, query) rows that tie-or-beat the
-    cell-local k-th best leave the kernel (ties kept), a superset of
-    every query's global top-k, so the caller's (desc _cos, asc id)
-    window returns exactly the rows the join plan would.
+    instead of once per candidate pair through the joined rows. Each
+    cell is scored by `_topk_frame` (the block scorer
+    `knn_cosine_bruteforce` shares) with the carried Spark-side
+    `l2_norm` columns as norms, so every _cos double is bit-identical
+    to the `dot(_qvec, vec)/(_qn*_cn)` expression, and only
+    per-(cell, query) rows that tie-or-beat the cell-local k-th best
+    leave the kernel.
 
     Emits (query_id, id, _cos)."""
     import numpy as np
@@ -666,38 +703,15 @@ def _score_cells_cogroup(
     )
 
     def score(left, right):
-        import pandas as pd
-
-        if not len(left) or not len(right):
-            return pd.DataFrame(
-                {query_id_col: [], id_col: [], "_cos": []}
-            )
-        cids = left[id_col].to_numpy(dtype=np.int64)
-        m = np.array(list(left[vec_col]), dtype=np.float64)
-        cn = left["_cn"].to_numpy(dtype=np.float64)
-        qids = right[query_id_col].to_numpy(dtype=np.int64)
-        qm = np.array(list(right["_qvec"]), dtype=np.float64)
-        qn = right["_qn"].to_numpy(dtype=np.float64)
-        outs = []
-        # Row-chunk so the (rows × queries) score block stays
-        # cache-resident whatever the cell size.
-        step = max(1, min(len(cids), 4_194_304 // max(len(qids), 1)))
-        for lo in range(0, len(cids), step):
-            cos = _ordered_fold_dots(
-                m[lo : lo + step], qm
-            ) / np.multiply.outer(cn[lo : lo + step], qn)
-            keep = _topk_ties_mask(cos, k, np)
-            ri, qi = np.nonzero(keep)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        query_id_col: qids[qi],
-                        id_col: cids[lo : lo + step][ri],
-                        "_cos": cos[ri, qi],
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
+        return _topk_frame(
+            left[id_col].to_numpy(dtype=np.int64),
+            np.array(list(left[vec_col]), dtype=np.float64),
+            left["_cn"].to_numpy(dtype=np.float64),
+            right[query_id_col].to_numpy(dtype=np.int64),
+            np.array(list(right["_qvec"]), dtype=np.float64),
+            right["_qn"].to_numpy(dtype=np.float64),
+            k, query_id_col, id_col,
+        )
 
     return (
         corpus_cells.select("cell", id_col, vec_col, "_cn")
@@ -772,160 +786,65 @@ def knn_cosine_ivf(
 
     Scale shape: the corpus is partitioned by cell ONCE (inverted
     file); each query batch touches n_probe/n_cells of the data — the
-    classic recall/cost dial. Candidate generation is an equi-join on
-    cell (one shuffle); re-ranking reuses the exact cosine kernel.
+    classic recall/cost dial. After the quantizer fit, the corpus gets
+    its carrying cell assignment (vector and norm ride along) and the
+    search IS :func:`knn_join_ivf_index` over those rows: executor-side
+    probe assignment, one cogroup-by-cell scoring kernel, per-query
+    top-k. Nothing query-sized ever touches the driver, so the query
+    set may be as large as the corpus (the kNN-JOIN regime, e.g. every
+    document finding its neighbors for semantic dedup).
 
     Operating point: ``n_cells="auto"`` sizes the quantizer as
     ``max(16, round(sqrt(N)))`` — the published FAISS IVF guidance
     (nlist ≈ √N keeps cell size ≈ √N, balancing quantizer cost
-    against scan cost) — and ``n_probe="auto"`` probes a quarter of
-    the cells. A FIXED nlist is wrong in both directions: r9 ran
-    nlist=16 on a 2000-vector corpus (125/cell — too coarse,
+    against scan cost). A FIXED nlist is wrong in both directions: r9
+    ran nlist=16 on a 2000-vector corpus (125/cell — too coarse,
     recall@10 0.716) while nlist=64 on the 500-vector corpus drops a
     query below the 7/10 floor (neighbors scatter across >n_probe
-    tiny cells). Measured at the √N point (sf0.1 50-query panel):
-    recall@10 0.926, per-query floor ≥8 at every test scale. Auto
-    mode costs one ``corpus.count()`` (parquet metadata-cheap); at
-    trillion-row scale pass explicit nlist/nprobe and dial
-    nprobe/nlist well below 1/4.
+    tiny cells). ``n_probe="auto"`` probes a quarter of the cells,
+    or half of them with ``distributed_queries=True`` — the only
+    effect that flag has now. The quarter-probe point is for a query
+    panel (sf0.1 50-query panel: recall@10 0.926, per-query floor ≥8
+    at every test scale); the half-probe point is for queries = corpus
+    (corpus-wide mean recall@10 0.677 → 0.870 at sf0.1, SCALING.md
+    §ANN). At production scale candidate scoring is the cost and
+    half-probe is 2× a quarter-probe scan — the curve is monotone, so
+    dial nprobe/nlist explicitly (well below 1/4 at trillion-row
+    scale). ``n_probe`` is clamped to ``n_cells`` (probing every cell
+    is exact kNN). ``max_query_rows`` no longer has any effect: no
+    query row is collected.
 
-    Scale contract, two query regimes:
-
-    * default (``distributed_queries=False``): the QUERY set is
-      driver-collected to build the per-query probe list (n_probe
-      cell ids each), so it must fit on the driver — enforced by a
-      loud ``max_query_rows`` guard, exactly like
-      :func:`cosine_pairs_blocked`'s corpus guard. The probe list and
-      query vectors broadcast into the candidate join — right when
-      queries ≪ corpus.
-    * ``distributed_queries=True``: probe cells are assigned
-      executor-side (:func:`_assign_probe_cells` — blocked GEMM
-      against the broadcast centroids, n_probe rows per query with
-      the query vector riding along), candidate generation is ONE
-      shuffle equi-join on cell, and nothing query-sized ever touches
-      the driver — the kNN-JOIN regime (queries AT corpus scale,
-      e.g. every document finding its neighbors for semantic dedup).
-      Identical results to the default path (same centroids, same
-      (-sim, index) probe tie-break on 1e-12-quantized sims so a
-      BLAS-path rounding difference cannot flip an exact tie,
-      bit-identical scoring) — pinned by
-      test_ivf_distributed_equals_collected.
+    Construction runs Spark jobs: the k-means fit
+    (:func:`kmeans_centroids`: a seed collect plus three jobs per
+    Lloyd iteration under adaptive execution — 10 at the default
+    ``iters=3``) and, with ``n_cells="auto"``, the corpus count (two
+    more: 12 at the defaults). Output: (query_id, vec_id, cosine_sim,
+    rank) with rank 1..k, deterministic tie-break on vec_id.
     """
     import math
 
-    import numpy as np
-
-    if not distributed_queries:
-        n_q = queries.count()
-        if n_q > max_query_rows:
-            raise ValueError(
-                f"knn_cosine_ivf: query set has {n_q} rows > max_query_rows="
-                f"{max_query_rows}; the driver-side probe-list build would "
-                "OOM. Pass distributed_queries=True (executor-side probe "
-                "assignment, one shuffle join on cell) for corpus-scale "
-                "query sets."
-            )
     if n_cells == "auto":
         n_cells = max(16, round(math.sqrt(corpus.count())))
     if n_probe == "auto":
-        # Regime-split operating point (VERDICT r10 #3, measured
-        # curve in SCALING.md §ANN): the collected regime keeps the
-        # published FAISS quarter-probe (panel recall@10 0.926); the
-        # kNN-JOIN regime (queries = corpus, semantic-dedup) probes
-        # HALF the cells — corpus-wide mean recall@10 0.677 → 0.870
-        # at sf0.1 with wall time flat at test scale (probe/k-means
-        # overhead dominates candidate scoring there). At production
-        # scale candidate scoring is the cost and half-probe is 2× a
-        # quarter-probe scan — the curve is monotone and callers dial
-        # n_probe explicitly when recall 0.68 is enough.
         n_probe = max(
             4, round(n_cells / (2 if distributed_queries else 4))
         )
-    # Probing more cells than exist is the same as probing them all;
-    # without the clamp the distributed path crashed in pandas while
-    # the collected path degraded gracefully (ADVICE r10) — e.g.
-    # explicit n_cells=2 with auto n_probe (=4).
     n_probe = min(n_probe, n_cells)
 
     centroids = kmeans_centroids(
         corpus, dim, n_cells=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
     )
-    c = np.asarray(centroids, dtype=np.float64)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1), 1e-12)[:, None]
-
     # Carrying assignment (r10): the vector and its norm ride along
-    # with the cell, so the corpus is never joined back to itself —
-    # the previous assign-then-join-on-id shape cost a corpus-sized
-    # shuffle at scale before the cell join even started. Cell
-    # tie-break matches the probe side: (-sim, index) on
+    # with the cell, so the corpus is never joined back to itself.
+    # Cell tie-break matches the probe side: (-sim, index) on
     # 1e-12-quantized sims.
     corpus_cells = _assign_probe_cells(
         corpus, id_col, vec_col, centroids, 1,
         vec_out=vec_col, norm_out="_cn",
     )
-
-    if distributed_queries:
-        # Executor-side probe assignment; a corpus vector lives in
-        # exactly ONE cell and each query's probe cells are distinct,
-        # so (query, id) candidate pairs are unique by construction —
-        # no dropDuplicates (and no extra shuffle). Candidate join +
-        # scoring run as one cogroup-by-cell Arrow kernel (r12,
-        # `_score_cells_cogroup` — bit-identical _cos, vectors cross
-        # the Python boundary per cell, not per candidate pair).
-        probe = _assign_probe_cells(
-            queries, query_id_col, vec_col, centroids, n_probe
-        )
-        scored = _score_cells_cogroup(
-            corpus_cells, probe, id_col, vec_col, query_id_col, k
-        )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.desc("_cos"), F.asc(id_col)
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                query_id_col,
-                id_col,
-                F.round("_cos", 4).alias("cosine_sim"),
-                "rank",
-            )
-        )
-    else:
-        # Driver-side probe list per query (query set is the small
-        # side — bounded by the max_query_rows guard above).
-        q_rows = queries.select(query_id_col, vec_col).collect()
-        probes = []
-        for r in q_rows:
-            v = np.asarray(r[1], dtype=np.float64)
-            v = v / max(np.linalg.norm(v), 1e-12)
-            order = np.argsort(-np.round(cn @ v, 12), kind="stable")[:n_probe]
-            probes.extend((int(r[0]), int(cell)) for cell in order)
-        spark = corpus.sparkSession
-        probe_df = spark.createDataFrame(
-            probes, f"{query_id_col} long, cell int"
-        )
-        q_vec = queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("_qvec"),
-            l2_norm(F.col(vec_col)).alias("_qn"),
-        )
-        cand = (
-            corpus_cells.join(F.broadcast(probe_df), "cell")
-            .join(F.broadcast(q_vec), query_id_col)
-            .dropDuplicates([query_id_col, id_col])
-        )
-    scored = cand.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        (dot(F.col("_qvec"), F.col(vec_col))
-         / (F.col("_qn") * F.col("_cn"))).alias("_cos"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_cos"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round("_cos", 4).alias("cosine_sim"), "rank")
+    return knn_join_ivf_index(
+        corpus_cells, queries, centroids, k, n_probe,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )
 
 
@@ -939,33 +858,30 @@ def knn_join_ivf_index(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """kNN-join against a PERSISTED IVF index — the production shape
-    where the quantizer is fitted once and the corpus is assigned
-    once (`streaming/ingest.ivf_index_stream` maintains the index
-    incrementally; `read_ivf_index_merged` yields these rows):
-    ``index`` is (id, cell, vector, _cn) partitioned by cell on
-    storage, so every query batch pays ONLY executor-side probe
-    assignment + one equi-join on cell + exact cosine rerank — no
-    k-means fit, no corpus assignment, per batch.
+    """kNN-join against an IVF index — the search half of
+    :func:`knn_cosine_ivf`, which calls it on a freshly assigned
+    corpus, and the production shape where the quantizer is fitted
+    once and the corpus is assigned once (`streaming/ingest.
+    ivf_index_stream` maintains the index incrementally;
+    `read_ivf_index_merged` yields these rows): ``index`` is (id,
+    cell, vector, _cn) partitioned by cell on storage, so every query
+    batch pays ONLY executor-side probe assignment
+    (`_assign_probe_cells`, quantized (-sim, index) tie-break) + one
+    cogroup-by-cell exact cosine kernel (`_score_cells_cogroup`) + the
+    per-query (desc cos, asc id) top-k — no k-means fit, no corpus
+    assignment, per batch. A corpus vector lives in exactly ONE cell
+    and a query's probe cells are distinct, so (query, id) candidate
+    pairs are unique by construction.
 
-    Bit-identical to `knn_cosine_ivf(distributed_queries=True)` over
-    the same corpus and centroids (same `_assign_probe_cells`
-    quantized tie-break, same Spark-side l2_norm, same scoring fold —
-    both paths share `_score_cells_cogroup` since r12 — and
-    (desc cos, asc id) window) — pinned by test_stateful_streaming's
-    streaming-IVF twin."""
+    Construction runs no Spark job. Output: (query_id, vec_id,
+    cosine_sim, rank)."""
     probe = _assign_probe_cells(
         queries, query_id_col, vec_col, centroids, n_probe
     )
     scored = _score_cells_cogroup(
         index, probe, id_col, vec_col, query_id_col, k
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_cos"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round("_cos", 4).alias("cosine_sim"), "rank")
-    )
+    return _cosine_top_k(scored, query_id_col, id_col, k)
 
 
 def tf_cosine_pairs(
@@ -1219,15 +1135,9 @@ def pq_adc_scores(
     adds, no float vector math per row, no shuffle. This is the scan
     shape that makes PQ search bandwidth-bound instead of
     compute-bound at billion-vector scale."""
-    sub = len(codebooks[0][0])
-    lut = [
-        [
-            _fold_sq_dist(query[s * sub : (s + 1) * sub], c)
-            for c in cb
-        ]
-        for s, cb in enumerate(codebooks)
-    ]
-    lut_lit = F.lit([[float(v) for v in row] for row in lut])
+    lut_lit = F.lit(
+        [[float(v) for v in row] for row in _adc_table(query, codebooks)]
+    )
     est = F.aggregate(
         F.zip_with(
             lut_lit,
@@ -1252,6 +1162,25 @@ def _fold_sq_dist(a: list[float], b: list[float]) -> float:
     for x, y in zip(a, b):
         acc += (x - y) * (x - y)
     return acc
+
+
+def _probe_order(q, centroids, nprobe: int) -> list[int]:
+    """The ``nprobe`` coarse cells nearest ``q``: `_fold_sq_dist`
+    distances, (distance, index) tie-break — the probe order every
+    IVF-PQ path uses, single-query literal or per-query executor."""
+    cd = [_fold_sq_dist(q, c) for c in centroids]
+    return sorted(range(len(cd)), key=lambda i: (cd[i], i))[:nprobe]
+
+
+def _adc_table(q, codebooks) -> list[list[float]]:
+    """The m×k ADC lookup table ‖q_s − codebook_s[j]‖², each entry the
+    `_fold_sq_dist` left fold (pass the residual q − cc for
+    residual-mode codes)."""
+    sub = len(codebooks[0][0])
+    return [
+        [_fold_sq_dist(q[s * sub : (s + 1) * sub], cw) for cw in cb]
+        for s, cb in enumerate(codebooks)
+    ]
 
 
 def ivf_pq_search(
@@ -1285,10 +1214,7 @@ def ivf_pq_search(
     """
     from .kmeans import assign
 
-    cd = [
-        _fold_sq_dist(query, c) for c in coarse_centroids
-    ]
-    probed = sorted(range(len(cd)), key=lambda i: (cd[i], i))[:nprobe]
+    probed = _probe_order(query, coarse_centroids, nprobe)
 
     # single pass: cells, probe filter, codes, and ADC score are all
     # projections/filters over ONE scan — no self-joins
@@ -1421,7 +1347,6 @@ def pq_knn_join(
     """
     import numpy as np
 
-    sub = len(codebooks[0][0])
     m = len(codebooks)
     spark = queries.sparkSession
 
@@ -1448,9 +1373,7 @@ def pq_knn_join(
             vecs: list[list[float]] = []
             for qid, vec in zip(pdf[query_id_col], pdf[vec_col]):
                 v = [float(x) for x in vec]
-                cd = [_fold_sq_dist(v, c) for c in cc]
-                order = sorted(range(len(cd)), key=lambda i: (cd[i], i))
-                for cell in order[:nprobe]:
+                for cell in _probe_order(v, cc, nprobe):
                     qids.append(int(qid))
                     cells.append(cell)
                     vecs.append(v)
@@ -1505,13 +1428,7 @@ def pq_knn_join(
                     # mirror ivf_pq_search_residual: center the query
                     # on the candidate's coarse centroid FIRST
                     v = [q - c for q, c in zip(v, cc[cell])]
-                got = luts[key] = [
-                    [
-                        _fold_sq_dist(v[s * sub : (s + 1) * sub], cw)
-                        for cw in cb
-                    ]
-                    for s, cb in enumerate(cbs)
-                ]
+                got = luts[key] = _adc_table(v, cbs)
             return got
 
         for pdf in batches:
@@ -1545,15 +1462,11 @@ def pq_knn_join(
     scored = cand.select(
         query_id_col, id_col, "cell", "codes", "_qvec"
     ).mapInPandas(score, score_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("est_dist"), F.asc(id_col)
-    )
+    by_est = (F.asc("est_dist"), F.asc(id_col))
     if rerank is None:
-        return (
-            scored.withColumn("_rank", F.row_number().over(w))
-            .where(F.col("_rank") <= k)
-            .select(query_id_col, id_col, "cell", "est_dist")
-        )
+        return _rank_top_k(
+            scored, query_id_col, k, *by_est, rank="_rank"
+        ).select(query_id_col, id_col, "cell", "est_dist")
     if rerank < k:
         raise ValueError(f"rerank ({rerank}) must be >= k ({k})")
     vec_src = corpus_vectors if corpus_vectors is not None else corpus
@@ -1561,11 +1474,9 @@ def pq_knn_join(
         raise ValueError(
             "rerank needs the raw vectors: pass corpus or corpus_vectors"
         )
-    topc = (
-        scored.withColumn("_rank", F.row_number().over(w))
-        .where(F.col("_rank") <= rerank)
-        .select(query_id_col, id_col, "cell", "est_dist")
-    )
+    topc = _rank_top_k(
+        scored, query_id_col, rerank, *by_est, rank="_rank"
+    ).select(query_id_col, id_col, "cell", "est_dist")
     sq_dist = F.aggregate(
         F.zip_with(
             F.col("_qv"),
@@ -1586,14 +1497,10 @@ def pq_knn_join(
         )
         .withColumn("exact_dist", sq_dist)
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.asc("exact_dist"), F.asc(id_col)
-    )
-    return (
-        exact.withColumn("_rank", F.row_number().over(w2))
-        .where(F.col("_rank") <= k)
-        .select(query_id_col, id_col, "cell", "est_dist", "exact_dist")
-    )
+    return _rank_top_k(
+        exact, query_id_col, k,
+        F.asc("exact_dist"), F.asc(id_col), rank="_rank",
+    ).select(query_id_col, id_col, "cell", "est_dist", "exact_dist")
 
 
 def pq_encode_residual(
@@ -1671,26 +1578,15 @@ def ivf_pq_search_residual(
     Same one-scan → filter → project → TakeOrderedAndProject shape as
     the raw-vector variant; at scale the encode output is persisted
     partitioned by cell and only probed partitions are read."""
-    sub = len(codebooks[0][0])
-    cd = [_fold_sq_dist(query, c) for c in coarse_centroids]
-    probed = sorted(range(len(cd)), key=lambda i: (cd[i], i))[:nprobe]
-    probed_set = set(probed)
-
-    lut3 = []
-    for ci, cc in enumerate(coarse_centroids):
-        if ci in probed_set:
-            qr = [q - c for q, c in zip(query, cc)]
-            lut3.append(
-                [
-                    [
-                        _fold_sq_dist(qr[s * sub : (s + 1) * sub], cw)
-                        for cw in cb
-                    ]
-                    for s, cb in enumerate(codebooks)
-                ]
-            )
-        else:  # never indexed: the cell filter runs first
-            lut3.append([[0.0] * len(cb) for cb in codebooks])
+    probed = _probe_order(query, coarse_centroids, nprobe)
+    # Unprobed cells get a zero table: never indexed, the cell filter
+    # runs first.
+    lut3 = [
+        _adc_table([q - c for q, c in zip(query, cc)], codebooks)
+        if ci in probed
+        else [[0.0] * len(cb) for cb in codebooks]
+        for ci, cc in enumerate(coarse_centroids)
+    ]
     lut3_lit = F.lit(
         [
             [[float(v) for v in row] for row in cell_lut]

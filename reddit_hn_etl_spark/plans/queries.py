@@ -22167,12 +22167,8 @@ ORACLES["source_quality_thresholds"] = ORACLES[
 
 
 # ---------------------------------------------------------------------------
-# r9 registry-freeze lift: the ten codec/media/LRS queries prepared in
-# plans/pending_queries.py across r6-r8 (VERDICT r8 #1 — the never-
-# driver-checked backlog fell to 44 <= 50, the builder's own freeze
-# threshold). Bodies are verbatim from the pending module, where each
-# was differentially suite-tested against its oracle since it landed;
-# promotion is a registration event, not a semantic change.
+# r9 registry-freeze lift: ten codec/media/LRS queries prepared ahead
+# of registration across r6-r8 and promoted verbatim (VERDICT r8 #1).
 # ---------------------------------------------------------------------------
 
 @_q(
@@ -23345,10 +23341,9 @@ def embedding_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF kNN-JOIN (r10): EVERY vector finds its approximate top-10
     — the semantic-dedup/self-similarity regime where the query set
     IS the corpus, exercising `knn_cosine_ivf(distributed_queries=
-    True)`: probe cells assigned executor-side, candidate generation
-    one shuffle join on cell, nothing query-sized on the driver (the
-    collected path's max_query_rows guard names this as the
-    corpus-scale alternative). The differential floor is the
+    True)` (the half-probe auto point): probe cells assigned
+    executor-side, candidate generation one cogroup on cell, nothing
+    query-sized on the driver. The differential floor is the
     STRUCTURAL guarantee only (ADVICE r10): a vector's own cell is
     always its first probe, so the approximate top-10 always recovers
     the vector itself — hits >= 1 holds for every query regardless of

@@ -33,9 +33,8 @@ ALLOWED = {
     ("operators/graph.py", "connected_components"): "1-row convergence probe (sum of label changes)",
     ("operators/graph.py", "connected_components_star._probe"): "1-row convergence probe",
     ("operators/similarity.py", "cosine_pairs_blocked"): "guarded: loud max_rows check precedes the collect",
-    ("operators/similarity.py", "knn_cosine_bruteforce"): "guarded: loud rows×dim budget (max_query_rows×64 cells, r13) checked BEFORE the collect (r12 Arrow scoring kernel; same memory class as the broadcast relation it replaced)",
+    ("operators/similarity.py", "knn_cosine_bruteforce"): "guarded: loud rows×dim budget (max_query_rows×64 cells, r13) and row ceiling (max_query_rows×8) checked BEFORE the collect (r12 Arrow scoring kernel; same memory class as the broadcast relation it replaced)",
     ("operators/similarity.py", "kmeans_centroids"): "n_cells seed rows + n_cells centroid rows per iter",
-    ("operators/similarity.py", "knn_cosine_ivf"): "guarded: loud max_query_rows check precedes the collect",
     ("operators/checks.py", "assert_unique_key"): "limit(1) probe",
     ("operators/checks.py", "assert_not_null"): "limit(1) probe",
     ("operators/checks.py", "assert_non_empty"): "limit(1) probe",

@@ -263,24 +263,6 @@ def test_blocked_kernel_size_guard(spark, sf_dir):
         similarity.cosine_pairs_blocked(emb, threshold=0.35, max_rows=5)
 
 
-def test_ivf_query_side_size_guard(spark, sf_dir):
-    """knn_cosine_ivf driver-collects the QUERY set for probe-list
-    construction; the guard must fail loudly (not OOM silently) when
-    the query set exceeds max_query_rows — same contract as the
-    blocked-kernel corpus guard above."""
-    import pytest
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from reddit_hn_etl_spark.sources.tables import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-    with pytest.raises(ValueError, match="max_query_rows"):
-        similarity.knn_cosine_ivf(
-            emb, queries, dim=16, k=3, max_query_rows=2
-        )
-
-
 def test_ivf_knn_recall_against_bruteforce(spark, sf_dir):
     from pyspark.sql import functions as F  # noqa: F811
 
@@ -305,11 +287,9 @@ def test_ivf_knn_recall_against_bruteforce(spark, sf_dir):
 
 
 def test_ivf_distributed_equals_collected(spark, sf_dir):
-    """distributed_queries=True (executor-side probe assignment, one
-    shuffle join on cell) must return EXACTLY the collected path's
-    rows: same centroids, same (-sim, index) probe tie-break (stable
-    argsort on -sims both sides), Spark-side l2_norm for the query
-    norm so the cosine is bit-identical."""
+    """``distributed_queries`` only picks the auto n_probe, so with
+    explicit n_cells/n_probe both calls must return EXACTLY the same
+    rows."""
     from pyspark.sql import functions as F  # noqa: F811
 
     from reddit_hn_etl_spark.sources.tables import read_table
@@ -355,11 +335,12 @@ def test_ivf_distributed_handles_corpus_scale_queries(spark, sf_dir):
 
 
 def test_ivf_nprobe_clamped_to_ncells(spark, sf_dir):
-    """ADVICE r10: n_probe > n_cells crashed the distributed path
-    with an opaque pandas length mismatch (argsort yields only
-    n_cells columns) while the collected path degraded gracefully.
-    Reachable with explicit n_cells=2 and auto n_probe (=4). Both
-    paths must clamp and agree — probing every cell is exact kNN."""
+    """ADVICE r10: n_probe > n_cells crashed the executor-side probe
+    assignment with an opaque pandas length mismatch (argsort yields
+    only n_cells columns). Reachable with explicit n_cells=2 and auto
+    n_probe (4 at the quarter point, also at the half point): both
+    auto points must clamp and equal the brute-force answer — probing
+    every cell is exact kNN."""
     from pyspark.sql import functions as F  # noqa: F811
 
     from reddit_hn_etl_spark.sources.tables import read_table
@@ -670,6 +651,55 @@ def test_pair_kernel_construction_jobs(spark):
         "jaccard_pairs_cross": 2,
         "containment_pairs": 1,
         "tf_cosine_pairs": 2,
+    }
+
+
+def test_knn_construction_jobs(spark, sf_dir):
+    """Spark jobs each kNN operator runs while it builds its plan, as
+    their docstrings declare: brute force its budget aggregate (two
+    jobs under adaptive execution) and query collect; the IVF k-means
+    fit (10 at iters=3) plus the auto-n_cells corpus count (2); the
+    index joins none."""
+    from reddit_hn_etl_spark.sources.tables import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    q = emb.where(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    cb = similarity.pq_codebooks(64, 8, 8)
+    cc = [
+        [float(x) for x in r.embedding]
+        for r in emb.orderBy("vec_id").limit(4).collect()
+    ]
+    enc = similarity.pq_encode_corpus(emb, cc, cb)
+    index = emb.select(
+        "vec_id", F.lit(0).alias("cell"), "embedding",
+        similarity.l2_norm(F.col("embedding")).alias("_cn"),
+    )
+    calls = {
+        "knn_cosine_bruteforce": lambda: similarity.knn_cosine_bruteforce(emb, q, k=5),
+        "knn_cosine_ivf": lambda: similarity.knn_cosine_ivf(emb, q, dim=64, k=5),
+        "knn_cosine_ivf_explicit": lambda: similarity.knn_cosine_ivf(
+            emb, q, dim=64, k=5, n_cells=8, n_probe=4
+        ),
+        "knn_cosine_ivf_distributed": lambda: similarity.knn_cosine_ivf(
+            emb, q, dim=64, k=5, distributed_queries=True
+        ),
+        "knn_join_ivf_index": lambda: similarity.knn_join_ivf_index(
+            index, q, cc, k=5, n_probe=1
+        ),
+        "pq_knn_join": lambda: similarity.pq_knn_join(
+            None, q, cc, cb, k=5, encoded=enc
+        ),
+    }
+    got = {name: _jobs(spark, f"jobs_{name}", fn)[1] for name, fn in calls.items()}
+    assert got == {
+        "knn_cosine_bruteforce": 3,
+        "knn_cosine_ivf": 12,
+        "knn_cosine_ivf_explicit": 10,
+        "knn_cosine_ivf_distributed": 12,
+        "knn_join_ivf_index": 0,
+        "pq_knn_join": 0,
     }
 
 

@@ -209,7 +209,9 @@ def test_bruteforce_budget_is_rows_times_dim(spark):
     and broadcast scale with both), checked BEFORE the collect. 3 rows
     at 128 dims busts a 2-row budget (2×64 cells) even though a
     row-only guard at 3 rows > 2 would too — so also pin the converse:
-    1 wide row (128 dims > 64) within a 2-row budget passes."""
+    1 wide row (128 dims > 64) within a 2-row budget passes. The row
+    ceiling (8 × max_query_rows) holds whatever the dim: 17 one-dim
+    rows fit the 128-cell budget but not the 16-row ceiling."""
     wide = spark.createDataFrame(
         [(i, [float(i)] * 128) for i in range(3)],
         "vec_id long, embedding array<double>",
@@ -224,3 +226,12 @@ def test_bruteforce_budget_is_rows_times_dim(spark):
         k=1, max_query_rows=2,
     )
     assert out.count() == 1
+    narrow = spark.createDataFrame(
+        [(i, [float(i)]) for i in range(17)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="max_query_rows"):
+        similarity.knn_cosine_bruteforce(
+            narrow, narrow.selectExpr("vec_id as query_id", "embedding"),
+            k=1, max_query_rows=2,
+        )
