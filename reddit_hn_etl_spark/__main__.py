@@ -437,18 +437,10 @@ def main(argv: list[str] | None = None) -> int:
     # Persist the merged staging table (overwrite = the reconciled state).
     rec = audit.start_run("staging_publish")
     try:
-        target.write.mode("overwrite").parquet(staging_root + "_next")
-        # swap: write-new-then-promote keeps readers consistent.
-        # Pre-clean a stale _old left by a crash between the renames
-        # of a previous run, or the rename below raises (ADVICE r1).
-        import shutil
+        # write-new-then-promote keeps readers consistent
+        from .streaming.ingest import _write_swap
 
-        tmp_old = staging_root + "_old"
-        shutil.rmtree(tmp_old, ignore_errors=True)
-        if os.path.isdir(staging_root):
-            os.rename(staging_root, tmp_old)
-        os.rename(staging_root + "_next", staging_root)
-        shutil.rmtree(tmp_old, ignore_errors=True)
+        _write_swap(target, staging_root, "_next")
         n = spark.read.parquet(staging_root).count()
         audit.succeed(rec, rows_copied=n, inserted=0, updated=0)
     except Exception as exc:  # noqa: BLE001

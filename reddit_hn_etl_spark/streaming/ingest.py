@@ -13,11 +13,39 @@ converge — the same property the reference documents for re-runs
 Also provides the windowed/watermarked aggregation surface a
 streaming mart needs (daily metrics → sliding/tumbling windows) and
 native session windows.
+
+MERGE semantics without a mutable store. ``foreachBatch`` delivery is
+at-least-once: a batch retried after a failure between its writes and
+the checkpoint commit runs again with the same ``batch_id``. Every
+persisted sink below follows one of two protocols that make such a
+retry a no-op, each written once in the private helpers:
+
+* **Partial-state sinks** (sketches, quality reports, drift and
+  embedding moments, IVM view deltas): each micro-batch appends its
+  own bounded partial stamped with ``batch_id`` (`_append_partial`);
+  the reader drops duplicate ``(batch_id, keys)`` rows before it
+  merges (`_merged_partials`), so a re-appended batch cannot
+  double-count.
+* **Replay-watermark indexes** (gram, minhash, IVF, IVF-PQ): per-batch
+  rows carry ``batch_id`` and a null ``thru`` (`_append_index_rows`).
+  Compaction folds history into one snapshot (``batch_id = -1``,
+  ``thru`` = the highest batch folded, `_fold_thru`) and promotes it
+  with write-new-then-swap (`_write_swap`). A reader sees the snapshot
+  plus partials above its ``thru`` and, for a batch reading the index
+  it is about to append to, below its own ``batch_id`` (`_visible`);
+  row-identity indexes then resolve each key last-write-wins
+  (`_latest`). A replay of a folded batch is dropped by the watermark,
+  one above it dedups.
+
+The swaps and the gram-scheme marker use local-filesystem calls, so
+those dirs must be local paths: `_require_local` refuses a
+``scheme://`` URI before anything is written.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -45,30 +73,344 @@ def read_raw_stream(spark: SparkSession, raw_dir: str, max_files: int = 10) -> D
     )
 
 
-def _swap_dir(new: str, live: str) -> None:
-    """Promote ``new`` over ``live`` with a two-rename swap.
+# --- micro-batch driver and keyed state -----------------------------
 
-    A previous crash between the renames can leave a stale
-    ``<live>_old`` behind, which would make the next swap's
-    ``os.rename(live, old)`` raise — so stale artifacts are cleaned
-    BEFORE swapping (ADVICE r1). Not atomic for concurrent readers;
-    the mart path uses the versioned-pointer protocol in
-    sources/publish.py for that — staging here has a single writer
-    (the streaming query) and readers only between batches.
-    """
-    old = live + "_old"
-    shutil.rmtree(old, ignore_errors=True)  # stale from a prior crash
+
+def _run_batches(df: DataFrame, process, checkpoint_dir: str) -> StreamingQuery:
+    """Drain ``df`` once (``availableNow``) through ``process(batch_df,
+    batch_id)``, skipping empty micro-batches. The one writer of every
+    sink except `stream_merge_to_staging`, whose trigger is the
+    caller's choice."""
+
+    def each(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            process(batch_df, batch_id)
+
+    return (
+        df.writeStream.foreachBatch(each)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _watermarked(df: DataFrame, ts_col: str, watermark: str) -> DataFrame:
+    """``df`` with an event-time watermark when it is streaming; batch
+    frames pass through (no state to evict)."""
+    return df.withWatermark(ts_col, watermark) if df.isStreaming else df
+
+
+def _keyed_state(
+    events: DataFrame, key_col: str, ts_col: str, watermark: str, update,
+    out_schema: str, state_schema: str, output_mode: str = "update",
+) -> DataFrame:
+    """Per-key state carried across micro-batches in the state store:
+    ``applyInPandasWithState`` over the watermarked frame, no timeout.
+    ``update(key, pdfs, state)`` folds one key's rows into its state
+    tuple and yields the output rows."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    return _watermarked(events, ts_col, watermark).groupBy(
+        key_col
+    ).applyInPandasWithState(
+        update, outputStructType=out_schema, stateStructType=state_schema,
+        outputMode=output_mode, timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+# --- partial-state sinks --------------------------------------------
+
+
+def _append_partial(df: DataFrame, batch_id: int, path: str) -> None:
+    """Append one micro-batch's partial state stamped with ``batch_id``.
+    The stamp is ``F.lit(batch_id)`` (int), the type existing sink dirs
+    hold: a dir mixing int and long files fails to read."""
+    df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(path)
+
+
+def _partials_stream(
+    rows: DataFrame, partial, path: str, checkpoint_dir: str
+) -> StreamingQuery:
+    """A partial-state sink: each non-empty micro-batch appends
+    ``partial(batch_df)`` to ``path``."""
+    return _run_batches(
+        rows, lambda b, batch_id: _append_partial(partial(b), batch_id, path),
+        checkpoint_dir,
+    )
+
+
+def _merged_partials(df: DataFrame, keys: list[str], *aggs) -> DataFrame:
+    """The read side of the partial-state protocol: drop replayed
+    duplicates on ``(batch_id, *keys)``, then merge with
+    ``groupBy(keys).agg(aggs)`` — or return the deduped rows when no
+    aggregate is given."""
+    df = df.dropDuplicates(["batch_id", *keys])
+    return df.groupBy(*keys).agg(*aggs) if aggs else df
+
+
+# --- local dirs and the replay-watermark index protocol ------------
+
+_URI = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+
+
+def _require_local(path: str) -> None:
+    """Refuse a ``scheme://`` path. The swap and marker helpers work
+    through ``os``/``shutil``, which would take ``s3://b/x`` for the
+    relative local path ``s3:/b/x`` and write there."""
+    if _URI.match(path):
+        raise ValueError(
+            f"{path!r} is a URI; streaming state and index dirs are "
+            "swapped with local-filesystem renames and must be local paths"
+        )
+
+
+def _has_data(path: str) -> bool:
+    """True iff ``path`` is a dir holding a file Spark would read
+    (underscore/dot-prefixed markers don't count)."""
+    return os.path.isdir(path) and any(
+        not f.startswith(("_", ".")) for f in os.listdir(path)
+    )
+
+
+def _write_swap(
+    df: DataFrame, live: str, suffix: str,
+    partition_col: str | None = None, before_swap=None,
+) -> None:
+    """Replace ``live`` by ``df``: write it to ``<live><suffix>``,
+    call ``before_swap(new_dir)`` if given, then promote the new dir
+    with a two-rename swap.
+
+    Stale artifacts of a crash (a half-written new dir, a ``<live>_old``
+    left between the renames) are cleaned first, or the renames would
+    raise. Not atomic for concurrent readers (the mart path uses the
+    versioned-pointer protocol in sources/publish.py for that): every
+    caller is the single writer of ``live``, with readers only between
+    its batches."""
+    _require_local(live)
+    live = live.rstrip("/")
+    new, old = live + suffix, live + "_old"
+    shutil.rmtree(new, ignore_errors=True)
+    writer = df.write.mode("overwrite")
+    if partition_col is not None:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(new)
+    if before_swap is not None:
+        before_swap(new)
+    shutil.rmtree(old, ignore_errors=True)
     if os.path.isdir(live):
         os.rename(live, old)
     os.rename(new, live)
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None when the path does not
+    exist yet (a sink's first batch). Only path-not-found means "first
+    batch": any other AnalysisException (an unresolved protocol column,
+    a corrupt schema) is raised, since swallowing it would silently
+    reset the state."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as ex:
+        msg = str(ex)
+        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+            return None
+        raise
+
+
+def _read_index_dir(spark: SparkSession, index_dir: str) -> DataFrame | None:
+    """Open a replay-watermark index dir: None when it holds no data
+    yet (missing, or only markers — e.g. the gram-scheme marker after a
+    crash before the first append), the raw DataFrame when it carries
+    the protocol columns, and a loud ValueError when it exists WITHOUT
+    them — a pre-protocol dir must be migrated (re-append its rows with
+    batch_id/thru, or rebuild) before streaming against it; treating it
+    as "first batch" would miss every existing row."""
+    _require_local(index_dir)
+    if os.path.isdir(index_dir) and not _has_data(index_dir):
+        return None
+    df = _read_or_none(spark, index_dir)
+    if df is None:
+        return None
+    missing = {"batch_id", "thru"} - set(df.columns)
+    if missing:
+        raise ValueError(
+            f"index dir {index_dir!r} exists but lacks replay-protocol "
+            f"columns {sorted(missing)}; migrate or rebuild it before "
+            "streaming against it"
+        )
+    return df
+
+
+def _append_index_rows(
+    df: DataFrame, batch_id: int, index_dir: str, partition_col: str | None = None
+) -> None:
+    """Append one batch's index rows: ``batch_id`` pinned to long (the
+    compaction snapshot writes long, and a dir mixing int and long
+    files fails to read) plus a null ``thru``."""
+    writer = (
+        df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        .withColumn("thru", F.lit(None).cast("long"))
+        .write.mode("append")
+    )
+    if partition_col is not None:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(index_dir)
+
+
+def _snapshot_thru(df: DataFrame) -> int | None:
+    """The snapshot's ``thru`` watermark, None before the first
+    compaction: one 1-row driver probe."""
+    return df.agg(F.max("thru")).first()[0]
+
+
+def _fold_thru(df: DataFrame) -> int:
+    """``thru`` of a new snapshot of ``df``: the highest batch it
+    folds, or the previous watermark if that is higher."""
+    return df.agg(
+        F.greatest(F.max("batch_id"), F.coalesce(F.max("thru"), F.lit(-1)))
+    ).first()[0]
+
+
+def _as_snapshot(df: DataFrame, thru: int) -> DataFrame:
+    """Stamp rows as the compacted snapshot: batch_id = -1, ``thru``."""
+    return df.withColumn("batch_id", F.lit(-1).cast("long")).withColumn(
+        "thru", F.lit(thru).cast("long")
+    )
+
+
+def _visible(
+    df: DataFrame, thru: int | None, before_batch: int | None = None
+) -> DataFrame:
+    """The index rows a reader sees: the snapshot plus partials above
+    its ``thru`` (the rest are folded into it) and, with
+    ``before_batch``, below that batch — a batch never reads its own
+    uncommitted append."""
+    snap = F.col("batch_id") == -1
+    if thru is not None:
+        df = df.where(snap | (F.col("batch_id") > thru))
+    if before_batch is not None:
+        df = df.where(snap | (F.col("batch_id") < before_batch))
+    return df
+
+
+def _latest(df: DataFrame, keys: list[str], order=("batch_id",)) -> DataFrame:
+    """Last-write-wins: the row with the highest ``order`` per ``keys``
+    (the snapshot's batch_id = -1 loses to every partial)."""
+    w = Window.partitionBy(*keys).orderBy(*[F.desc(c) for c in order])
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _pre_batch_index(
+    spark: SparkSession, index_dir: str, batch_id: int, read_merged, unfold
+) -> DataFrame | None:
+    """The index as it stood before ``batch_id`` (None on the first
+    batch), so a replayed batch reproduces its original output.
+    ``read_merged(before_batch)`` hides the batch's own partial rows;
+    if a compaction already folded the then-uncommitted batch into the
+    snapshot (``thru >= batch_id``), ``unfold(merged)`` takes its
+    contribution back out."""
+    idx_df = _read_index_dir(spark, index_dir)
+    if idx_df is None:
+        return None
+    merged = read_merged(batch_id)
+    thru = _snapshot_thru(idx_df)
+    if thru is not None and thru >= batch_id:
+        return unfold(merged)
+    return merged
+
+
+def _row_index_merged(
+    df: DataFrame, key_cols: list[str], before_batch: int | None = None
+) -> DataFrame:
+    """Shared read of the row-identity indexes (minhash bands, IVF
+    cells, PQ codes — a replayed batch re-appends IDENTICAL rows,
+    unlike the gram index's summed counts): the visible rows resolved
+    last-write-wins per key, protocol columns stripped. Replays of one
+    batch append bit-identical rows, so the within-batch pick is
+    content-deterministic. Caveat for multi-row-per-entity keys
+    (minhash bands key (id, band)): LWW resolves each surviving key to
+    its newest row but cannot DELETE a stale key an updated entity no
+    longer produces — content-changing redelivery there still needs
+    disjoint ids upstream or an explicit rebuild."""
+    return _latest(
+        _visible(df, _snapshot_thru(df), before_batch), key_cols
+    ).drop("batch_id", "thru")
+
+
+def _compact_row_index(
+    spark: SparkSession, index_dir: str, key_cols: list[str], partition_col: str
+) -> int:
+    """Shared compaction of the row-identity indexes: the merged read,
+    stamped as the snapshot and swapped in, so compaction never changes
+    what a reader sees. Returns the snapshot row count. Run between
+    batches (single writer)."""
+    df = spark.read.parquet(index_dir)
+    thru = _fold_thru(df)
+    merged = _row_index_merged(df, key_cols)
+    _write_swap(_as_snapshot(merged, thru), index_dir, "_compacting", partition_col)
+    return spark.read.parquet(index_dir).count()
+
+
+def _append_drift_row(
+    spark: SparkSession, report: dict, schema: str, index_dir: str
+) -> None:
+    """Append one drift report to the ``<index_dir>_drift`` history."""
+    fields = [f.split()[0] for f in schema.split(", ")]
+    spark.createDataFrame(
+        [tuple(report[f] for f in fields)], schema=schema
+    ).write.mode("append").parquet(index_dir.rstrip("/") + "_drift")
+
+
+def _new_vs_snapshot(df: DataFrame, value: str, q: float) -> list[dict]:
+    """``[new, snapshot]``: count, mean and ``q``-quantile of ``value``
+    over the newly indexed rows (batch_id > thru) and over the snapshot
+    rows; mean and quantile are None on an empty side."""
+    stats = {
+        r["_snap"]: r.asDict()
+        for r in df.groupBy((F.col("batch_id") == -1).alias("_snap"))
+        .agg(
+            F.count("*").alias("n"),
+            F.avg(value).alias("mean"),
+            F.percentile_approx(value, q).alias("q"),
+        )
+        .collect()
+    }
+    empty = {"n": 0, "mean": None, "q": None}
+    return [stats.get(side, empty) for side in (False, True)]
+
+
+def _cell_sizes(df: DataFrame) -> tuple[float | None, int]:
+    """(cell_skew, cells_used) of the visible rows: max/mean rows per
+    cell — drifted data piling into few cells unbalances the cell
+    equi-join even before recall moves — and the number of cells
+    holding any row."""
+    sk = (
+        df.groupBy("cell")
+        .agg(F.count("*").alias("n"))
+        .agg(
+            F.max("n").alias("mx"),
+            F.avg("n").alias("mean"),
+            F.count("*").alias("used"),
+        )
+        .first()
+    )
+    skew = float(sk["mx"]) / float(sk["mean"]) if sk["mx"] is not None else None
+    return skew, int(sk["used"])
+
+
+# --- HN staging ------------------------------------------------------
+
+
 def _batch_stamp_epoch(batch_df: DataFrame, prev_epoch: int) -> int:
     """Monotone, replay-deterministic extraction stamp for a
     micro-batch (epoch seconds).
 
-    Preference order (ADVICE r1, medium):
+    Preference order:
       1. max batch-filename timestamp of the micro-batch's source
          files (``hn_raw_YYYYMMDD_HHMMSS.json`` — the reference's
          extraction instant, `src/common/files.py:9-13`): extraction
@@ -141,14 +483,19 @@ def stream_merge_to_staging(
     'raise')``) are split out BEFORE the merge: appended to
     ``dead_letter_root`` (default ``<staging_root>_deadletter``)
     with the batch id, instead of flowing into the null-safe key join
-    as phantom keys (ADVICE r1).
+    as phantom keys.
 
     With ``marts_root`` set, each micro-batch also incrementally
     refreshes the mart date-partitions it touched (the streaming
     completion of the reference's "incremental MART updates" roadmap
     item, `README.md:342`) — full end-to-end latency from raw file to
     refreshed mart is one micro-batch.
+
+    ``staging_root`` must be a local path (it is swapped with
+    local-filesystem renames); a URI raises ValueError before the
+    query starts.
     """
+    _require_local(staging_root)
     dl_root = dead_letter_root or (staging_root + "_deadletter")
     # Mutable cell: the newest stamp seen this run (monotone floor).
     last_epoch = [0]
@@ -195,10 +542,7 @@ def stream_merge_to_staging(
             merged, _ = load_merge(target, staged)
         else:
             merged = staged
-        out = staging_root + f"_b{batch_id}"
-        shutil.rmtree(out, ignore_errors=True)  # stale from prior crash
-        merged.write.mode("overwrite").parquet(out)
-        _swap_dir(out, staging_root)
+        _write_swap(merged, staging_root, f"_b{batch_id}")
         if marts_root is not None:
             from ..plans.hn_pipeline import refresh_marts_incremental
 
@@ -211,6 +555,9 @@ def stream_merge_to_staging(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+# --- windows, joins and keyed state ----------------------------------
 
 
 def windowed_event_counts(
@@ -227,13 +574,12 @@ def windowed_event_counts(
     Late rows beyond ``watermark`` are dropped by the engine; state
     for closed windows is evicted — bounded memory at firehose scale.
     """
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
     win = F.window(F.col(ts_col), window, slide) if slide else F.window(
         F.col(ts_col), window
     )
-    return df.groupBy(win.alias("win")).agg(
+    return _watermarked(events, ts_col, watermark).groupBy(
+        win.alias("win")
+    ).agg(
         F.count("*").alias("events_count"),
         F.sum("value").alias("total_value"),
     ).select(
@@ -254,10 +600,7 @@ def session_windows(
     """Native session windows (gap-based) per key — Spark's built-in
     stateful session operator; JVM-side state store, no Python state.
     """
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(
+    return _watermarked(events, ts_col, watermark).groupBy(
         F.session_window(F.col(ts_col), gap).alias("sess"), F.col(key_col)
     ).agg(
         F.count("*").alias("n_events"),
@@ -292,12 +635,6 @@ def running_user_totals(
     cumulative values including all previous batches.
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        f"{key_col} long, n_events long, total_value double, last_ts timestamp"
-    )
-    state_schema = "n long, total double, last_ts timestamp"
 
     def update(key, pdfs, state):
         n, total, last_ts = (
@@ -319,15 +656,10 @@ def running_user_totals(
             }
         )
 
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, key_col, ts_col, watermark, update,
+        f"{key_col} long, n_events long, total_value double, last_ts timestamp",
+        "n long, total double, last_ts timestamp",
     )
 
 
@@ -362,14 +694,17 @@ def interval_join_streams(
     ``how="full_outer"`` extends the same watermark-proved absence to
     BOTH sides (unmatched right events surface with a NULL left ts);
     the output key coalesces across sides since either may be the
-    absent one.
+    absent one. Any other ``how`` raises ValueError (Spark would
+    accept e.g. ``"left"`` with different semantics).
     """
-    assert how in ("inner", "left_outer", "full_outer")
-    lw = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    rw = right.withWatermark(right_ts, watermark) if right.isStreaming else right
+    if how not in ("inner", "left_outer", "full_outer"):
+        raise ValueError(
+            "interval_join_streams: how must be 'inner', 'left_outer' "
+            f"or 'full_outer', got {how!r}"
+        )
     gap = F.expr(f"INTERVAL {max_gap}")
-    return lw.alias("l").join(
-        rw.alias("r"),
+    return _watermarked(left, left_ts, watermark).alias("l").join(
+        _watermarked(right, right_ts, watermark).alias("r"),
         (F.col(f"l.{key_col}") == F.col(f"r.{key_col}"))
         & (F.col(f"r.{right_ts}") >= F.col(f"l.{left_ts}"))
         & (F.col(f"r.{right_ts}") <= F.col(f"l.{left_ts}") + gap),
@@ -425,11 +760,8 @@ def ema_stream(
     Emits per batch: (key, ema, n_seen) — the post-batch accumulator.
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     a = float(alpha)
-    out_schema = f"{key_col} long, ema double, n_seen long"
-    state_schema = "acc double, n long"
 
     def update(key, pdfs, state):
         acc, n = state.get if state.exists else (0.0, 0)
@@ -442,15 +774,9 @@ def ema_stream(
         state.update((acc, n))
         yield pd.DataFrame({key_col: [key[0]], "ema": [acc], "n_seen": [n]})
 
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, key_col, ts_col, watermark, update,
+        f"{key_col} long, ema double, n_seen long", "acc double, n long",
     )
 
 
@@ -476,14 +802,8 @@ def holt_winters_stream(
     Emits per batch: (key, level, trend, forecast_next, n_seen).
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     a, b = float(alpha), float(beta)
-    out_schema = (
-        f"{key_col} long, level double, trend double, "
-        "forecast_next double, n_seen long"
-    )
-    state_schema = "lvl double, tr double, n long"
 
     def update(key, pdfs, state):
         lvl, tr, n = state.get if state.exists else (0.0, 0.0, 0)
@@ -509,15 +829,11 @@ def holt_winters_stream(
             }
         )
 
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, key_col, ts_col, watermark, update,
+        f"{key_col} long, level double, trend double, "
+        "forecast_next double, n_seen long",
+        "lvl double, tr double, n long",
     )
 
 
@@ -543,16 +859,10 @@ def holt_winters_fixed_point_stream(
     forecast_next_fp, n_seen).
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     an, ad = int(alpha[0]), int(alpha[1])
     bn, bd = int(beta[0]), int(beta[1])
     scale = 1 << scale_bits
-    out_schema = (
-        f"{key_col} long, level_fp long, trend_fp long, "
-        "forecast_next_fp long, n_seen long"
-    )
-    state_schema = "lvl long, tr long, n long"
 
     def update(key, pdfs, state):
         lvl, tr, n = state.get if state.exists else (0, 0, 0)
@@ -580,15 +890,11 @@ def holt_winters_fixed_point_stream(
             }
         )
 
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, key_col, ts_col, watermark, update,
+        f"{key_col} long, level_fp long, trend_fp long, "
+        "forecast_next_fp long, n_seen long",
+        "lvl long, tr long, n long",
     )
 
 
@@ -621,6 +927,9 @@ def curate_doc_stream(
     )
 
 
+# --- replay-watermark indexes ----------------------------------------
+
+
 def screen_stream_against_minhash_index(
     docs: DataFrame,
     index_dir: str,
@@ -647,20 +956,16 @@ def screen_stream_against_minhash_index(
     and the index join dedups candidate pairs, so BOTH surfaces are
     safe to consume with a keyed dropDuplicates / the freshness merge
     downstream; results converge, the reference's replay story.
-    Replay determinism (r11, same contract as the gram-index trim):
-    the index a batch screens against is read with ``before_batch =
-    batch_id``, so a batch replayed after its index append landed
-    does not meet its own band rows — the replayed hit rows are
-    bit-identical to the originals, not a superset.
+    Replay determinism: the batch screens against the index as it
+    stood before the batch (`_pre_batch_index`), so a batch replayed
+    after its index append landed does not meet its own band rows —
+    the replayed hit rows are bit-identical to the originals, not a
+    superset.
 
-    Index layout (r11): band rows carry ``batch_id`` (and a null
-    ``thru``); `read_minhash_index_merged` dedups replays on
-    (batch_id, id, band) and `compact_minhash_index` folds history
-    into one snapshot (batch_id = -1, ``thru`` = highest folded
-    batch) whose watermark drops post-compaction replays — the same
-    replay-watermark protocol as the gram index, closing the last
-    unbounded-growth seam (duplicate rows + one parquet append per
-    batch forever) in the incremental dedup path.
+    Index layout: the replay-watermark protocol (module docstring);
+    `read_minhash_index_merged` resolves replays on (id, band) and
+    `compact_minhash_index` folds history into one snapshot, bounding
+    the one-parquet-append-per-batch growth.
 
     State: none in the streaming engine (the index IS the state, on
     storage, partitioned by band for a partition-pruned join). At
@@ -670,102 +975,48 @@ def screen_stream_against_minhash_index(
     from ..operators.dedup import index_pairs, minhash_index
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark_b = batch_df.sparkSession
         batch_banded = minhash_index(
             batch_df.select(id_col, text_col), id_col, text_col,
             num_hashes, bands, shingle_n,
         ).persist()
         try:
-            idx_df = _read_index_dir(spark_b, index_dir)
-            if idx_df is None:  # first batch: no index yet
-                existing = None
-            else:
-                existing = read_minhash_index_merged(
-                    spark_b, index_dir, id_col, before_batch=batch_id
-                )
-                snap_thru = idx_df.agg(F.max("thru")).first()[0]
-                if snap_thru is not None and snap_thru >= batch_id:
-                    # compaction folded this (then-uncommitted) batch
-                    # into the snapshot; band rows key by doc id and
-                    # batch ids are disjoint (caller contract), so an
-                    # anti-join on the batch's own ids reconstructs
-                    # the pre-batch index exactly.
-                    existing = existing.join(
-                        batch_df.select(id_col), id_col, "left_anti"
-                    )
+            # compaction-ahead: band rows key by doc id and batch ids
+            # are disjoint (caller contract), so an anti-join on the
+            # batch's own ids takes its folded rows back out.
+            existing = _pre_batch_index(
+                spark_b, index_dir, batch_id,
+                lambda before: read_minhash_index_merged(
+                    spark_b, index_dir, id_col, before_batch=before
+                ),
+                lambda merged: merged.join(
+                    batch_df.select(id_col), id_col, "left_anti"
+                ),
+            )
             if existing is not None:
                 index_pairs(
                     batch_banded, existing, id_col, num_hashes, threshold
                 ).write.mode("append").parquet(hits_dir)
-            batch_banded.withColumn(
-                "batch_id", F.lit(batch_id).cast("long")
-            ).withColumn(
-                "thru", F.lit(None).cast("long")
-            ).write.mode("append").partitionBy("band").parquet(index_dir)
+            _append_index_rows(batch_banded, batch_id, index_dir, "band")
         finally:
             batch_banded.unpersist()
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(docs, process, checkpoint_dir)
 
 
-def _is_path_missing(ex: AnalysisException) -> bool:
-    """True iff the AnalysisException is the path-not-found raised on
-    the FIRST read of a not-yet-created streaming state/index dir —
-    the ONLY AnalysisException the foreachBatch loops may treat as
-    "first batch". Anything else (an unresolved protocol column on a
-    pre-protocol index dir, a corrupt schema) must surface loudly:
-    swallowing it silently resets state — near-dup hits vanish and
-    new-schema rows land in a mixed-schema dir (ADVICE r11)."""
-    msg = str(ex)
-    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-
-
-def _read_index_dir(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """Open a replay-watermark index dir: None when the dir does not
-    exist yet (first batch), the raw DataFrame when it carries the
-    protocol columns, and a loud ValueError when it exists WITHOUT
-    them — a pre-protocol dir must be migrated (re-append its rows
-    with batch_id/thru, or rebuild) before streaming against it;
-    treating it as "first batch" would miss every existing row.
-
-    A dir holding ONLY underscore/dot-prefixed files (e.g. just the
-    gram-scheme marker after a crash between marker stamp and first
-    parquet append) is an empty index, not an error."""
-    if os.path.isdir(index_dir) and not any(
-        not f.startswith(("_", ".")) for f in os.listdir(index_dir)
-    ):
-        return None
-    try:
-        df = spark.read.parquet(index_dir)
-    except AnalysisException as ex:
-        if _is_path_missing(ex):
-            return None
-        raise
-    missing = {"batch_id", "thru"} - set(df.columns)
-    if missing:
-        raise ValueError(
-            f"index dir {index_dir!r} exists but lacks replay-protocol "
-            f"columns {sorted(missing)}; migrate or rebuild it before "
-            "streaming against it"
-        )
-    return df
-
-
-# Gram-hash scheme of the CURRENT code (ADVICE r12 → r13): scheme 2 is
-# the composed doubling-ladder hash (`dedup.gram_hash_doubling`, commit
-# ad9fd7c); scheme 1 was xxhash64 over the materialized gram STRING.
-# The two produce disjoint hash values for the same gram, so a dir
-# written under one scheme silently misses every duplicate span when
-# read under the other — the marker makes the mismatch loud instead.
+# Gram-hash scheme of the CURRENT code: scheme 2 is the composed
+# doubling-ladder hash (`dedup.gram_hash_doubling`); scheme 1 was
+# xxhash64 over the materialized gram STRING. The two produce disjoint
+# hash values for the same gram, so a dir written under one scheme
+# silently misses every duplicate span when read under the other — the
+# marker makes the mismatch loud instead.
 _GRAM_HASH_SCHEME = 2
 _GRAM_SCHEME_MARKER = "_gram_hash_scheme"
+
+
+def _stamp_gram_scheme(index_dir: str) -> None:
+    with open(os.path.join(index_dir, _GRAM_SCHEME_MARKER), "w") as fh:
+        fh.write(str(_GRAM_HASH_SCHEME))
 
 
 def _check_gram_scheme(index_dir: str, create: bool = False) -> None:
@@ -776,15 +1027,16 @@ def _check_gram_scheme(index_dir: str, create: bool = False) -> None:
     * marker present, matching → OK;
     * marker present, different → ValueError (rebuild required);
     * parquet data present but NO marker → a dir written before the
-      marker existed. Its hashes may be scheme-1 (pre-r12 gram-string
-      xxhash64) — indistinguishable from early scheme-2 rows, so the
-      only safe answer is a loud rebuild error, never silent mixing
-      (false-negative span misses).
+      marker existed. Its hashes may be scheme-1 — indistinguishable
+      from early scheme-2 rows, so the only safe answer is a loud
+      rebuild error, never silent mixing (false-negative span misses).
 
     ``create=True`` (writer path) stamps the marker on a dir that has
     no parquet data yet — BEFORE the first append, so a crash between
     the two writes leaves a marker-only dir (read back as an empty
-    index), never data without a marker."""
+    index), never data without a marker. A URI path raises before
+    anything is created."""
+    _require_local(index_dir)
     marker = os.path.join(index_dir, _GRAM_SCHEME_MARKER)
     if os.path.exists(marker):
         with open(marker) as fh:
@@ -797,10 +1049,7 @@ def _check_gram_scheme(index_dir: str, create: bool = False) -> None:
                 "disjoint across schemes — mixing silently misses spans)"
             )
         return
-    has_data = os.path.isdir(index_dir) and any(
-        not f.startswith(("_", ".")) for f in os.listdir(index_dir)
-    )
-    if has_data:
+    if _has_data(index_dir):
         raise ValueError(
             f"gram index dir {index_dir!r} has no gram-hash scheme marker: "
             "it predates the scheme-2 composed gram hashing (r12) and its "
@@ -809,95 +1058,7 @@ def _check_gram_scheme(index_dir: str, create: bool = False) -> None:
         )
     if create:
         os.makedirs(index_dir, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write(str(_GRAM_HASH_SCHEME))
-
-
-def _read_row_index_merged(
-    spark: SparkSession,
-    index_dir: str,
-    key_cols: list[str],
-    before_batch: int | None = None,
-) -> DataFrame:
-    """Shared replay-watermark READ for row-identity streaming
-    indexes (minhash bands, IVF cells, PQ codes — anything where a
-    replayed batch re-appends IDENTICAL rows, unlike the gram index's
-    summed counts): drop partial rows at or below the snapshot
-    ``thru`` watermark (already folded), optionally bound partials to
-    batch_id < ``before_batch`` (a batch must never read its own
-    uncommitted append), resolve each key LAST-WRITE-WINS (highest
-    visible batch_id per key — the snapshot's batch_id = -1 sorts
-    below every partial, so a re-delivered key deterministically
-    reads as its newest row, never an arbitrary one; replays of one
-    batch append bit-identical rows, so the within-batch pick is
-    content-deterministic), and strip the protocol columns. One tiny
-    driver action (the max-watermark probe) per read. Caveat for
-    multi-row-per-entity keys (minhash bands key (id, band)): LWW
-    resolves each surviving key to its newest row but cannot DELETE
-    a stale key an updated entity no longer produces — content-
-    changing redelivery there still needs disjoint ids upstream or
-    an explicit rebuild."""
-    df = spark.read.parquet(index_dir)
-    thru = df.agg(F.max("thru")).first()[0]
-    if thru is not None:
-        df = df.where((F.col("batch_id") == -1) | (F.col("batch_id") > thru))
-    if before_batch is not None:
-        df = df.where(
-            (F.col("batch_id") == -1) | (F.col("batch_id") < before_batch)
-        )
-    cols = [c for c in df.columns if c not in ("batch_id", "thru")]
-    w = Window.partitionBy(*key_cols).orderBy(F.desc("batch_id"))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(*cols)
-    )
-
-
-def _compact_row_index(
-    spark: SparkSession,
-    index_dir: str,
-    key_cols: list[str],
-    partition_col: str,
-) -> int:
-    """Shared replay-watermark COMPACTION for row-identity streaming
-    indexes: fold per-batch partial rows into ONE snapshot row per
-    key (batch_id = -1, ``thru`` = highest batch folded) via
-    write-new-then-swap; returns the snapshot row count. Run between
-    batches (single writer — the `_swap_dir` window). Keeps
-    at-least-once safe ACROSS compactions: a batch replayed after its
-    rows were folded is dropped by the read's watermark filter.
-
-    The fold is LAST-WRITE-WINS per key (highest batch_id; the prior
-    snapshot's batch_id = -1 loses to every partial) — a key
-    re-delivered in two un-folded batches snapshots as its NEWEST
-    row, matching what `_read_row_index_merged` resolves pre-
-    compaction, so compaction never changes what a reader sees
-    (ADVICE r11: previously the duplicate survived into the snapshot
-    and the read kept an arbitrary one)."""
-    df = spark.read.parquet(index_dir)
-    new_thru = df.agg(
-        F.greatest(F.max("batch_id"), F.coalesce(F.max("thru"), F.lit(-1)))
-    ).first()[0]
-    prev_thru = df.agg(F.max("thru")).first()[0]
-    if prev_thru is not None:
-        df = df.where(
-            (F.col("batch_id") == -1) | (F.col("batch_id") > prev_thru)
-        )
-    w = Window.partitionBy(*key_cols).orderBy(F.desc("batch_id"))
-    merged = (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "batch_id", "thru")
-        .withColumn("batch_id", F.lit(-1).cast("long"))
-        .withColumn("thru", F.lit(new_thru).cast("long"))
-    )
-    tmp = index_dir.rstrip("/") + "_compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    _swap_dir(tmp, index_dir)
-    return n
+        _stamp_gram_scheme(index_dir)
 
 
 def ivf_index_stream(
@@ -908,27 +1069,23 @@ def ivf_index_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> StreamingQuery:
-    """Streaming incremental IVF index (VERDICT r10 #7): each
-    micro-batch of new vectors is assigned to its nearest EXISTING
-    cell executor-side (`similarity._assign_probe_cells` with
-    n_probe=1 — the carrying assignment, bit-identical to
-    `knn_cosine_ivf`'s corpus side including the 1e-12-quantized
-    (-sim, index) tie-break) and appended to ``index_dir``
-    partitioned by cell — completing the batch/streaming symmetry
-    the dedup family already has (minhash bands, gram index). The
-    quantizer is FIXED at stream start (the FAISS operating model:
-    train once, add forever); re-centering is offline maintenance —
-    refit with `similarity.kmeans_centroids` over the merged index
-    vectors and rebuild, exactly like a batch index rebuild.
+    """Streaming incremental IVF index: each micro-batch of new
+    vectors is assigned to its nearest EXISTING cell executor-side
+    (`similarity._assign_probe_cells` with n_probe=1 — the carrying
+    assignment, bit-identical to `knn_cosine_ivf`'s corpus side
+    including the 1e-12-quantized (-sim, index) tie-break) and
+    appended to ``index_dir`` partitioned by cell — completing the
+    batch/streaming symmetry the dedup family already has (minhash
+    bands, gram index). The quantizer is FIXED at stream start (the
+    FAISS operating model: train once, add forever); re-centering is
+    offline maintenance (`recenter_ivf_index`).
 
-    Index layout: the replay-watermark protocol shared with the gram
-    and minhash indexes — per-batch rows carry ``batch_id`` (and a
-    null ``thru``); `read_ivf_index_merged` dedups replayed rows on
-    (batch_id, id) and `compact_ivf_index` folds history into one
-    snapshot whose ``thru`` watermark drops post-compaction replays.
-    Query path: `similarity.knn_join_ivf_index` over the merged rows
-    — probe + one cell equi-join + exact rerank, no fit and no
-    corpus assignment per query batch.
+    Index layout: the replay-watermark protocol (module docstring);
+    `read_ivf_index_merged` resolves replays per id and
+    `compact_ivf_index` folds history into one snapshot. Query path:
+    `similarity.knn_join_ivf_index` over the merged rows — probe + one
+    cell equi-join + exact rerank, no fit and no corpus assignment per
+    query batch.
 
     Scale shape per batch: one Arrow GEMM stage over the batch (the
     broadcast centroid matrix is tiny), zero shuffles, O(batch)
@@ -936,23 +1093,15 @@ def ivf_index_stream(
     from ..operators.similarity import _assign_probe_cells
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _assign_probe_cells(
-            batch_df.select(id_col, vec_col), id_col, vec_col,
-            centroids, 1, vec_out=vec_col, norm_out="_cn",
-        ).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).withColumn(
-            "thru", F.lit(None).cast("long")
-        ).write.mode("append").partitionBy("cell").parquet(index_dir)
+        _append_index_rows(
+            _assign_probe_cells(
+                batch_df.select(id_col, vec_col), id_col, vec_col,
+                centroids, 1, vec_out=vec_col, norm_out="_cn",
+            ),
+            batch_id, index_dir, "cell",
+        )
 
-    return (
-        vectors.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(vectors, process, checkpoint_dir)
 
 
 def read_ivf_index_merged(
@@ -962,12 +1111,10 @@ def read_ivf_index_merged(
     before_batch: int | None = None,
 ) -> DataFrame:
     """Merged (id, cell, vector, _cn) view of a streaming IVF index
-    directory — same replay-watermark read as the gram/minhash
-    indexes: snapshot rows (batch_id = -1, ``thru``) bound replayed
-    folded batches; above-watermark replays dedup on (batch_id, id).
-    Rows feed `similarity.knn_join_ivf_index` directly."""
-    return _read_row_index_merged(
-        spark, index_dir, [id_col], before_batch=before_batch
+    directory — the shared replay-watermark read (last-write-wins per
+    id). Rows feed `similarity.knn_join_ivf_index` directly."""
+    return _row_index_merged(
+        spark.read.parquet(index_dir), [id_col], before_batch
     )
 
 
@@ -987,19 +1134,20 @@ def compact_ivf_index(
 
     When ``centroids`` (the stream's fixed quantizer) is passed, a
     drift report over the rows being folded is computed FIRST and
-    appended to the ``<index_dir>_drift`` history (VERDICT r11 #3):
-    compaction is the natural observation point — it sees exactly the
-    newly-indexed rows before they merge into the snapshot baseline.
-    See `ivf_index_drift_report` for the metric and SCALING.md
+    appended to the ``<index_dir>_drift`` history: compaction is the
+    natural observation point — it sees exactly the newly-indexed rows
+    before they merge into the snapshot baseline. See
+    `ivf_index_drift_report` for the metric and SCALING.md
     §Similarity for the recenter trigger thresholds."""
     if centroids is not None:
-        report = ivf_index_drift_report(
-            spark, index_dir, centroids, id_col=id_col, vec_col=vec_col
+        _append_drift_row(
+            spark,
+            ivf_index_drift_report(
+                spark, index_dir, centroids, id_col=id_col, vec_col=vec_col
+            ),
+            _DRIFT_REPORT_SCHEMA,
+            index_dir,
         )
-        fields = [f.split()[0] for f in _DRIFT_REPORT_SCHEMA.split(", ")]
-        spark.createDataFrame(
-            [tuple(report[f] for f in fields)], schema=_DRIFT_REPORT_SCHEMA
-        ).write.mode("append").parquet(index_dir.rstrip("/") + "_drift")
     return _compact_row_index(spark, index_dir, [id_col], "cell")
 
 
@@ -1020,14 +1168,14 @@ def ivf_index_drift_report(
     vec_col: str = "embedding",
 ) -> dict:
     """Assignment-quality drift of a streaming IVF index vs its fixed
-    quantizer (VERDICT r11 #3): at 100 TB the stream carries
-    assignment against centroids fitted once, so a drifting corpus
-    distribution silently degrades join recall — the probe stage
-    ranks cells by query-to-centroid cosine, and when vectors sit
-    farther from EVERY centroid the probed cells overlap the true
-    neighbors' cells less. Nothing in the query path measures that;
-    this maintenance op does, so the `recenter_ivf_index` decision is
-    a recorded metric, not a guess.
+    quantizer: at 100 TB the stream carries assignment against
+    centroids fitted once, so a drifting corpus distribution silently
+    degrades join recall — the probe stage ranks cells by
+    query-to-centroid cosine, and when vectors sit farther from EVERY
+    centroid the probed cells overlap the true neighbors' cells less.
+    Nothing in the query path measures that; this maintenance op does,
+    so the `recenter_ivf_index` decision is a recorded metric, not a
+    guess.
 
     Metrics, over the currently VISIBLE rows (snapshot + above-
     watermark partials, last-write-wins per id — the same resolution
@@ -1042,9 +1190,7 @@ def ivf_index_drift_report(
     - ``mean_cos_drop``: base_mean_cos - new_mean_cos (positive =
       new data assigns worse than the baseline did). None without a
       baseline.
-    - ``cell_skew``: max/mean visible cell size — drifted data piling
-      into few cells unbalances the cell equi-join (straggler tasks)
-      even before recall moves.
+    - ``cell_skew``: max/mean visible cell size (`_cell_sizes`).
 
     Scale shape: one broadcast of the n_cells×dim centroid matrix,
     one scan with a JVM-side zip_with/aggregate dot product, one
@@ -1060,61 +1206,33 @@ def ivf_index_drift_report(
         "cell int, _cvec array<double>",
     )
     df = spark.read.parquet(index_dir)
-    thru = df.agg(F.max("thru")).first()[0]
-    thru = -1 if thru is None else int(thru)
-    w = Window.partitionBy(id_col).orderBy(F.desc("batch_id"))
-    visible = (
-        df.where((F.col("batch_id") == -1) | (F.col("batch_id") > thru))
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-    )
+    thru = _snapshot_thru(df)
+    visible = _latest(_visible(df, thru), [id_col])
     dot = F.aggregate(
         F.zip_with(F.col(vec_col), F.col("_cvec"), lambda a, b: a * b),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
     scored = visible.join(F.broadcast(cent_df), "cell").select(
-        (F.col("batch_id") == -1).alias("_snap"),
+        "batch_id",
         (dot / F.greatest(F.col("_cn"), F.lit(1e-12))).alias("_cos"),
         "cell",
     )
-    stats = {
-        r["_snap"]: r
-        for r in scored.groupBy("_snap")
-        .agg(
-            F.count("*").alias("n"),
-            F.avg("_cos").alias("mean_cos"),
-            F.percentile_approx("_cos", 0.05).alias("p05_cos"),
-        )
-        .collect()
-    }
-    sk = (
-        scored.groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.max("n").alias("mx"),
-            F.avg("n").alias("mean"),
-            F.count("*").alias("used"),
-        )
-        .first()
-    )
-    new, base = stats.get(False), stats.get(True)
-    drop = (
-        float(base["mean_cos"]) - float(new["mean_cos"])
-        if new is not None and base is not None
-        else None
-    )
+    new, base = _new_vs_snapshot(scored, "_cos", 0.05)
+    skew, used = _cell_sizes(scored)
     return {
-        "thru": thru,
-        "n_new": int(new["n"]) if new is not None else 0,
-        "n_snapshot": int(base["n"]) if base is not None else 0,
-        "new_mean_cos": float(new["mean_cos"]) if new is not None else None,
-        "new_p05_cos": float(new["p05_cos"]) if new is not None else None,
-        "base_mean_cos": float(base["mean_cos"]) if base is not None else None,
-        "base_p05_cos": float(base["p05_cos"]) if base is not None else None,
-        "mean_cos_drop": drop,
-        "cell_skew": float(sk["mx"]) / float(sk["mean"]) if sk["mx"] is not None else None,
-        "cells_used": int(sk["used"]),
+        "thru": -1 if thru is None else int(thru),
+        "n_new": new["n"],
+        "n_snapshot": base["n"],
+        "new_mean_cos": new["mean"],
+        "new_p05_cos": new["q"],
+        "base_mean_cos": base["mean"],
+        "base_p05_cos": base["q"],
+        "mean_cos_drop": base["mean"] - new["mean"]
+        if new["n"] and base["n"]
+        else None,
+        "cell_skew": skew,
+        "cells_used": used,
         "n_cells": len(centroids),
     }
 
@@ -1158,27 +1276,19 @@ def pq_index_stream(
     from ..operators.similarity import pq_encode_corpus
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # recon_err rides along (8 bytes/vector next to the m-byte
         # codes): it is the codebook-fit signal `pq_index_drift_report`
         # trends at compaction time — codes alone can't say how badly
         # they quantize.
-        pq_encode_corpus(
-            batch_df.select(id_col, vec_col), coarse_centroids,
-            codebooks, residual=residual, id_col=id_col, vec_col=vec_col,
-        ).select(id_col, "cell", "codes", "recon_err").withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).withColumn(
-            "thru", F.lit(None).cast("long")
-        ).write.mode("append").partitionBy("cell").parquet(index_dir)
+        _append_index_rows(
+            pq_encode_corpus(
+                batch_df.select(id_col, vec_col), coarse_centroids,
+                codebooks, residual=residual, id_col=id_col, vec_col=vec_col,
+            ).select(id_col, "cell", "codes", "recon_err"),
+            batch_id, index_dir, "cell",
+        )
 
-    return (
-        vectors.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(vectors, process, checkpoint_dir)
 
 
 def read_pq_index_merged(
@@ -1190,8 +1300,8 @@ def read_pq_index_merged(
     """Merged (id, cell, codes) view of a streaming IVF-PQ index —
     the shared replay-watermark read; rows feed
     `similarity.pq_knn_join(encoded=...)` directly."""
-    return _read_row_index_merged(
-        spark, index_dir, [id_col], before_batch=before_batch
+    return _row_index_merged(
+        spark.read.parquet(index_dir), [id_col], before_batch
     )
 
 
@@ -1208,12 +1318,12 @@ def compact_pq_index(
     `pq_index_drift_report`) — the PQ twin of
     `compact_ivf_index(..., centroids=)`."""
     if track_drift:
-        report = pq_index_drift_report(spark, index_dir, id_col=id_col)
-        fields = [f.split()[0] for f in _PQ_DRIFT_REPORT_SCHEMA.split(", ")]
-        spark.createDataFrame(
-            [tuple(report[f] for f in fields)],
-            schema=_PQ_DRIFT_REPORT_SCHEMA,
-        ).write.mode("append").parquet(index_dir.rstrip("/") + "_drift")
+        _append_drift_row(
+            spark,
+            pq_index_drift_report(spark, index_dir, id_col=id_col),
+            _PQ_DRIFT_REPORT_SCHEMA,
+            index_dir,
+        )
     return _compact_row_index(spark, index_dir, [id_col], "cell")
 
 
@@ -1247,77 +1357,46 @@ def pq_index_drift_report(
     trigger guidance in SCALING.md §Similarity.
 
     Raises loudly on an index whose rows lack ``recon_err`` (written
-    by a pre-r12 `pq_index_stream`): rebuild or re-encode before
+    by an older `pq_index_stream`): rebuild or re-encode before
     enabling drift tracking — a mixed-schema dir must not silently
-    report over a subset (the ADVICE r11 lesson)."""
+    report over a subset."""
     df = spark.read.option("mergeSchema", "true").parquet(index_dir)
     if "recon_err" not in df.columns:
         raise ValueError(
             f"index dir {index_dir!r} has no recon_err column (pre-r12 "
             "layout); rebuild the index before enabling drift tracking"
         )
-    thru = df.agg(F.max("thru")).first()[0]
-    thru = -1 if thru is None else int(thru)
-    w = Window.partitionBy(id_col).orderBy(F.desc("batch_id"))
-    visible = (
-        df.where((F.col("batch_id") == -1) | (F.col("batch_id") > thru))
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-    )
+    thru = _snapshot_thru(df)
+    visible = _latest(_visible(df, thru), [id_col])
     if visible.where(F.col("recon_err").isNull()).limit(1).count() > 0:
         raise ValueError(
             f"index dir {index_dir!r} mixes pre- and post-recon_err "
             "rows; rebuild before enabling drift tracking"
         )
-    stats = {
-        r["_snap"]: r
-        for r in visible.groupBy(
-            (F.col("batch_id") == -1).alias("_snap")
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.avg("recon_err").alias("mean_err"),
-            F.percentile_approx("recon_err", 0.95).alias("p95_err"),
-        )
-        .collect()
-    }
-    sk = (
-        visible.groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.max("n").alias("mx"),
-            F.avg("n").alias("mean"),
-            F.count("*").alias("used"),
-        )
-        .first()
-    )
-    new, base = stats.get(False), stats.get(True)
-    rise = (
-        float(new["mean_err"]) - float(base["mean_err"])
-        if new is not None and base is not None
-        else None
-    )
+    new, base = _new_vs_snapshot(visible, "recon_err", 0.95)
+    skew, used = _cell_sizes(visible)
     return {
-        "thru": thru,
-        "n_new": int(new["n"]) if new is not None else 0,
-        "n_snapshot": int(base["n"]) if base is not None else 0,
-        "new_mean_err": float(new["mean_err"]) if new is not None else None,
-        "new_p95_err": float(new["p95_err"]) if new is not None else None,
-        "base_mean_err": float(base["mean_err"]) if base is not None else None,
-        "base_p95_err": float(base["p95_err"]) if base is not None else None,
-        "mean_err_rise": rise,
-        "cell_skew": float(sk["mx"]) / float(sk["mean"])
-        if sk["mx"] is not None
+        "thru": -1 if thru is None else int(thru),
+        "n_new": new["n"],
+        "n_snapshot": base["n"],
+        "new_mean_err": new["mean"],
+        "new_p95_err": new["q"],
+        "base_mean_err": base["mean"],
+        "base_p95_err": base["q"],
+        "mean_err_rise": new["mean"] - base["mean"]
+        if new["n"] and base["n"]
         else None,
-        "cells_used": int(sk["used"]),
+        "cell_skew": skew,
+        "cells_used": used,
     }
 
 
 def read_pq_drift_history(spark: SparkSession, index_dir: str) -> DataFrame:
     """The drift-report history `compact_pq_index(...,
     track_drift=True)` appends — one row per compaction, keyed by the
-    pre-fold ``thru`` watermark."""
-    return spark.read.parquet(index_dir.rstrip("/") + "_drift")
+    pre-fold ``thru`` watermark (same sidecar layout as the IVF
+    history)."""
+    return read_ivf_drift_history(spark, index_dir)
 
 
 def recenter_ivf_index(
@@ -1330,8 +1409,8 @@ def recenter_ivf_index(
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> list[list[float]]:
-    """Offline IVF maintenance (the 'periodic re-center' half of
-    VERDICT r10 #7): refit the quantizer over ALL indexed vectors
+    """Offline IVF maintenance (the 'periodic re-center' half of the
+    streaming IVF index): refit the quantizer over ALL indexed vectors
     (`similarity.kmeans_centroids` — the same deterministic
     smallest-ids init + Lloyd steps the batch path uses), reassign
     every vector to the refit cells with the same carrying
@@ -1356,10 +1435,7 @@ def recenter_ivf_index(
     from ..operators.similarity import _assign_probe_cells, kmeans_centroids
 
     merged = read_ivf_index_merged(spark, index_dir, id_col=id_col)
-    df = spark.read.parquet(index_dir)
-    new_thru = df.agg(
-        F.greatest(F.max("batch_id"), F.coalesce(F.max("thru"), F.lit(-1)))
-    ).first()[0]
+    thru = _fold_thru(spark.read.parquet(index_dir))
     vectors = merged.select(id_col, vec_col).localCheckpoint(eager=True)
     if centroids is not None:
         if len(centroids) != n_cells or any(
@@ -1373,18 +1449,11 @@ def recenter_ivf_index(
             vectors, dim, n_cells=n_cells, iters=iters,
             id_col=id_col, vec_col=vec_col,
         )
-    rebuilt = (
-        _assign_probe_cells(
-            vectors, id_col, vec_col, centroids, 1,
-            vec_out=vec_col, norm_out="_cn",
-        )
-        .withColumn("batch_id", F.lit(-1).cast("long"))
-        .withColumn("thru", F.lit(new_thru).cast("long"))
+    rebuilt = _assign_probe_cells(
+        vectors, id_col, vec_col, centroids, 1,
+        vec_out=vec_col, norm_out="_cn",
     )
-    tmp = index_dir.rstrip("/") + "_recentering"
-    shutil.rmtree(tmp, ignore_errors=True)
-    rebuilt.write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    _swap_dir(tmp, index_dir)
+    _write_swap(_as_snapshot(rebuilt, thru), index_dir, "_recentering", "cell")
     return centroids
 
 
@@ -1395,17 +1464,14 @@ def read_minhash_index_merged(
     before_batch: int | None = None,
 ) -> DataFrame:
     """Merged band-row view of a streaming minhash-index directory
-    (the LSH twin of `read_gram_index_merged`, VERDICT r10 #5):
-    per-batch rows (batch_id >= 0) plus at most one compacted
-    snapshot (batch_id = -1 carrying ``thru``). Replay-idempotent:
-    rows of a batch at or below the snapshot watermark are dropped
-    (already folded); an above-watermark replay re-appends identical
-    (batch_id, id, band) rows and dedups away. ``before_batch``
-    bounds the partial rows so a batch never screens against its own
-    uncommitted append. Returns plain (id, sig, band, bucket) rows —
-    the exact `minhash_index` schema `index_pairs` consumes."""
-    return _read_row_index_merged(
-        spark, index_dir, [id_col, "band"], before_batch=before_batch
+    (the LSH twin of `read_gram_index_merged`): the shared
+    replay-watermark read, last-write-wins per (id, band).
+    ``before_batch`` bounds the partial rows so a batch never screens
+    against its own uncommitted append. Returns plain (id, sig, band,
+    bucket) rows — the exact `minhash_index` schema `index_pairs`
+    consumes."""
+    return _row_index_merged(
+        spark.read.parquet(index_dir), [id_col, "band"], before_batch
     ).select(id_col, "sig", "band", "bucket")
 
 
@@ -1415,8 +1481,8 @@ def compact_minhash_index(spark: SparkSession, index_dir: str) -> int:
     row per (doc, band) — batch_id = -1, ``thru`` = highest batch_id
     folded — via write-new-then-swap. Returns the snapshot row count.
 
-    Same replay-watermark protocol as `compact_gram_index` (747ca8a):
-    a batch replayed after its rows were folded is dropped by
+    Same replay-watermark protocol as `compact_gram_index`: a batch
+    replayed after its rows were folded is dropped by
     `read_minhash_index_merged`'s watermark instead of re-appearing
     as duplicate band rows; at-least-once stays safe ACROSS
     compactions. Run between batches (single writer). Scale shape:
@@ -1459,21 +1525,18 @@ def trim_stream_against_gram_index(
     that (its ``thru`` watermark drops post-compaction replays of
     already-folded batches).
 
-    Replay determinism of the TRIM itself (ADVICE r10): the merged
-    index a batch trims against is built with ``before_batch =
-    batch_id`` — partial rows from the current batch (and any later
-    one) are excluded, so a batch replayed after a failure BETWEEN
-    the index append and the checkpoint commit does not see its own
-    grams (which would push every batch gram to min_docs via
-    old+new double-counting and over-trim the replayed copy). If a
-    compaction ran in that window and folded the uncommitted batch
-    into the snapshot (thru >= batch_id), the batch's own gram
-    counts — recomputed from the batch, bit-identical to what the
-    snapshot folded — are subtracted back out. Either way a replay
-    trims against exactly the pre-batch index and reproduces
-    bit-identical rows, so ``out_dir`` holds only IDENTICAL
-    duplicate rows per key and consumers dedup by ``id_col`` (same
-    contract as the minhash twin's hits surface).
+    Replay determinism of the TRIM itself: a batch trims against the
+    index as it stood before the batch (`_pre_batch_index`), so a
+    batch replayed after a failure BETWEEN the index append and the
+    checkpoint commit does not see its own grams (which would push
+    every batch gram to min_docs via old+new double-counting and
+    over-trim the replayed copy). If a compaction folded the
+    uncommitted batch into the snapshot, the batch's own gram counts —
+    recomputed from the batch, bit-identical to what the snapshot
+    folded — are subtracted back out. Either way a replay reproduces
+    bit-identical rows, so ``out_dir`` holds only IDENTICAL duplicate
+    rows per key and consumers dedup by ``id_col`` (same contract as
+    the minhash twin's hits surface).
 
     Scale shape per batch: batch-sized gram projection, one agg, one
     join against the merged index (bucket/partition the index by
@@ -1483,99 +1546,73 @@ def trim_stream_against_gram_index(
     from ..operators.dedup import gram_index, trim_batch_against_index
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # Refuse a pre-r12 (scheme-1) index dir before reading or
-        # appending; stamp the current scheme on a fresh dir.
+        # Refuse an index dir of another gram-hash scheme before
+        # reading or appending; stamp the current scheme on a fresh dir.
         _check_gram_scheme(index_dir, create=True)
         spark_b = batch_df.sparkSession
         batch = batch_df.select(id_col, text_col).persist()
         own = gram_index(batch, id_col, text_col, k=k).persist()
+
+        def unfold(merged: DataFrame) -> DataFrame:
+            # the snapshot folded each (batch, h) exactly once
+            return (
+                merged.join(
+                    own.select("h", F.col("n_docs").alias("_own")), "h", "left"
+                )
+                .select(
+                    "h",
+                    (
+                        F.col("n_docs") - F.coalesce(F.col("_own"), F.lit(0))
+                    ).alias("n_docs"),
+                )
+                .where(F.col("n_docs") > 0)
+            )
+
         try:
-            idx_df = _read_index_dir(spark_b, index_dir)
-            if idx_df is None:  # first batch: no index yet
+            merged = _pre_batch_index(
+                spark_b, index_dir, batch_id,
+                lambda before: read_gram_index_merged(
+                    spark_b, index_dir, before_batch=before
+                ),
+                unfold,
+            )
+            if merged is None:  # first batch: no index yet
                 merged = spark_b.createDataFrame([], "h long, n_docs long")
-                snap_thru = None
-            else:
-                merged = read_gram_index_merged(
-                    spark_b, index_dir, before_batch=batch_id
-                )
-                snap_thru = idx_df.agg(F.max("thru")).first()[0]
-            if snap_thru is not None and snap_thru >= batch_id:
-                # A compaction folded this (then-uncommitted) batch
-                # into the snapshot; subtract its own counts — the
-                # snapshot folded each (batch, h) exactly once, so
-                # this reconstructs the pre-batch index exactly.
-                merged = (
-                    merged.join(
-                        own.select("h", F.col("n_docs").alias("_own")),
-                        "h",
-                        "left",
-                    )
-                    .select(
-                        "h",
-                        (
-                            F.col("n_docs")
-                            - F.coalesce(F.col("_own"), F.lit(0))
-                        ).alias("n_docs"),
-                    )
-                    .where(F.col("n_docs") > 0)
-                )
             trim_batch_against_index(
                 batch, merged, id_col, text_col, k=k, min_docs=min_docs
             ).write.mode("append").parquet(out_dir)
-            # batch_id pinned to long: the compaction snapshot writes
-            # int64 and parquet schema inference must see ONE type
-            # across files (a mixed int32/int64 dir fails the read).
-            own.withColumn(
-                "batch_id", F.lit(batch_id).cast("long")
-            ).withColumn(
-                "thru", F.lit(None).cast("long")
-            ).write.mode("append").parquet(index_dir)
+            _append_index_rows(own, batch_id, index_dir)
         finally:
             own.unpersist()
             batch.unpersist()
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(docs, process, checkpoint_dir)
 
 
 def read_gram_index_merged(
     spark: SparkSession, index_dir: str, before_batch: int | None = None
 ) -> DataFrame:
     """Merged (h, n_docs) view of a streaming gram-index directory:
-    per-batch partial rows (batch_id >= 0) plus at most one compacted
-    snapshot (batch_id = -1 carrying ``thru`` = the highest batch it
-    folded). Replay-idempotent BOTH ways: a replayed batch with
-    batch_id <= thru is dropped by the watermark filter (its counts
-    already live in the snapshot); a replayed batch above the
-    watermark re-appends identical (batch_id, h) rows and dedups
-    away. One tiny driver action (the max-watermark probe) per read.
+    the visible partial rows plus at most one compacted snapshot,
+    deduped on (batch_id, h) and summed per h. Replay-idempotent BOTH
+    ways: a replayed batch with batch_id <= thru is dropped by the
+    watermark filter (its counts already live in the snapshot); a
+    replayed batch above the watermark re-appends identical
+    (batch_id, h) rows and dedups away. One tiny driver action (the
+    max-watermark probe) per read.
 
     ``before_batch``: upper bound on the partial rows included —
     only batch_id < before_batch contributes (snapshot rows always
     pass; they are bounded by their own ``thru``). The streaming
     trim passes its current batch_id here so a replayed batch never
-    trims against its own (uncommitted-checkpoint) index append
-    (ADVICE r10 replay determinism).
+    trims against its own (uncommitted-checkpoint) index append.
     """
     _check_gram_scheme(index_dir)
     df = spark.read.parquet(index_dir)
-    thru = df.agg(F.max("thru")).first()[0]
-    if thru is not None:
-        df = df.where((F.col("batch_id") == -1) | (F.col("batch_id") > thru))
-    if before_batch is not None:
-        df = df.where(
-            (F.col("batch_id") == -1) | (F.col("batch_id") < before_batch)
-        )
-    return (
-        df.dropDuplicates(["batch_id", "h"])
-        .groupBy("h")
-        .agg(F.sum("n_docs").alias("n_docs"))
+    return _merged_partials(
+        _visible(df, _snapshot_thru(df), before_batch),
+        ["h"],
+        F.sum("n_docs").alias("n_docs"),
     )
 
 
@@ -1592,9 +1629,10 @@ def compact_gram_index(spark: SparkSession, index_dir: str) -> int:
     watermark keeps the at-least-once contract intact ACROSS the
     compaction: a batch replayed after its rows were folded in is
     dropped by `read_gram_index_merged`'s watermark filter instead of
-    double-counting. Run between batches (single writer — the same
-    window `_swap_dir` already requires); the trigger=availableNow
-    drain or a stopped stream gives it.
+    double-counting. Run between batches (single writer — the
+    `_write_swap` window); the trigger=availableNow drain or a stopped
+    stream gives it. The scheme marker is stamped on the new dir
+    before the swap, so the compacted dir stays readable.
 
     Scale shape: one shuffle on h (the sum), one 24-byte row per
     distinct gram out; at scale write bucketed by h so trim joins
@@ -1602,31 +1640,20 @@ def compact_gram_index(spark: SparkSession, index_dir: str) -> int:
     """
     _check_gram_scheme(index_dir)
     df = spark.read.parquet(index_dir)
-    new_thru = df.agg(
-        F.greatest(F.max("batch_id"), F.coalesce(F.max("thru"), F.lit(-1)))
-    ).first()[0]
-    prev_thru = df.agg(F.max("thru")).first()[0]
-    if prev_thru is not None:
-        df = df.where(
-            (F.col("batch_id") == -1) | (F.col("batch_id") > prev_thru)
-        )
-    merged = (
-        df.dropDuplicates(["batch_id", "h"])
-        .groupBy("h")
-        .agg(F.sum("n_docs").alias("n_docs"))
-        .withColumn("batch_id", F.lit(-1).cast("long"))
-        .withColumn("thru", F.lit(new_thru).cast("long"))
+    thru = _fold_thru(df)
+    merged = _merged_partials(
+        _visible(df, _snapshot_thru(df)), ["h"], F.sum("n_docs").alias("n_docs")
     )
-    tmp = index_dir.rstrip("/") + "_compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    # the swap replaces the dir wholesale — re-stamp the scheme
-    # marker so the compacted dir stays readable
-    with open(os.path.join(tmp, _GRAM_SCHEME_MARKER), "w") as fh:
-        fh.write(str(_GRAM_HASH_SCHEME))
-    n = spark.read.parquet(tmp).count()
-    _swap_dir(tmp, index_dir)
-    return n
+    _write_swap(
+        _as_snapshot(merged, thru),
+        index_dir,
+        "_compacting",
+        before_swap=_stamp_gram_scheme,
+    )
+    return spark.read.parquet(index_dir).count()
+
+
+# --- more keyed state ------------------------------------------------
 
 
 def zscore_stream(
@@ -1658,13 +1685,6 @@ def zscore_stream(
     import math
 
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        f"{key_col} long, {id_col} long, cents long, "
-        "window_n int, zscore double"
-    )
-    state_schema = "win array<long>"
 
     def update(key, pdfs, state):
         win = list(state.get[0]) if state.exists else []
@@ -1695,15 +1715,12 @@ def zscore_stream(
                 columns=[key_col, id_col, "cents", "window_n", "zscore"],
             )
 
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, key_col, ts_col, watermark, update,
+        f"{key_col} long, {id_col} long, cents long, "
+        "window_n int, zscore double",
+        "win array<long>",
+        output_mode="append",
     )
 
 
@@ -1736,13 +1753,7 @@ def sequence_pattern_stream(
     (key, first_ts, second_ts, third_ts, span_micros).
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    out_schema = (
-        f"{key_col} long, first_ts timestamp, second_ts timestamp, "
-        "third_ts timestamp, span_micros long"
-    )
-    state_schema = "a_ts long, b_ts long, ba_ts long"
     NONE = -1
 
     def update(key, pdfs, state):
@@ -1780,15 +1791,12 @@ def sequence_pattern_stream(
                 }
             )
 
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state(
+        events, key_col, ts_col, watermark, update,
+        f"{key_col} long, first_ts timestamp, second_ts timestamp, "
+        "third_ts timestamp, span_micros long",
+        "a_ts long, b_ts long, ba_ts long",
+        output_mode="append",
     )
 
 
@@ -1811,6 +1819,9 @@ def kmeans_assign_stream(
     return assign(vectors, centroids, id_col=id_col, vec_col=vec_col)
 
 
+# --- partial-state sinks ---------------------------------------------
+
+
 def heavy_hitters_stream(
     rows: DataFrame,
     col: str,
@@ -1829,23 +1840,12 @@ def heavy_hitters_stream(
     Read side: `merged_heavy_hitters` sums the stored partials —
     undercounts add to ≤ N_total/(k+1) across any number of batches,
     so the batch operator's presence/estimate theorems carry over to
-    the stream unchanged. Replay safety: appends carry batch_id, and
-    the reader dedups (batch_id, item) first, so at-least-once
-    retries cannot double-count (the reference's replay story)."""
+    the stream unchanged. Replay-safe under the partial-state
+    protocol: the reader dedups (batch_id, item) first."""
     from ..operators.sketch import heavy_hitters
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        heavy_hitters(batch_df, col, k=k).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(summary_dir)
-
-    return (
-        rows.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _partials_stream(
+        rows, lambda b: heavy_hitters(b, col, k=k), summary_dir, checkpoint_dir
     )
 
 
@@ -1871,20 +1871,11 @@ def ivm_join_view_stream(
     engine's stream-stream surface)."""
     from ..operators import ivm
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ivm.join_agg_states(
-            batch_df, dim_df, on, group_by, state_cols
-        ).withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(states_dir)
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _partials_stream(
+        stream_df,
+        lambda b: ivm.join_agg_states(b, dim_df, on, group_by, state_cols),
+        states_dir,
+        checkpoint_dir,
     )
 
 
@@ -1893,11 +1884,10 @@ def merged_join_view(
 ) -> DataFrame:
     """Current view state: SUM-merge the stored per-batch deltas
     after (batch_id, keys) replay dedup."""
-    return (
-        spark.read.parquet(states_dir)
-        .dropDuplicates(["batch_id", *group_by])
-        .groupBy(*group_by)
-        .agg(*[F.sum(n).alias(n) for n in state_names])
+    return _merged_partials(
+        spark.read.parquet(states_dir),
+        group_by,
+        *[F.sum(n).alias(n) for n in state_names],
     )
 
 
@@ -1906,11 +1896,8 @@ def merged_heavy_hitters(
 ) -> DataFrame:
     """(item, est) over every stored batch summary; replay-safe via
     (batch_id, item) dedup before the sum."""
-    return (
-        spark.read.parquet(summary_dir)
-        .dropDuplicates(["batch_id", col])
-        .groupBy(col)
-        .agg(F.sum("est").alias("est"))
+    return _merged_partials(
+        spark.read.parquet(summary_dir), [col], F.sum("est").alias("est")
     )
 
 
@@ -1931,40 +1918,25 @@ def distinct_users_sketch_stream(
     — and the batch twin `hll_sketch_weekly_users` proves the merge
     algebra against exact counts."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.select(
-                F.to_date(ts_col).alias("day"), F.col(key_col)
-            )
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return (
+            batch_df.select(F.to_date(ts_col).alias("day"), F.col(key_col))
             .groupBy("day")
             .agg(F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("sketch"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(summary_dir)
         )
 
-    return (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _partials_stream(events, partial, summary_dir, checkpoint_dir)
 
 
 def merged_distinct_users(spark: SparkSession, summary_dir: str) -> DataFrame:
     """(day, distinct_users) from the stored sketch partials —
     replay-safe via (batch_id, day) dedup before the union-merge."""
-    return (
-        spark.read.parquet(summary_dir)
-        .dropDuplicates(["batch_id", "day"])
-        .groupBy("day")
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_union_agg("sketch", F.lit(True))
-            ).alias("distinct_users")
-        )
+    return _merged_partials(
+        spark.read.parquet(summary_dir),
+        ["day"],
+        F.hll_sketch_estimate(F.hll_union_agg("sketch", F.lit(True))).alias(
+            "distinct_users"
+        ),
     )
 
 
@@ -1983,30 +1955,15 @@ def constraint_report_stream(
     via (batch_id, constraint) dedup at read."""
     from ..operators.checks import constraint_report
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            constraint_report(batch_df, rules)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(report_dir)
-        )
-
-    return (
-        rows.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _partials_stream(
+        rows, lambda b: constraint_report(b, rules), report_dir, checkpoint_dir
     )
 
 
 def constraint_history(spark: SparkSession, report_dir: str) -> DataFrame:
     """(batch_id, constraint, n_rows, n_violations, passed) — the
     stored quality time series, deduped for at-least-once appends."""
-    return spark.read.parquet(report_dir).dropDuplicates(
-        ["batch_id", "constraint"]
-    )
+    return _merged_partials(spark.read.parquet(report_dir), ["constraint"])
 
 
 def running_user_totals_tws(events: DataFrame, key_col: str = "user_id",
@@ -2071,14 +2028,13 @@ def running_user_totals_tws(events: DataFrame, key_col: str = "user_id",
         def close(self) -> None:
             pass
 
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
     out_schema = (
         f"{key_col} long, n_events long, total_value double, "
         "last_ts timestamp"
     )
-    return df.groupBy(key_col).transformWithStateInPandas(
+    return _watermarked(events, ts_col, watermark).groupBy(
+        key_col
+    ).transformWithStateInPandas(
         statefulProcessor=RunningTotals(),
         outputStructType=out_schema,
         outputMode="Update",
@@ -2115,29 +2071,20 @@ def cms_stream(
     Misra–Gries stream) — asserted exactly by the parity test."""
     from ..operators.sketch import cms_table
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cms_table(batch_df, col, depth=depth, width=width).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(sketch_dir)
-
-    return (
-        rows.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _partials_stream(
+        rows,
+        lambda b: cms_table(b, col, depth=depth, width=width),
+        sketch_dir,
+        checkpoint_dir,
     )
 
 
 def merged_cms(spark: SparkSession, sketch_dir: str) -> DataFrame:
     """(r, bucket, cnt) summed over every stored batch sketch;
     replay-safe via (batch_id, r, bucket) dedup before the sum."""
-    return (
-        spark.read.parquet(sketch_dir)
-        .dropDuplicates(["batch_id", "r", "bucket"])
-        .groupBy("r", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
+    return _merged_partials(
+        spark.read.parquet(sketch_dir), ["r", "bucket"],
+        F.sum("cnt").alias("cnt"),
     )
 
 
@@ -2161,19 +2108,16 @@ def quantile_summary_stream(
     partitions) rows and compacts further by re-summarizing."""
     from ..operators.sketch import quantile_summary
 
-    # BREAKING (r6): the sink layout changed from flat append with
-    # batch_id as a data column to partitionBy("batch_id")
-    # directories (required for the overwrite-this-batch replay
-    # guarantee). A summary_dir written by the old layout mixes
-    # root-level parquet files with batch_id=N/ subdirectories, which
-    # Spark's partition discovery rejects — detected ONCE at stream
-    # setup (the stream itself only ever writes the partitioned
-    # layout, so re-checking per micro-batch is wasted listing I/O)
-    # with a clear migration error instead of a deep
-    # partition-discovery failure (ADVICE r6). Resolved through the
-    # Hadoop FileSystem API so s3://, hdfs://, and file:// sinks are
-    # all inspected — a local-only glob silently never fires on
-    # object-store URIs (ADVICE r7).
+    # The sink is partitioned by batch_id (the overwrite-this-batch
+    # replay guarantee below needs it). A summary_dir in the older
+    # flat layout mixes root-level parquet files with batch_id=N/
+    # subdirectories, which Spark's partition discovery rejects —
+    # detected ONCE at stream setup (the stream itself only ever
+    # writes the partitioned layout) with a clear migration error
+    # instead of a deep partition-discovery failure. Resolved through
+    # the Hadoop FileSystem API so s3://, hdfs://, and file:// sinks
+    # are all inspected — a local-only glob silently never fires on
+    # object-store URIs.
     def _reject_flat_legacy_sink() -> None:
         spark = rows.sparkSession
         jvm = spark._jvm
@@ -2201,13 +2145,11 @@ def quantile_summary_stream(
     _reject_flat_legacy_sink()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # Replay safety needs BOTH (ADVICE r5 — per-partition
-        # compaction is partitioning-dependent, so a retried batch
-        # could otherwise append a DIFFERENT weight for the same
-        # (batch_id, value) and keyed dedup would keep an arbitrary
-        # one, corrupting merged mass):
+        # Replay safety needs BOTH (per-partition compaction is
+        # partitioning-dependent, so a retried batch could otherwise
+        # append a DIFFERENT weight for the same (batch_id, value) and
+        # keyed dedup would keep an arbitrary one, corrupting merged
+        # mass):
         #  1. hash-repartition by value into ``parts`` partitions
         #     BEFORE compaction — each partition's value-multiset
         #     (and the sorted compaction of it) is then a pure
@@ -2234,12 +2176,7 @@ def quantile_summary_stream(
             .parquet(summary_dir)
         )
 
-    return (
-        rows.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(rows, process, checkpoint_dir)
 
 
 def merged_quantile_summary(spark: SparkSession, summary_dir: str) -> DataFrame:
@@ -2247,10 +2184,8 @@ def merged_quantile_summary(spark: SparkSession, summary_dir: str) -> DataFrame:
     add by concatenation; replay-safe because (batch_id, value) is a
     key of the stored rows (a re-delivered batch re-appends the same
     rows, deduped before use)."""
-    return (
-        spark.read.parquet(summary_dir)
-        .dropDuplicates(["batch_id", "value"])
-        .select("value", "weight")
+    return _merged_partials(spark.read.parquet(summary_dir), ["value"]).select(
+        "value", "weight"
     )
 
 
@@ -2278,43 +2213,24 @@ def bloom_ingest_stream(
     from ..operators.sketch import bloom_contains, bloom_words, bloom_words_map
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark_b = batch_df.sparkSession
-        try:
-            existing = (
-                spark_b.read.parquet(words_dir)
-                .groupBy("word_idx")
-                .agg(F.bit_or("word").alias("word"))
-            )
-        except AnalysisException as ex:  # first batch: empty filter
-            if not _is_path_missing(ex):
-                raise
-            existing = None
         keys = batch_df.select(col)
-        if existing is not None:
-            wm = bloom_words_map(existing)
+        words = _read_or_none(batch_df.sparkSession, words_dir)
+        if words is None:  # first batch: empty filter
+            verdicts = keys.select(col, F.lit(False).alias("maybe_seen"))
+        else:
+            wm = bloom_words_map(
+                words.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
+            )
             verdicts = keys.crossJoin(F.broadcast(wm)).select(
                 col,
                 bloom_contains(F.col(col), m_bits, k, F.col("m")).alias(
                     "maybe_seen"
                 ),
             )
-        else:
-            verdicts = keys.select(col, F.lit(False).alias("maybe_seen"))
-        verdicts.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(verdicts_dir)
-        bloom_words(keys, col, m_bits, k).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(words_dir)
+        _append_partial(verdicts, batch_id, verdicts_dir)
+        _append_partial(bloom_words(keys, col, m_bits, k), batch_id, words_dir)
 
-    return (
-        rows.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(rows, process, checkpoint_dir)
 
 
 def merged_bloom_words(spark: SparkSession, words_dir: str) -> DataFrame:
@@ -2341,7 +2257,8 @@ def cdc_apply_stream(
     change rows is merged into the persisted current-state table
     (last-writer by the exact (seq, tiebreak) order; a key whose
     LAST op is a delete leaves the table), and the new state is
-    promoted with the two-rename atomic swap.
+    promoted with the two-rename atomic swap (``state_dir`` must be a
+    local path; a URI raises ValueError before the query starts).
 
     Exactly-once: the merge is a pure function of (old state ∪
     batch) ranked by the monotone sequence columns, so a replayed
@@ -2350,44 +2267,25 @@ def cdc_apply_stream(
     upsert semantics can't express by accumulation; here it rides
     the same last-writer window as a tombstone row that filters out
     at emit. State stays one row per live key."""
+    _require_local(state_dir)
     seq_a, seq_b = seq_cols
+    cols = [key_col, seq_a, seq_b, op_col, *value_cols]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark_b = batch_df.sparkSession
-        cols = [key_col, seq_a, seq_b, op_col, *value_cols]
         incoming = batch_df.select(*cols)
-        try:
-            state = spark_b.read.parquet(state_dir).select(*cols)
-            merged = state.unionByName(incoming)
-        except AnalysisException as ex:  # first batch: no state yet
-            if not _is_path_missing(ex):
-                raise
-            merged = incoming
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(key_col).orderBy(
-            F.desc(seq_a), F.desc(seq_b)
+        state = _read_or_none(batch_df.sparkSession, state_dir)
+        merged = (
+            incoming if state is None
+            else state.select(*cols).unionByName(incoming)
         )
         # Tombstones (last op = D) STAY in the state table: dropping
         # them would let a replayed pre-delete U out-rank nothing and
         # resurrect the key. Readers filter via read_cdc_state.
-        nxt = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
+        _write_swap(
+            _latest(merged, [key_col], (seq_a, seq_b)), state_dir, "_next"
         )
-        tmp = state_dir + "_next"
-        nxt.write.mode("overwrite").parquet(tmp)
-        _swap_dir(tmp, state_dir)
 
-    return (
-        changes.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(changes, process, checkpoint_dir)
 
 
 def read_cdc_state(
@@ -2414,22 +2312,7 @@ def drift_counts_stream(
     not an approximation. Asserted by the parity test."""
     from ..plans.queries import drift_value_counts
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            drift_value_counts(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(counts_dir)
-        )
-
-    return (
-        rows.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _partials_stream(rows, drift_value_counts, counts_dir, checkpoint_dir)
 
 
 def merged_drift_counts(spark: SparkSession, counts_dir: str) -> DataFrame:
@@ -2437,11 +2320,11 @@ def merged_drift_counts(spark: SparkSession, counts_dir: str) -> DataFrame:
     count table; replay-safe because (batch_id, event_type, value) is
     a key of the stored rows (a re-delivered batch re-appends the
     same rows, deduped before the sum)."""
-    return (
-        spark.read.parquet(counts_dir)
-        .dropDuplicates(["batch_id", "event_type", "value"])
-        .groupBy("event_type", "value")
-        .agg(F.sum("ca").alias("ca"), F.sum("cb").alias("cb"))
+    return _merged_partials(
+        spark.read.parquet(counts_dir),
+        ["event_type", "value"],
+        F.sum("ca").alias("ca"),
+        F.sum("cb").alias("cb"),
     )
 
 
@@ -2460,9 +2343,7 @@ def embedding_stats_stream(
     isotropy ratio) is EXACTLY the batch value — the embedding twin
     of drift_counts_stream."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df: DataFrame) -> DataFrame:
         q = batch_df.select(
             F.posexplode(vec_col).alias("pos", "x")
         ).select(
@@ -2471,39 +2352,25 @@ def embedding_stats_stream(
             .cast("bigint")
             .alias("q"),
         )
-        (
-            q.groupBy("pos")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("q").alias("sd"),
-                F.sum(
-                    F.col("q").cast("decimal(19,0)")
-                    * F.col("q").cast("decimal(19,0)")
-                ).alias("td"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(stats_dir)
+        return q.groupBy("pos").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("q").alias("sd"),
+            F.sum(
+                F.col("q").cast("decimal(19,0)")
+                * F.col("q").cast("decimal(19,0)")
+            ).alias("td"),
         )
 
-    return (
-        rows.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _partials_stream(rows, partial, stats_dir, checkpoint_dir)
 
 
 def merged_embedding_stats(spark: SparkSession, stats_dir: str) -> DataFrame:
     """(pos, n, sd, td) summed over every stored batch state;
     replay-safe via (batch_id, pos) dedup before the sums."""
-    return (
-        spark.read.parquet(stats_dir)
-        .dropDuplicates(["batch_id", "pos"])
-        .groupBy("pos")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("sd").alias("sd"),
-            F.sum("td").alias("td"),
-        )
+    return _merged_partials(
+        spark.read.parquet(stats_dir),
+        ["pos"],
+        F.sum("n").alias("n"),
+        F.sum("sd").alias("sd"),
+        F.sum("td").alias("td"),
     )

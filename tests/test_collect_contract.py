@@ -26,8 +26,7 @@ ALLOWED = {
     ("plans/queries.py", "pca_project_top1"): "k-row component frame (k=1 here)",
     ("streaming/ingest.py", "_batch_stamp_epoch"): "distinct source filenames of one micro-batch / 1-row max aggregate",
     ("streaming/ingest.py", "stream_merge_to_staging.process"): "1-row scalar aggregate (max batch ts)",
-    ("streaming/ingest.py", "ivf_index_drift_report"): "2-row aggregate (new vs snapshot drift stats)",
-    ("streaming/ingest.py", "pq_index_drift_report"): "2-row aggregate (new vs snapshot recon_err stats)",
+    ("streaming/ingest.py", "_new_vs_snapshot"): "2-row aggregate (new vs snapshot stats of the IVF/PQ drift reports)",
     ("operators/kmeans.py", "update_centroids"): "n_cells centroid rows (k-means k)",
     ("operators/kmeans.py", "update_centroids_minibatch"): "k·dim partial rows (k-means k)",
     ("operators/graph.py", "connected_components"): "1-row convergence probe (sum of label changes)",

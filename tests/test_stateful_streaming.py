@@ -1627,3 +1627,129 @@ def test_streaming_url_dedup_on_canonical_key(spark, tmp_path):
         "https://example.com/p?a=1",
         "https://example.com/p?a=1&b=2",
     ]
+
+
+def test_interval_join_rejects_unknown_how(spark):
+    """``how`` is validated with a ValueError, not an assert (stripped
+    under ``python -O``): Spark itself would accept ``"left"`` with
+    different semantics than the watermark-proved outer join."""
+    left = spark.createDataFrame([], "user_id long, l_ts timestamp")
+    right = spark.createDataFrame([], "user_id long, r_ts timestamp")
+    with pytest.raises(ValueError, match="how must be"):
+        ingest.interval_join_streams(left, right, how="left")
+
+
+def _replay_sinks():
+    from pyspark.sql import functions as F
+
+    def ivm_view(spark):
+        dim = spark.createDataFrame(
+            [(0, 1), (1, 2), (2, 1), (3, 2)], "u_key long, region int"
+        )
+        return (
+            lambda s, out, ck: ingest.ivm_join_view_stream(
+                s, dim, F.col("user_id") == F.col("u_key"), ["region"],
+                {"n": F.lit(1), "total": F.col("value").cast("decimal(18,2)")},
+                out, ck,
+            ),
+            lambda out: ingest.merged_join_view(
+                spark, out, ["region"], ["n", "total"]
+            ),
+        )
+
+    # name -> spark -> (start(stream, out, ckpt), read(out))
+    return {
+        "heavy_hitters": lambda spark: (
+            lambda s, out, ck: ingest.heavy_hitters_stream(
+                s, "user_id", out, ck, k=2
+            ),
+            lambda out: ingest.merged_heavy_hitters(spark, out, "user_id"),
+        ),
+        "distinct_users": lambda spark: (
+            ingest.distinct_users_sketch_stream,
+            lambda out: ingest.merged_distinct_users(spark, out),
+        ),
+        "constraint_report": lambda spark: (
+            lambda s, out, ck: ingest.constraint_report_stream(
+                s, {"value_positive": F.col("value") > 0}, out, ck
+            ),
+            lambda out: ingest.constraint_history(spark, out),
+        ),
+        "drift_counts": lambda spark: (
+            ingest.drift_counts_stream,
+            lambda out: ingest.merged_drift_counts(spark, out),
+        ),
+        "embedding_stats": lambda spark: (
+            ingest.embedding_stats_stream,
+            lambda out: ingest.merged_embedding_stats(spark, out),
+        ),
+        "ivm_join_view": ivm_view,
+    }
+
+
+@pytest.mark.parametrize(
+    "sink",
+    [
+        "heavy_hitters",
+        *[
+            pytest.param(name, marks=pytest.mark.exhaustive)
+            for name in (
+                "distinct_users", "constraint_report", "drift_counts",
+                "embedding_stats", "ivm_join_view",
+            )
+        ],
+    ],
+)
+def test_partial_state_reader_dedups_a_retried_append(spark, tmp_path, sink):
+    """At-least-once foreachBatch: a batch retried after its append
+    landed (failure before the checkpoint commit) appends its partial
+    rows again. Simulate exactly that — re-append one stored batch's
+    rows with the stored schema — and the merged reader must return
+    the same rows as before (the (batch_id, keys) dedup). A
+    checkpointed re-run replays nothing, so it cannot reach the dedup;
+    this does."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for b in range(2):
+        path = src / f"b{b}.jsonl"
+        with open(path, "w", encoding="utf-8") as f:
+            for i in range(12):
+                f.write(json.dumps({
+                    "event_id": 100 * b + i,
+                    "ts": "2024-01-%02d 10:00:00" % (5 + 15 * b),
+                    "user_id": (i * (b + 1)) % 4,
+                    "event_type": "purchase" if i % 2 else "view",
+                    "value": float(i % 5) - 1.0,
+                    "embedding": [float((i * j + b) % 7) for j in range(4)],
+                }) + "\n")
+        os.utime(path, (1000 + b, 1000 + b))
+    stream = (
+        spark.readStream.schema(
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, embedding array<double>"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+    start, read = _replay_sinks()[sink](spark)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    start(stream, out, ckpt).awaitTermination(120)
+
+    def rows():
+        return sorted(map(tuple, read(out).collect()), key=repr)
+
+    before = rows()
+    assert before
+    stored = spark.read.parquet(out)
+    n_stored = stored.count()
+    retried = stored.where(F.col("batch_id") == 1).collect()
+    assert retried
+    spark.createDataFrame(retried, stored.schema).write.mode("append").parquet(
+        out
+    )
+    assert spark.read.parquet(out).count() == n_stored + len(retried)
+    assert rows() == before
