@@ -11,7 +11,9 @@ driver-side graph:
 repeated until no label changes. Each iteration is one join + one
 aggregation (two shuffles); convergence takes O(diameter) iterations
 — near-dup graphs are unions of small cliques, so diameter is tiny
-(2-3). A ``max_iter`` guard bounds pathological chains; for
+(2-3). A ``max_iter`` guard bounds pathological chains and raises
+``RuntimeError`` when it is hit, so unconverged labels never pass as
+components (the ``kcore`` / ``bellman_ford`` policy); for
 chain-heavy graphs ``connected_components_star`` below implements the
 alternating large-star/small-star contraction (O(log n) rounds) with
 the identical output contract.
@@ -32,7 +34,11 @@ def connected_components(
     """(vertex, component) for every vertex in ``edges``; component =
     the minimum vertex id reachable from it.
 
-    Deterministic: labels are ids, min is order-free.
+    Deterministic: labels are ids, min is order-free. Raises
+    ``RuntimeError`` when the labels have not reached their fixpoint
+    within ``max_iter`` rounds (the round that sees an unchanged label
+    sum counts, so a graph whose labels settle in r rounds needs
+    ``max_iter >= r + 1``).
     """
     # Materialize the symmetric edge set ONCE: it is re-read every
     # round, and `edges` may itself be an expensive pipeline (the
@@ -104,9 +110,11 @@ def connected_components(
         ).collect()[0]["s"]
         labels = new_labels
         if new_sum == prev_sum:
-            break
+            return labels
         prev_sum = new_sum
-    return labels
+    raise RuntimeError(
+        f"connected_components: no fixpoint within max_iter={max_iter} rounds"
+    )
 
 
 def dedup_clusters(
@@ -187,7 +195,8 @@ def connected_components_star(
     graphs): min-label needs O(diameter) rounds there, the star
     algorithm O(log n). For near-dup cliques (diameter 2-3) min-label
     wins on constant factors. Output: (vertex, component) — identical
-    contract, cross-checked in tests.
+    contract, cross-checked in tests. Raises ``RuntimeError`` when the
+    edge set has not reached its fixpoint within ``max_iter`` rounds.
     """
     e = (
         edges.select(
@@ -249,6 +258,10 @@ def connected_components_star(
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixpoint within max_iter={max_iter} rounds"
+        )
 
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))

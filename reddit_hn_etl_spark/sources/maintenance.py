@@ -37,6 +37,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localfs import require_local
+
+_SWAPPED = "compacted and erased tables"
+
 
 def plan_compaction(
     df: DataFrame,
@@ -72,8 +76,11 @@ def compact_partitions(
     within a table, counts are exact pre-write, and the knob maps
     directly to the scan-task memory budget. The deterministic row →
     bucket assignment (hash of the sort key mod n_files) makes reruns
-    byte-stable for identical input.
+    byte-stable for identical input. ``root`` must be a local path (a
+    ``scheme://`` URI raises ``ValueError`` before anything is read or
+    written): the swap is two local renames.
     """
+    require_local(root, _SWAPPED)
     pcols = list(partition_cols)
     df = spark.read.parquet(root)
     plan = plan_compaction(df, pcols, rows_per_file).select(
@@ -209,8 +216,10 @@ def erase_keys(
     anti-join frame instead), one rewrite. Parquet is immutable —
     erasure IS a rewrite; what this operator adds is atomicity and
     the audit trail. Old versions/backups must be vacuumed separately
-    for the erasure to be complete (publish.vacuum).
+    for the erasure to be complete (publish.vacuum). ``table_dir`` must
+    be a local path, as for ``compact_partitions``.
     """
+    require_local(table_dir, _SWAPPED)
     df = spark.read.parquet(table_dir)
     before = df.count()
     vals = list(values)

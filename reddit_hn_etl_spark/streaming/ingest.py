@@ -29,7 +29,7 @@ retry a no-op, each written once in the private helpers:
 * **Replay-watermark indexes** (gram, minhash, IVF, IVF-PQ): per-batch
   rows carry ``batch_id`` and a null ``thru`` (`_append_index_rows`).
   Compaction folds history into one snapshot (``batch_id = -1``,
-  ``thru`` = the highest batch folded, `_fold_thru`) and promotes it
+  ``thru`` = the highest batch folded, `_watermarks`) and promotes it
   with write-new-then-swap (`_write_swap`). A reader sees the snapshot
   plus partials above its ``thru`` and, for a batch reading the index
   it is about to append to, below its own ``batch_id`` (`_visible`);
@@ -39,20 +39,20 @@ retry a no-op, each written once in the private helpers:
 
 The swaps and the gram-scheme marker use local-filesystem calls, so
 those dirs must be local paths: `_require_local` refuses a
-``scheme://`` URI before anything is written.
+``scheme://`` URI before anything is written (`localfs.require_local`).
 """
 
 from __future__ import annotations
 
 import os
-import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
+from ..localfs import require_local
 from ..plans.hn_pipeline import transform_raw
 from ..schema import RAW_SCHEMA
 
@@ -150,18 +150,10 @@ def _merged_partials(df: DataFrame, keys: list[str], *aggs) -> DataFrame:
 
 # --- local dirs and the replay-watermark index protocol ------------
 
-_URI = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
-
-
 def _require_local(path: str) -> None:
-    """Refuse a ``scheme://`` path. The swap and marker helpers work
-    through ``os``/``shutil``, which would take ``s3://b/x`` for the
-    relative local path ``s3:/b/x`` and write there."""
-    if _URI.match(path):
-        raise ValueError(
-            f"{path!r} is a URI; streaming state and index dirs are "
-            "swapped with local-filesystem renames and must be local paths"
-        )
+    """Refuse a ``scheme://`` path: the swap and marker helpers work
+    through ``os``/``shutil``."""
+    require_local(path, "streaming state and index dirs")
 
 
 def _has_data(path: str) -> bool:
@@ -264,12 +256,18 @@ def _snapshot_thru(df: DataFrame) -> int | None:
     return df.agg(F.max("thru")).first()[0]
 
 
-def _fold_thru(df: DataFrame) -> int:
-    """``thru`` of a new snapshot of ``df``: the highest batch it
-    folds, or the previous watermark if that is higher."""
-    return df.agg(
-        F.greatest(F.max("batch_id"), F.coalesce(F.max("thru"), F.lit(-1)))
-    ).first()[0]
+def _watermarks(df: DataFrame) -> tuple[int | None, int]:
+    """``(snapshot thru, fold thru)`` from one 1-row probe: the
+    current snapshot's watermark (None before the first compaction)
+    and the ``thru`` of a new snapshot of ``df`` — the highest batch
+    it folds, or the previous watermark if that is higher."""
+    row = df.agg(
+        F.max("thru").alias("thru"),
+        F.greatest(
+            F.max("batch_id"), F.coalesce(F.max("thru"), F.lit(-1))
+        ).alias("fold"),
+    ).first()
+    return row["thru"], row["fold"]
 
 
 def _as_snapshot(df: DataFrame, thru: int) -> DataFrame:
@@ -306,54 +304,75 @@ def _latest(df: DataFrame, keys: list[str], order=("batch_id",)) -> DataFrame:
 
 
 def _pre_batch_index(
-    spark: SparkSession, index_dir: str, batch_id: int, read_merged, unfold
+    spark: SparkSession, index_dir: str, batch_id: int, merged_view, unfold
 ) -> DataFrame | None:
     """The index as it stood before ``batch_id`` (None on the first
-    batch), so a replayed batch reproduces its original output.
-    ``read_merged(before_batch)`` hides the batch's own partial rows;
-    if a compaction already folded the then-uncommitted batch into the
-    snapshot (``thru >= batch_id``), ``unfold(merged)`` takes its
-    contribution back out."""
+    batch), so a replayed batch reproduces its original output. The
+    dir is read once and probed once: ``merged_view(df, thru,
+    before_batch)`` is the reader's merged view of that one frame,
+    hiding the batch's own partial rows; if a compaction already
+    folded the then-uncommitted batch into the snapshot
+    (``thru >= batch_id``), ``unfold(merged)`` takes its contribution
+    back out."""
     idx_df = _read_index_dir(spark, index_dir)
     if idx_df is None:
         return None
-    merged = read_merged(batch_id)
     thru = _snapshot_thru(idx_df)
+    merged = merged_view(idx_df, thru, batch_id)
     if thru is not None and thru >= batch_id:
         return unfold(merged)
     return merged
 
 
-def _row_index_merged(
-    df: DataFrame, key_cols: list[str], before_batch: int | None = None
+def _row_index_view(
+    df: DataFrame,
+    thru: int | None,
+    key_cols: list[str],
+    before_batch: int | None = None,
 ) -> DataFrame:
     """Shared read of the row-identity indexes (minhash bands, IVF
     cells, PQ codes — a replayed batch re-appends IDENTICAL rows,
-    unlike the gram index's summed counts): the visible rows resolved
-    last-write-wins per key, protocol columns stripped. Replays of one
-    batch append bit-identical rows, so the within-batch pick is
+    unlike the gram index's summed counts), given the snapshot's
+    ``thru``: the visible rows resolved last-write-wins per key,
+    protocol columns stripped. Replays of one batch append
+    bit-identical rows, so the within-batch pick is
     content-deterministic. Caveat for multi-row-per-entity keys
     (minhash bands key (id, band)): LWW resolves each surviving key to
     its newest row but cannot DELETE a stale key an updated entity no
     longer produces — content-changing redelivery there still needs
     disjoint ids upstream or an explicit rebuild."""
-    return _latest(
-        _visible(df, _snapshot_thru(df), before_batch), key_cols
-    ).drop("batch_id", "thru")
+    return _latest(_visible(df, thru, before_batch), key_cols).drop(
+        "batch_id", "thru"
+    )
+
+
+def _swap_snapshot(
+    merged: DataFrame, fold: int, index_dir: str, suffix: str,
+    partition_col: str | None = None, before_swap=None,
+) -> int:
+    """Stamp ``merged`` as the snapshot folding batches up to ``fold``
+    and swap it in (`_write_swap`); returns the rows written, counted
+    by an ``Observation`` on the write instead of a read-back job."""
+    obs = Observation()
+    _write_swap(
+        _as_snapshot(merged, fold).observe(obs, F.count(F.lit(1)).alias("n")),
+        index_dir, suffix, partition_col, before_swap,
+    )
+    return obs.get["n"]
 
 
 def _compact_row_index(
-    spark: SparkSession, index_dir: str, key_cols: list[str], partition_col: str
+    df: DataFrame, index_dir: str, key_cols: list[str], partition_col: str
 ) -> int:
-    """Shared compaction of the row-identity indexes: the merged read,
-    stamped as the snapshot and swapped in, so compaction never changes
-    what a reader sees. Returns the snapshot row count. Run between
-    batches (single writer)."""
-    df = spark.read.parquet(index_dir)
-    thru = _fold_thru(df)
-    merged = _row_index_merged(df, key_cols)
-    _write_swap(_as_snapshot(merged, thru), index_dir, "_compacting", partition_col)
-    return spark.read.parquet(index_dir).count()
+    """Shared compaction of the row-identity indexes, given the dir's
+    frame: the merged read, stamped as the snapshot and swapped in, so
+    compaction never changes what a reader sees. Returns the snapshot
+    row count. Run between batches (single writer)."""
+    thru, fold = _watermarks(df)
+    return _swap_snapshot(
+        _row_index_view(df, thru, key_cols), fold, index_dir, "_compacting",
+        partition_col,
+    )
 
 
 def _append_drift_row(
@@ -986,9 +1005,7 @@ def screen_stream_against_minhash_index(
             # batch's own ids takes its folded rows back out.
             existing = _pre_batch_index(
                 spark_b, index_dir, batch_id,
-                lambda before: read_minhash_index_merged(
-                    spark_b, index_dir, id_col, before_batch=before
-                ),
+                lambda df, thru, before: _minhash_view(df, thru, id_col, before),
                 lambda merged: merged.join(
                     batch_df.select(id_col), id_col, "left_anti"
                 ),
@@ -1113,9 +1130,8 @@ def read_ivf_index_merged(
     """Merged (id, cell, vector, _cn) view of a streaming IVF index
     directory — the shared replay-watermark read (last-write-wins per
     id). Rows feed `similarity.knn_join_ivf_index` directly."""
-    return _row_index_merged(
-        spark.read.parquet(index_dir), [id_col], before_batch
-    )
+    df = spark.read.parquet(index_dir)
+    return _row_index_view(df, _snapshot_thru(df), [id_col], before_batch)
 
 
 def compact_ivf_index(
@@ -1138,17 +1154,17 @@ def compact_ivf_index(
     natural observation point — it sees exactly the newly-indexed rows
     before they merge into the snapshot baseline. See
     `ivf_index_drift_report` for the metric and SCALING.md
-    §Similarity for the recenter trigger thresholds."""
+    §Similarity for the recenter trigger thresholds. The report and
+    the fold share one read of the dir and one watermark probe."""
+    df = spark.read.parquet(index_dir)
     if centroids is not None:
         _append_drift_row(
             spark,
-            ivf_index_drift_report(
-                spark, index_dir, centroids, id_col=id_col, vec_col=vec_col
-            ),
+            _ivf_drift(spark, df, _snapshot_thru(df), centroids, id_col, vec_col),
             _DRIFT_REPORT_SCHEMA,
             index_dir,
         )
-    return _compact_row_index(spark, index_dir, [id_col], "cell")
+    return _compact_row_index(df, index_dir, [id_col], "cell")
 
 
 _DRIFT_REPORT_SCHEMA = (
@@ -1197,6 +1213,19 @@ def ivf_index_drift_report(
     LWW window (the id-keyed shuffle every merged read already
     pays), two small aggregations. Nothing driver-sized beyond the
     returned dict."""
+    df = spark.read.parquet(index_dir)
+    return _ivf_drift(spark, df, _snapshot_thru(df), centroids, id_col, vec_col)
+
+
+def _ivf_drift(
+    spark: SparkSession,
+    df: DataFrame,
+    thru: int | None,
+    centroids: list[list[float]],
+    id_col: str,
+    vec_col: str,
+) -> dict:
+    """`ivf_index_drift_report` over an opened dir with its ``thru``."""
     import numpy as np
 
     c = np.asarray(centroids, dtype=np.float64)
@@ -1205,8 +1234,6 @@ def ivf_index_drift_report(
         [(int(i), [float(x) for x in row]) for i, row in enumerate(cn)],
         "cell int, _cvec array<double>",
     )
-    df = spark.read.parquet(index_dir)
-    thru = _snapshot_thru(df)
     visible = _latest(_visible(df, thru), [id_col])
     dot = F.aggregate(
         F.zip_with(F.col(vec_col), F.col("_cvec"), lambda a, b: a * b),
@@ -1300,9 +1327,8 @@ def read_pq_index_merged(
     """Merged (id, cell, codes) view of a streaming IVF-PQ index —
     the shared replay-watermark read; rows feed
     `similarity.pq_knn_join(encoded=...)` directly."""
-    return _row_index_merged(
-        spark.read.parquet(index_dir), [id_col], before_batch
-    )
+    df = spark.read.parquet(index_dir)
+    return _row_index_view(df, _snapshot_thru(df), [id_col], before_batch)
 
 
 def compact_pq_index(
@@ -1324,7 +1350,9 @@ def compact_pq_index(
             _PQ_DRIFT_REPORT_SCHEMA,
             index_dir,
         )
-    return _compact_row_index(spark, index_dir, [id_col], "cell")
+    return _compact_row_index(
+        spark.read.parquet(index_dir), index_dir, [id_col], "cell"
+    )
 
 
 _PQ_DRIFT_REPORT_SCHEMA = (
@@ -1434,9 +1462,13 @@ def recenter_ivf_index(
     O(corpus) reassign+rewrite, not the O(corpus × iters) refit."""
     from ..operators.similarity import _assign_probe_cells, kmeans_centroids
 
-    merged = read_ivf_index_merged(spark, index_dir, id_col=id_col)
-    thru = _fold_thru(spark.read.parquet(index_dir))
-    vectors = merged.select(id_col, vec_col).localCheckpoint(eager=True)
+    df = spark.read.parquet(index_dir)
+    thru, fold = _watermarks(df)
+    vectors = (
+        _row_index_view(df, thru, [id_col])
+        .select(id_col, vec_col)
+        .localCheckpoint(eager=True)
+    )
     if centroids is not None:
         if len(centroids) != n_cells or any(
             len(c) != dim for c in centroids
@@ -1453,7 +1485,7 @@ def recenter_ivf_index(
         vectors, id_col, vec_col, centroids, 1,
         vec_out=vec_col, norm_out="_cn",
     )
-    _write_swap(_as_snapshot(rebuilt, thru), index_dir, "_recentering", "cell")
+    _write_swap(_as_snapshot(rebuilt, fold), index_dir, "_recentering", "cell")
     return centroids
 
 
@@ -1470,9 +1502,17 @@ def read_minhash_index_merged(
     against its own uncommitted append. Returns plain (id, sig, band,
     bucket) rows — the exact `minhash_index` schema `index_pairs`
     consumes."""
-    return _row_index_merged(
-        spark.read.parquet(index_dir), [id_col, "band"], before_batch
-    ).select(id_col, "sig", "band", "bucket")
+    df = spark.read.parquet(index_dir)
+    return _minhash_view(df, _snapshot_thru(df), id_col, before_batch)
+
+
+def _minhash_view(
+    df: DataFrame, thru: int | None, id_col: str, before_batch: int | None = None
+) -> DataFrame:
+    """`read_minhash_index_merged` over an opened dir with its ``thru``."""
+    return _row_index_view(df, thru, [id_col, "band"], before_batch).select(
+        id_col, "sig", "band", "bucket"
+    )
 
 
 def compact_minhash_index(spark: SparkSession, index_dir: str) -> int:
@@ -1488,11 +1528,11 @@ def compact_minhash_index(spark: SparkSession, index_dir: str) -> int:
     compactions. Run between batches (single writer). Scale shape:
     one dedup shuffle; output is docs × bands rows, one parquet
     file set per band partition instead of one per batch forever."""
+    df = spark.read.parquet(index_dir)
     id_cols = [
-        c for c in spark.read.parquet(index_dir).columns
-        if c not in ("batch_id", "thru", "sig", "bucket")
+        c for c in df.columns if c not in ("batch_id", "thru", "sig", "bucket")
     ]
-    return _compact_row_index(spark, index_dir, id_cols, "band")
+    return _compact_row_index(df, index_dir, id_cols, "band")
 
 
 def trim_stream_against_gram_index(
@@ -1570,11 +1610,7 @@ def trim_stream_against_gram_index(
 
         try:
             merged = _pre_batch_index(
-                spark_b, index_dir, batch_id,
-                lambda before: read_gram_index_merged(
-                    spark_b, index_dir, before_batch=before
-                ),
-                unfold,
+                spark_b, index_dir, batch_id, _gram_view, unfold
             )
             if merged is None:  # first batch: no index yet
                 merged = spark_b.createDataFrame([], "h long, n_docs long")
@@ -1609,10 +1645,15 @@ def read_gram_index_merged(
     """
     _check_gram_scheme(index_dir)
     df = spark.read.parquet(index_dir)
+    return _gram_view(df, _snapshot_thru(df), before_batch)
+
+
+def _gram_view(
+    df: DataFrame, thru: int | None, before_batch: int | None = None
+) -> DataFrame:
+    """`read_gram_index_merged` over an opened dir with its ``thru``."""
     return _merged_partials(
-        _visible(df, _snapshot_thru(df), before_batch),
-        ["h"],
-        F.sum("n_docs").alias("n_docs"),
+        _visible(df, thru, before_batch), ["h"], F.sum("n_docs").alias("n_docs")
     )
 
 
@@ -1640,17 +1681,11 @@ def compact_gram_index(spark: SparkSession, index_dir: str) -> int:
     """
     _check_gram_scheme(index_dir)
     df = spark.read.parquet(index_dir)
-    thru = _fold_thru(df)
-    merged = _merged_partials(
-        _visible(df, _snapshot_thru(df)), ["h"], F.sum("n_docs").alias("n_docs")
-    )
-    _write_swap(
-        _as_snapshot(merged, thru),
-        index_dir,
-        "_compacting",
+    thru, fold = _watermarks(df)
+    return _swap_snapshot(
+        _gram_view(df, thru), fold, index_dir, "_compacting",
         before_swap=_stamp_gram_scheme,
     )
-    return spark.read.parquet(index_dir).count()
 
 
 # --- more keyed state ------------------------------------------------

@@ -48,6 +48,20 @@ def test_very_long_chain_converges_within_default_iters(spark):
     assert set(cc.values()) == {0} and len(cc) == n + 1
 
 
+def test_components_raise_when_max_iter_runs_out(spark):
+    """A 10-vertex path cannot settle in one round: both CC operators
+    raise naming themselves and the budget instead of returning
+    unconverged labels (the kcore / bellman_ford policy)."""
+    import pytest
+
+    from reddit_hn_etl_spark.operators.graph import connected_components_star
+
+    edges = _edges(spark, [(i, i + 1) for i in range(9)])
+    for fn in (connected_components, connected_components_star):
+        with pytest.raises(RuntimeError, match=f"{fn.__name__}: .*max_iter=1 "):
+            fn(edges, max_iter=1).collect()
+
+
 def test_empty_edges(spark):
     # A corpus with zero near-dup pairs must flow through cleanly:
     # no vertices, no clusters, no drops — not an error.

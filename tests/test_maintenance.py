@@ -206,3 +206,28 @@ def test_erase_keys_rewrites_atomically(spark, tmp_path):
 
     names = os.listdir(tmp_path)
     assert not [n for n in names if "__eras" in n]
+
+
+def test_swaps_refuse_uri_paths(spark, tmp_path, monkeypatch):
+    """Both hand-rolled swaps rename through os/shutil, which would
+    take ``s3://bucket/t`` for the relative local path ``s3:/bucket/t``
+    and a ``file://`` URI for a path that does not exist after Spark
+    wrote next to it. Each refuses a URI with a ValueError naming it
+    before anything is read or written."""
+    import re
+
+    import pytest
+
+    from reddit_hn_etl_spark.sources.maintenance import erase_keys
+
+    monkeypatch.chdir(tmp_path)
+    root = str(tmp_path / "tbl")
+    _fragmented_table(spark, root)
+    before = sorted(os.listdir(tmp_path))
+    for uri in ("s3://bucket/t", "file://" + root):
+        with pytest.raises(ValueError, match=f"{re.escape(uri)}.*URI"):
+            compact_partitions(spark, uri, ["event_date"], "id", rows_per_file=10)
+        with pytest.raises(ValueError, match=f"{re.escape(uri)}.*URI"):
+            erase_keys(spark, uri, "id", [1])
+    assert not (tmp_path / "s3:").exists()
+    assert sorted(os.listdir(tmp_path)) == before
