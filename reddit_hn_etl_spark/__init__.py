@@ -26,7 +26,6 @@ from .operators.joins import asof_join, interval_join_count
 from .operators.merge import MergeMetrics, merge_resolve, merge_upsert
 from .operators.sessions import session_summary, sessionize
 from .operators.similarity import (
-    cosine_pairs_blocked,
     knn_cosine_bruteforce,
     knn_cosine_lsh,
 )
@@ -41,7 +40,6 @@ __all__ = [
     "assert_not_null",
     "assert_unique_key",
     "asof_join",
-    "cosine_pairs_blocked",
     "dedup_exact",
     "dedup_keep_last",
     "duplicate_keys",

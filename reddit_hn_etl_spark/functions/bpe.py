@@ -126,8 +126,7 @@ def train_bpe_distributed(
     long tail); passing ``top_words=None`` explicitly opts into the
     full vocabulary, which at open-vocabulary 100 TB scale is
     data-sized — guarded by a loud ``max_vocab_rows`` check rather
-    than a silent driver OOM (same contract as
-    ``similarity.cosine_pairs_blocked``)."""
+    than a silent driver OOM, checked before the collect."""
     wf = word_frequencies(
         df, text_col=text_col, min_count=min_count, top_words=top_words
     )

@@ -1,28 +1,75 @@
-"""Connected components on DataFrames: transitive dedup clusters.
+"""Graph operators on DataFrames: connected components (transitive
+dedup clusters), triangles, PageRank, BFS, label propagation, k-core
+and Bellman-Ford — entirely in DataFrame algebra, no GraphFrames
+dependency, no driver-side graph.
 
 Near-duplicate detection yields PAIRS; correct dedup needs CLUSTERS
-(a~b, b~c ⇒ {a,b,c} keep one). This module computes connected
-components with the iterated min-label propagation ("hash-to-min"
-style) entirely in DataFrame algebra — no GraphFrames dependency, no
-driver-side graph:
+(a~b, b~c ⇒ {a,b,c} keep one). ``connected_components`` computes them
+by iterated min-label propagation ("hash-to-min" style) with a
+pointer-jumping pass:
 
     label(v) ← min(label(v), min over neighbors' labels)
+    label(v) ← label(label(v))
 
-repeated until no label changes. Each iteration is one join + one
-aggregation (two shuffles); convergence takes O(diameter) iterations
-— near-dup graphs are unions of small cliques, so diameter is tiny
-(2-3). A ``max_iter`` guard bounds pathological chains and raises
-``RuntimeError`` when it is hit, so unconverged labels never pass as
-components (the ``kcore`` / ``bellman_ford`` policy); for
-chain-heavy graphs ``connected_components_star`` below implements the
-alternating large-star/small-star contraction (O(log n) rounds) with
-the identical output contract.
+repeated until no label changes; rounds are O(log diameter).
+
+Two private seams carry every operator:
+
+* ``_sym`` / ``_edges`` build the edge list: both directions of every
+  input edge (or the directed list), as ``(src, dst, *carry)``.
+* ``_fixpoint`` is the one probe-driven loop (CC, ``kcore``,
+  ``bellman_ford``). Each round checkpoints ``step(state)`` lazily,
+  so the probe's 1-row aggregate both computes and persists the
+  round — one driver job per round. The loop stops when the probe
+  value repeats and raises ``RuntimeError`` when the round budget
+  runs out, so unconverged state never passes as the answer. Every
+  probe is a fixpoint test because the state moves monotonically:
+  CC labels only fall (exact Σlabel over ``decimal(38,0)``, which
+  cannot overflow on 64-bit ids), k-core edges are only removed
+  (edge count), Bellman-Ford distances only fall while vertices are
+  only added (vertex count, exact Σdist). ``_probe`` holds the
+  module's one ``.collect()``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _probe(frame: DataFrame, *aggs: Column) -> tuple:
+    """The values of a 1-row aggregate over ``frame``."""
+    return tuple(frame.agg(*aggs).collect()[0])
+
+
+def _fixpoint(op, state, step, probe, max_rounds, budget, prev=None):
+    """Iterate ``state ← step(state)`` until ``probe(state)`` repeats.
+
+    ``prev`` is the probe value of the initial state when the caller
+    already knows it; the default None stops the first round only when
+    its probe is None too (an empty aggregate)."""
+    for _ in range(max_rounds):
+        state = step(state).localCheckpoint(eager=False)
+        cur = probe(state)
+        if cur == prev:
+            return state
+        prev = cur
+    raise RuntimeError(f"{op}: no fixpoint within {budget}={max_rounds} rounds")
+
+
+def _sym(edges, src, dst, *carry):
+    """Both directions of every edge: (src, dst, *carry) ∪ (dst, src, *carry)."""
+    fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), *carry)
+    back = [F.col("dst").alias("src"), F.col("src").alias("dst"), *fwd.columns[2:]]
+    return fwd.unionByName(fwd.select(*back))
+
+
+def _edges(edges, src, dst, undirected, *carry):
+    """(src, dst, *carry): symmetrized when ``undirected``, else as given."""
+    if undirected:
+        return _sym(edges, src, dst, *carry)
+    return edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), *carry)
 
 
 def connected_components(
@@ -44,76 +91,48 @@ def connected_components(
     # round, and `edges` may itself be an expensive pipeline (the
     # near-dup candidate join in curate_documents) that must not be
     # recomputed per iteration.
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = sym.select(F.col("u").alias("vertex")).distinct().select(
+    sym = _sym(edges, src, dst).distinct().localCheckpoint(eager=True)
+    labels = sym.select(F.col("src").alias("vertex")).distinct().select(
         "vertex", F.col("vertex").alias("component")
     )
 
-    prev_sum: int | None = None
-    for _ in range(max_iter):
+    def step(labels: DataFrame) -> DataFrame:
         # neighbor-min pass: smallest label among each vertex's
         # neighborhood (including itself)
         neigh = (
-            sym.join(labels, sym.v == labels.vertex)
-            .select(F.col("u").alias("vertex"), F.col("component"))
+            sym.join(labels, sym.dst == labels.vertex)
+            .select(F.col("src").alias("vertex"), F.col("component"))
             .unionByName(labels)
             .groupBy("vertex")
             .agg(F.min("component").alias("component"))
         )
-        # Pointer-jumping pass (r13): follow each label's OWN label —
-        # label(v) ← label(label(v)) — the classic path-halving
-        # accelerant. Plain neighbor-min needs O(diameter) rounds and
-        # the semantic-dedup similarity graph measured diameter ~12
-        # (14 rounds at sf0.1, ~0.4 s/round of pure round latency);
-        # with compression labels reach the component minimum in
-        # O(log diameter) rounds. Both invariants that make the
-        # fixpoint the min reachable id survive: label(v) stays inside
-        # v's component (labels only ever take member ids, and
-        # label(label(v)) is reachable from v by transitivity) and
-        # stays monotone non-increasing (the jump target is itself a
-        # min over a set containing the old value). A stalled Σ means
-        # neither pass changed anything — labels are neighbor-min
-        # stable, hence constant per component and equal to the min id
-        # (same convergence argument as before). `neigh` is inlined
-        # twice below; per round that recomputes one tiny join+agg —
-        # rounds are latency-bound, not compute-bound, which is the
-        # point of trading a second reference for fewer rounds.
-        jumped = (
-            neigh.join(
-                neigh.select(
-                    F.col("vertex").alias("_lv"),
-                    F.col("component").alias("_lc"),
-                ),
-                F.col("component") == F.col("_lv"),
-                "left",
-            )
-            .select(
-                "vertex",
-                F.coalesce("_lc", "component").alias("component"),
-            )
-        )
-        # Lazy checkpoint + probe in ONE job (r13): the eager
-        # checkpoint ran a materialization job and the Σ probe ran a
-        # second one per round; marking the checkpoint lazy lets the
-        # probe's aggregate materialize (and persist) the round's
-        # labels in the same job. Labels stay monotone non-increasing,
-        # so Σcomponent is strictly decreasing until the fixpoint: an
-        # unchanged sum IS convergence.
-        new_labels = jumped.localCheckpoint(eager=False)
-        new_sum = new_labels.agg(
-            F.sum("component").cast("long").alias("s")
-        ).collect()[0]["s"]
-        labels = new_labels
-        if new_sum == prev_sum:
-            return labels
-        prev_sum = new_sum
-    raise RuntimeError(
-        f"connected_components: no fixpoint within max_iter={max_iter} rounds"
+        # Pointer-jumping pass: label(v) ← label(label(v)), the
+        # path-halving accelerant. Plain neighbor-min needs O(diameter)
+        # rounds (the semantic-dedup similarity graph has diameter ~12
+        # at sf0.1); with compression labels reach the component
+        # minimum in O(log diameter) rounds. The fixpoint is still the
+        # min reachable id: label(v) only takes member ids of v's
+        # component and never increases (the jump target is a min over
+        # a set containing the old value). A stalled Σ means neither
+        # pass changed anything — labels are neighbor-min stable, hence
+        # constant per component and equal to its min id. `neigh` is
+        # inlined twice; rounds are latency-bound, not compute-bound.
+        return neigh.join(
+            neigh.select(
+                F.col("vertex").alias("_lv"), F.col("component").alias("_lc")
+            ),
+            F.col("component") == F.col("_lv"),
+            "left",
+        ).select("vertex", F.coalesce("_lc", "component").alias("component"))
+
+    # Σlabel is exact over decimal(38,0): a long sum overflows (ANSI
+    # error) on large or negative hash-style ids. The empty graph sums
+    # to NULL, which matches the default prev=None: it settles in its
+    # first round.
+    label_sum = F.sum(F.col("component").cast("decimal(38,0)"))
+    return _fixpoint(
+        "connected_components", labels, step, lambda s: _probe(s, label_sum)[0],
+        max_iter, "max_iter",
     )
 
 
@@ -166,115 +185,6 @@ def keep_best_per_cluster(
         "component",
         score_col,
         (F.row_number().over(w) == 1).alias("is_rep"),
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC 2014) — the O(log n)-round alternative to
-    ``connected_components``'s O(diameter) min-label propagation.
-
-    Each round is two passes over the edge set; every pass is one
-    symmetric-neighborhood groupBy (min per node) + a filtered emit:
-
-      * large-star: every neighbor v > u repoints to
-        m(u) = min(N(u) ∪ {u})
-      * small-star: every neighbor v ≤ u, and u itself, repoints to m(u)
-
-    The edge set contracts toward per-component stars centered on the
-    min id; convergence = edge-set fixpoint (checksum + count probe on
-    the checkpointed frame). Labels then read directly off the stars.
-
-    Use when components can be long chains (lineage graphs, link
-    graphs): min-label needs O(diameter) rounds there, the star
-    algorithm O(log n). For near-dup cliques (diameter 2-3) min-label
-    wins on constant factors. Output: (vertex, component) — identical
-    contract, cross-checked in tests. Raises ``RuntimeError`` when the
-    edge set has not reached its fixpoint within ``max_iter`` rounds.
-    """
-    e = (
-        edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        edges.select(F.col(src).alias("x"))
-        .unionByName(edges.select(F.col(dst).alias("x")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _star(frame: DataFrame, large: bool) -> DataFrame:
-        sym = frame.unionByName(
-            frame.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        j = sym.join(mins, "u")
-        if large:
-            out = j.where(F.col("v") > F.col("u")).select("v", "m")
-        else:
-            out = j.where(F.col("v") <= F.col("u")).select("v", "m").unionByName(
-                mins.select(F.col("u").alias("v"), "m")
-            )
-        return (
-            out.select(
-                F.greatest(F.col("v"), F.col("m")).alias("u"),
-                F.least(F.col("v"), F.col("m")).alias("v"),
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _probe(frame: DataFrame) -> tuple[int, int]:
-        # bit_xor: order-independent set checksum that cannot overflow
-        # (sum(hash) trips ANSI long-overflow on adversarial inputs)
-        row = frame.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    prev = None
-    for _ in range(max_iter):
-        # lazy checkpoint + probe in one job (r13): the probe's
-        # count/xor aggregate materializes (and persists) the round's
-        # edge set itself — one driver job per round instead of two.
-        e = _star(_star(e, large=True), large=False).localCheckpoint(
-            eager=False
-        )
-        cur = _probe(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint within max_iter={max_iter} rounds"
-        )
-
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    labels = sym.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("component")
-    )
-    return (
-        verts.join(labels, verts.x == labels.u, "left")
-        .select(
-            F.col("x").alias("vertex"),
-            F.coalesce("component", F.col("x")).alias("component"),
-        )
     )
 
 
@@ -420,28 +330,12 @@ def pagerank(
         # is then identical cross-engine and the plain-SUM noise sits
         # as far below the caller's rounding grid as the unweighted
         # case (see the damping-contraction argument above).
-        e = edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight_col).alias("w"),
-        )
-        if undirected:
-            e = e.unionByName(
-                e.select(
-                    F.col("dst").alias("src"),
-                    F.col("src").alias("dst"),
-                    F.col("w"),
-                )
-            )
-        e = e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+        e = _edges(
+            edges, src, dst, undirected, F.col(weight_col).alias("w")
+        ).groupBy("src", "dst").agg(F.sum("w").alias("w"))
         deg = e.groupBy("src").agg(F.sum("w").alias("deg"))
     else:
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        if undirected:
-            e = e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-        e = e.distinct().withColumn("w", F.lit(1))
+        e = _edges(edges, src, dst, undirected).distinct().withColumn("w", F.lit(1))
         deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     # one materialization reused by every round
     ed = e.join(deg, "src").localCheckpoint(eager=True)
@@ -510,10 +404,7 @@ def bfs_distances(
     float policy at all; the DuckDB oracle is the textbook bounded
     recursive CTE with MIN(d) GROUP BY v.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if undirected:
-        e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.distinct().localCheckpoint(eager=True)
+    e = _edges(edges, src, dst, undirected).distinct().localCheckpoint(eager=True)
     settled = (
         seeds.select(F.col(seed_col).alias("vertex"))
         .distinct()
@@ -563,12 +454,7 @@ def label_propagation(
     connected components / PageRank, checkpointed per round.
     Returns (vertex, community) after exactly ``n_iter`` rounds.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if undirected:
-        e = e.union(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    e = e.distinct().localCheckpoint(eager=True)
+    e = _edges(edges, src, dst, undirected).distinct().localCheckpoint(eager=True)
     labels = (
         e.select(F.col("src").alias("vertex"))
         .distinct()
@@ -628,45 +514,36 @@ def kcore(
     co-purchase graph (2.4M symmetric edges) that shuffle was the
     dominant cost of the whole query: 5.2s edge build → 2.4s (r6).
     """
-    s_col = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    d_col = edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
-    if canonical:
-        # Precondition (caller-asserted): distinct edges with s < d,
-        # which also excludes self-loops — violating it detectably
-        # inflates degrees (contract-tested).
-        e = s_col.unionByName(d_col).localCheckpoint(eager=True)
-    else:
-        # Self-loop filter AFTER the union: filtering only s_col lets
-        # (x,x) re-enter via the reversed d_col side, survive
-        # distinct(), and inflate x's degree by 1 (ADVICE r6).
-        e = (
-            s_col.unionByName(d_col)
-            .where(F.col("s") != F.col("d"))
-            .distinct()
-            .localCheckpoint(eager=True)
+    e = _sym(edges, src, dst)
+    if not canonical:
+        # Self-loop filter AFTER the union: filtering only one side
+        # lets (x,x) re-enter via the reversed side, survive
+        # distinct(), and inflate x's degree by 1. (canonical=True:
+        # the caller-asserted precondition — distinct edges with
+        # src < dst — also excludes self-loops; violating it
+        # detectably inflates degrees, contract-tested.)
+        e = e.where(F.col("src") != F.col("dst")).distinct()
+    e = e.localCheckpoint(eager=True)
+
+    def peel(e: DataFrame) -> DataFrame:
+        keep = (
+            e.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .where(F.col("deg") >= k)
+            .select("src")
         )
-    prev = e.count()
-    for _ in range(max_rounds):
-        deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.where(F.col("deg") >= k).select("s")
-        # lazy checkpoint + count probe in one job (r13): the eager
-        # materialization job and the count job per round fuse — the
-        # count computes (and persists) the round's edge set itself.
-        e2 = (
-            e.join(keep, "s", "left_semi")
-            .join(keep.select(F.col("s").alias("d")), "d", "left_semi")
-            .localCheckpoint(eager=False)
+        return e.join(keep, "src", "left_semi").join(
+            keep.select(F.col("src").alias("dst")), "dst", "left_semi"
         )
-        after = e2.count()
-        e = e2
-        if after == prev:
-            return (
-                e.groupBy("s")
-                .agg(F.count(F.lit(1)).alias("core_degree"))
-                .select(F.col("s").alias("vertex"), "core_degree")
-            )
-        prev = after
-    raise RuntimeError(f"kcore: no fixpoint within {max_rounds} rounds")
+
+    core = _fixpoint(
+        "kcore", e, peel, DataFrame.count, max_rounds, "max_rounds", prev=e.count()
+    )
+    return (
+        core.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("core_degree"))
+        .select(F.col("src").alias("vertex"), "core_degree")
+    )
 
 
 def bellman_ford(
@@ -683,39 +560,44 @@ def bellman_ford(
     Treats edges as directed (symmetrize upstream for undirected
     graphs); weights must be non-negative for the fixpoint to be the
     true distance. Per round: one dist⋈edges join + a min aggregate
-    (the CC round budget), localCheckpoint-ed; the driver probe
-    counts changed vertices and stops at 0. Converges in ≤ (max
-    shortest-path hop count) rounds; raises on non-convergence so a
-    partial relaxation can never pass as the answer. Distances stay
-    exact integers when weights are integers."""
-    e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d"), F.col(weight).alias("w")
+    (the CC round budget), localCheckpoint-ed; the driver probe reads
+    (vertex count, exact Σdist) and stops when it repeats. That is a
+    fixpoint test because distances only fall and vertices are only
+    added: an unchanged count means no new vertex, and an unchanged
+    exact sum of non-increasing distances means none fell. Converges
+    in ≤ (max shortest-path hop count) rounds; raises on
+    non-convergence so a partial relaxation can never pass as the
+    answer. Distances stay exact integers when weights are integers
+    (Σdist is then summed over ``decimal(38,0)``; fractional weights
+    probe an order-free checksum of (vertex, dist) instead, since a
+    float sum can absorb a small fall)."""
+    e = _edges(edges, src, dst, False, F.col(weight).alias("w"))
+    e = e.localCheckpoint(eager=True)
+    n_src = len({int(v) for v in sources})
+    dist = e.sparkSession.createDataFrame(
+        [(int(v), 0) for v in sources], "vertex long, dist long"
     ).localCheckpoint(eager=True)
-    dist = (
-        e.sparkSession.createDataFrame(
-            [(int(v), 0) for v in sources], "vertex long, dist long"
-        )
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
-        relaxed = (
-            dist.join(e, dist.vertex == e.s)
-            .select(F.col("d").alias("vertex"), (F.col("dist") + F.col("w")).alias("dist"))
+
+    def relax(dist: DataFrame) -> DataFrame:
+        return (
+            dist.join(e, dist.vertex == e.src)
+            .select(
+                F.col("dst").alias("vertex"),
+                (F.col("dist") + F.col("w")).alias("dist"),
+            )
             .unionByName(dist)
             .groupBy("vertex")
             .agg(F.min("dist").alias("dist"))
-            # lazy: the changed-count probe below materializes (and
-            # persists) the round's distances in the same job (r13)
-            .localCheckpoint(eager=False)
         )
-        changed = (
-            relaxed.join(
-                dist.withColumnRenamed("dist", "old"), "vertex", "left"
-            )
-            .where(F.col("old").isNull() | (F.col("dist") != F.col("old")))
-            .count()
-        )
-        dist = relaxed
-        if changed == 0:
-            return dist
-    raise RuntimeError(f"bellman_ford: no fixpoint within {max_rounds} rounds")
+
+    if isinstance(e.schema["w"].dataType, T.IntegralType):
+        moved = F.sum(F.col("dist").cast("decimal(38,0)"))
+    else:
+        moved = F.bit_xor(F.xxhash64("vertex", "dist"))
+    # prev: the seed frame's probe under the exact sum (distinct seeds,
+    # all at 0); the checksum never matches it, which costs at most
+    # one extra round
+    return _fixpoint(
+        "bellman_ford", dist, relax, lambda d: _probe(d, F.count(F.lit(1)), moved),
+        max_rounds, "max_rounds", prev=(n_src, 0 if n_src else None),
+    )

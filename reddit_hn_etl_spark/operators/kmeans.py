@@ -318,47 +318,9 @@ def semantic_dedup_kmeans(
     dial; cross-cell near-dups are the documented recall trade.
     """
     from .dedup import fan_out_narrow_input
-    from .graph import connected_components
-    from .similarity import dot, l2_norm
+    from .similarity import _cell_dedup
 
-    b = assign(
+    cells = assign(
         fan_out_narrow_input(corpus), centroids, id_col=id_col, vec_col=vec_col
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        l2_norm(F.col(vec_col)).alias("_n"),
-        F.col("cluster_id").alias("_cell"),
-    )
-    a = b.select(
-        F.col(id_col).alias("doc_a"),
-        F.col(vec_col).alias("_va"),
-        F.col("_n").alias("_na"),
-        "_cell",
-    )
-    c = b.select(
-        F.col(id_col).alias("doc_b"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_n").alias("_nb"),
-        "_cell",
-    )
-    pairs = (
-        a.join(c, "_cell")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .where(
-            dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-            >= threshold
-        )
-        .select("doc_a", "doc_b")
-    )
-    cc = connected_components(pairs)
-    return (
-        corpus.select(F.col(id_col))
-        .join(cc, F.col(id_col) == F.col("vertex"), "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-            (
-                F.coalesce(F.col("component"), F.col(id_col)) == F.col(id_col)
-            ).alias("is_rep"),
-        )
-    )
+    ).select(F.col(id_col), F.col(vec_col), F.col("cluster_id").alias("_cell"))
+    return _cell_dedup(corpus, cells, id_col, vec_col, threshold)

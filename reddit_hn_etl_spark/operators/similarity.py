@@ -429,9 +429,9 @@ def cosine_pairs_grid(
     and parallelism are controlled. For sub-quadratic candidate
     generation use LSH banding (knn_cosine_lsh) instead.
 
-    Emits (vec_a, vec_b, cosine_sim) with vec_a < vec_b, ROUND(4) —
-    bit-identical contract to :func:`cosine_pairs_blocked` (same
-    normalized-float64 GEMM; asserted in tests).
+    Emits (vec_a, vec_b, cosine_sim) with vec_a < vec_b, ROUND(4) of
+    the normalized-float64 GEMM (checked against a numpy all-pairs
+    reference in tests).
     """
     import math
 
@@ -503,80 +503,10 @@ def cosine_pairs_grid(
     )
 
 
-def cosine_pairs_blocked(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.5,
-    max_rows: int = 2_000_000,
-) -> DataFrame:
-    """All-pairs cosine ≥ threshold via a blocked matrix product
-    against a driver-collected, broadcast corpus matrix.
-
-    The Arrow-batched escape hatch for dense vector math: interpreted
-    higher-order array functions cost ~µs per element; numpy's BLAS
-    does the same block in nanoseconds. Each partition's block A
-    (n×d) multiplies the broadcast, pre-normalized corpus matrix Mᵀ
-    (d×N) in one GEMM; pairs above threshold stream out.
-
-    Scale contract: the corpus matrix must fit on the driver AND in
-    every executor (1M×256-d float64 ≈ 2 GB) — enforced by a loud
-    ``max_rows`` guard rather than a silent OOM. Above the bound use
-    :func:`cosine_pairs_grid` (same exact result, no single-node
-    materialization) or LSH banding for sub-quadratic candidates.
-    Emits (vec_a, vec_b, cosine_sim) with vec_a < vec_b, ROUND(4).
-    """
-    import numpy as np
-
-    n = corpus.count()
-    if n > max_rows:
-        raise ValueError(
-            f"cosine_pairs_blocked: corpus has {n} rows > max_rows="
-            f"{max_rows}; the collect/broadcast kernel would OOM the "
-            "driver. Use cosine_pairs_grid (distributed exact) or "
-            "knn_cosine_lsh (sub-quadratic approximate) instead."
-        )
-    rows = corpus.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    norms[norms == 0] = 1.0
-    matn = mat / norms[:, None]
-
-    spark = corpus.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(matn)
-
-    def block(batches):
-        import pandas as pd
-
-        all_ids = b_ids.value
-        m = b_mat.value
-        pos = {int(v): i for i, v in enumerate(all_ids)}
-        for pdf in batches:
-            idx = np.array([pos[int(v)] for v in pdf[id_col]], dtype=np.int64)
-            a = m[idx]                       # (n, d), already normalized
-            sims = a @ m.T                   # one GEMM: (n, N)
-            ai, bj = np.nonzero(sims >= threshold)
-            left = all_ids[idx[ai]]
-            right = all_ids[bj]
-            keep = left < right              # dedup + drop self-pairs
-            yield pd.DataFrame(
-                {
-                    "vec_a": left[keep],
-                    "vec_b": right[keep],
-                    "cosine_sim": np.round(sims[ai[keep], bj[keep]], 4),
-                }
-            )
-
-    return corpus.select(id_col).mapInPandas(
-        block, "vec_a long, vec_b long, cosine_sim double"
-    )
-
-
 def _assign_cells(df, id_col, vec_col, centroids, extra_cols=()):
     """(id, cell) assignment via blocked GEMM against broadcast
-    centroids (numpy; same Arrow escape hatch as cosine_pairs_blocked)."""
+    centroids (numpy in ``mapInPandas``: one GEMM per Arrow batch instead
+    of interpreted per-element array functions)."""
     import numpy as np
 
     spark = df.sparkSession
@@ -1000,13 +930,25 @@ def semantic_dedup(
     vectors.
     """
     from .dedup import fan_out_narrow_input
-    from .graph import connected_components
 
-    b = fan_out_narrow_input(corpus).select(
+    cells = fan_out_narrow_input(corpus).select(
         F.col(id_col),
         F.col(vec_col),
-        l2_norm(F.col(vec_col)).alias("_n"),
         sign_cell(F.col(vec_col), planes).alias("_cell"),
+    )
+    return _cell_dedup(corpus, cells, id_col, vec_col, threshold)
+
+
+def _cell_dedup(corpus, cells, id_col, vec_col, threshold):
+    """The SemDeDup tail shared by the sign-cell and k-means variants:
+    exact cosine pairs ≥ ``threshold`` within each ``_cell`` of
+    ``cells`` (id_col, vec_col, _cell), connected components over
+    them, singletons restored from ``corpus`` as their own reps.
+    Output: (id, component, is_rep)."""
+    from .graph import connected_components
+
+    b = cells.select(
+        F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("_n"), "_cell"
     )
     a = b.select(
         F.col(id_col).alias("doc_a"),
@@ -1030,15 +972,14 @@ def semantic_dedup(
         .select("doc_a", "doc_b")
     )
     cc = connected_components(pairs)
+    component = F.coalesce(F.col("component"), F.col(id_col))
     return (
         corpus.select(F.col(id_col))
         .join(cc, F.col(id_col) == F.col("vertex"), "left")
         .select(
             F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-            (
-                F.coalesce(F.col("component"), F.col(id_col)) == F.col(id_col)
-            ).alias("is_rep"),
+            component.alias("component"),
+            (component == F.col(id_col)).alias("is_rep"),
         )
     )
 

@@ -128,8 +128,7 @@ def test_encode_ids_marks_unknown_symbols(spark):
 
 def test_unbounded_vocab_guard_fires(spark, sf_dir):
     """Explicit top_words=None opts into the full vocabulary; the
-    loud max_vocab_rows guard must fail before the driver collect
-    (same contract as similarity.cosine_pairs_blocked)."""
+    loud max_vocab_rows guard must fail before the driver collect."""
     import pytest
 
     docs = read_table(spark, sf_dir, "documents")

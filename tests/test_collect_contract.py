@@ -29,9 +29,7 @@ ALLOWED = {
     ("streaming/ingest.py", "_new_vs_snapshot"): "2-row aggregate (new vs snapshot stats of the IVF/PQ drift reports)",
     ("operators/kmeans.py", "update_centroids"): "n_cells centroid rows (k-means k)",
     ("operators/kmeans.py", "update_centroids_minibatch"): "k·dim partial rows (k-means k)",
-    ("operators/graph.py", "connected_components"): "1-row convergence probe (sum of label changes)",
-    ("operators/graph.py", "connected_components_star._probe"): "1-row convergence probe",
-    ("operators/similarity.py", "cosine_pairs_blocked"): "guarded: loud max_rows check precedes the collect",
+    ("operators/graph.py", "_probe"): "1-row convergence probe aggregate (one per fixpoint round)",
     ("operators/similarity.py", "knn_cosine_bruteforce"): "guarded: loud rows×dim budget (max_query_rows×64 cells, r13) and row ceiling (max_query_rows×8) checked BEFORE the collect (r12 Arrow scoring kernel; same memory class as the broadcast relation it replaced)",
     ("operators/similarity.py", "kmeans_centroids"): "n_cells seed rows + n_cells centroid rows per iter",
     ("operators/checks.py", "assert_unique_key"): "limit(1) probe",

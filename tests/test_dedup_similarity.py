@@ -232,8 +232,11 @@ def test_lsh_knn_recall_against_bruteforce(spark, sf_dir):
 
 
 def test_grid_pairs_match_collect_kernel(spark, sf_dir):
-    """The distributed grid kernel must emit EXACTLY the pairs of the
-    collect/broadcast kernel (same normalized-float64 GEMM math)."""
+    """The distributed grid kernel must emit EXACTLY the pairs of a
+    collected numpy all-pairs reference (same normalized-float64 GEMM
+    math, ROUND(4), vec_a < vec_b)."""
+    import numpy as np
+
     from reddit_hn_etl_spark.sources.tables import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
@@ -243,24 +246,21 @@ def test_grid_pairs_match_collect_kernel(spark, sf_dir):
             emb, threshold=0.35, n_blocks=4
         ).collect()
     }
-    blocked = {
-        (r.vec_a, r.vec_b): r.cosine_sim
-        for r in similarity.cosine_pairs_blocked(
-            emb, threshold=0.35
-        ).collect()
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    m = np.array([r[1] for r in rows], dtype=np.float64)
+    norms = np.sqrt((m * m).sum(axis=1))
+    norms[norms == 0] = 1.0
+    mn = m / norms[:, None]
+    sims = mn @ mn.T
+    ai, bj = np.nonzero(sims >= 0.35)
+    want = {
+        (int(ids[i]), int(ids[j])): float(np.round(sims[i, j], 4))
+        for i, j in zip(ai, bj)
+        if ids[i] < ids[j]
     }
-    assert grid == blocked
+    assert grid == want
     assert len(grid) > 0
-
-
-def test_blocked_kernel_size_guard(spark, sf_dir):
-    import pytest
-
-    from reddit_hn_etl_spark.sources.tables import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="max_rows"):
-        similarity.cosine_pairs_blocked(emb, threshold=0.35, max_rows=5)
 
 
 def test_ivf_knn_recall_against_bruteforce(spark, sf_dir):
