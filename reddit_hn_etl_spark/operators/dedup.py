@@ -88,9 +88,19 @@ def fan_out_narrow_input(df: DataFrame) -> DataFrame:
     repartition only fires when the input is narrower than the
     cluster, and shuffling a narrow input is by definition cheap.
     Results are partition-invariant either way.
+
+    The decision reads the physical plan and runs no Spark job. An
+    input planned under adaptive execution — one with an exchange or
+    a subquery, or one reading a cached plan that has one — passes
+    through unchanged: adaptive execution sizes a shuffle's output
+    partitions itself, and asking such a plan for its partition count
+    would execute its stages then and there, only for the caller's
+    job to compute them again. Any other input's partition count is
+    known without running it.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    if "AdaptiveSparkPlan" in df._jdf.queryExecution().executedPlan().toString():
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -1,7 +1,7 @@
 """Graph operators on DataFrames: connected components (transitive
 dedup clusters), triangles, PageRank, BFS, label propagation, k-core
-and Bellman-Ford — entirely in DataFrame algebra, no GraphFrames
-dependency, no driver-side graph.
+and Bellman-Ford — in DataFrame algebra, no GraphFrames dependency,
+no driver-side graph.
 
 Near-duplicate detection yields PAIRS; correct dedup needs CLUSTERS
 (a~b, b~c ⇒ {a,b,c} keep one). ``connected_components`` computes them
@@ -13,7 +13,7 @@ pointer-jumping pass:
 
 repeated until no label changes; rounds are O(log diameter).
 
-Two private seams carry every operator:
+Three private seams carry the operators:
 
 * ``_sym`` / ``_edges`` build the edge list: both directions of every
   input edge (or the directed list), as ``(src, dst, *carry)``.
@@ -29,13 +29,36 @@ Two private seams carry every operator:
   (edge count), Bellman-Ford distances only fall while vertices are
   only added (vertex count, exact Σdist). ``_probe`` holds the
   module's one ``.collect()``.
+* ``_finish`` is the in-memory finish of ``connected_components``,
+  ``kcore``, ``label_propagation`` and ``pagerank`` (Kiveris et al.,
+  SoCC 2014: once what remains is small, finish it in memory). Each
+  of them checkpoints its edge frame eagerly once (``_checkpoint``),
+  and an ``Observation`` on that checkpoint's own job counts its rows
+  and null rows — no extra Spark job. When the frame is at most
+  ``spark.sql.autoBroadcastJoinThreshold`` (rows × the schema's
+  default row size; the rule Spark uses to broadcast a relation, 64
+  MiB in the engine's session, about 4M two-long edges), holds no
+  null and its ids are integers or strings, one Python-worker task
+  (``coalesce(1).mapInPandas``) runs a numpy kernel over the whole
+  edge list and the result is checkpointed lazily: building the
+  result then runs only the edge checkpoint's jobs, and the caller's
+  action runs one more. Otherwise — and always at a threshold of −1
+  — the distributed loops run unchanged. Both paths give the same
+  rows under the same schema; PageRank may differ by float summation
+  order (≤ 1e-12). One ``logging`` record per call names the
+  operator, the path taken, the edge rows and size against the
+  threshold, and the distributed rounds run.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import logging
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+_log = logging.getLogger(__name__)
 
 
 def _probe(frame: DataFrame, *aggs: Column) -> tuple:
@@ -44,18 +67,187 @@ def _probe(frame: DataFrame, *aggs: Column) -> tuple:
 
 
 def _fixpoint(op, state, step, probe, max_rounds, budget, prev=None):
-    """Iterate ``state ← step(state)`` until ``probe(state)`` repeats.
+    """Iterate ``state ← step(state)`` until ``probe(state)`` repeats;
+    returns the final state and the rounds run.
 
     ``prev`` is the probe value of the initial state when the caller
     already knows it; the default None stops the first round only when
     its probe is None too (an empty aggregate)."""
-    for _ in range(max_rounds):
+    for rounds in range(1, max_rounds + 1):
         state = step(state).localCheckpoint(eager=False)
         cur = probe(state)
         if cur == prev:
-            return state
+            return state, rounds
         prev = cur
     raise RuntimeError(f"{op}: no fixpoint within {budget}={max_rounds} rounds")
+
+
+def _checkpoint(frame: DataFrame) -> tuple[DataFrame, int, int]:
+    """``frame`` checkpointed eagerly, with its row count and the count
+    of rows holding a null, both observed on the checkpoint's own job."""
+    obs = Observation()
+    null = F.lit(False)
+    for c in frame.columns:
+        null = null | F.col(c).isNull()
+    frame = frame.observe(
+        obs, F.count(F.lit(1)).alias("rows"), F.count_if(null).alias("nulls")
+    ).localCheckpoint(eager=True)
+    return frame, obs.get["rows"], obs.get["nulls"]
+
+
+def _finish(op, edges, rows, nulls, kernel, like, distributed):
+    """The size rule of the graph operators (module docstring).
+
+    ``edges`` is the operator's eagerly checkpointed edge frame with
+    ``(src, dst)`` first, ``rows`` and ``nulls`` its observed counts.
+    In memory, ``kernel`` maps a pandas frame of all edge rows to the
+    result rows, typed by the schema of ``like()``, a lazy frame of
+    the distributed result (analysis only, no job). ``distributed()``
+    returns the distributed result and the rounds it ran."""
+    conf = edges.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    size = rows * edges._jdf.schema().defaultSize()
+    ids = (edges.schema[c].dataType for c in ("src", "dst"))
+    if size <= limit and not nulls and all(
+        isinstance(t, (T.IntegralType, T.StringType)) for t in ids
+    ):
+        path, rounds = "in-memory", 0
+        result = (
+            edges.coalesce(1)
+            .mapInPandas(lambda batches: _whole(kernel, batches), like().schema)
+            .localCheckpoint(eager=False)
+        )
+    else:
+        path = "distributed"
+        result, rounds = distributed()
+    _log.info(
+        "%s: %s path, %d edge rows, %d B against autoBroadcastJoinThreshold=%d B, "
+        "%d distributed rounds", op, path, rows, size, limit, rounds,
+    )
+    return result
+
+
+def _whole(kernel, batches):
+    """``kernel`` over the concatenation of every Arrow batch of the
+    one partition; an edge list with no rows yields no rows."""
+    import pandas as pd
+
+    frames = [b for b in batches if len(b)]
+    if frames:
+        yield kernel(pd.concat(frames, ignore_index=True))
+
+
+def _factorize(pdf):
+    """(ids, s, d): the sorted distinct ids of ``pdf``'s src and dst
+    columns and each edge's endpoints as positions into ``ids``.
+    Position order is id order, so a min over positions is a min over
+    ids."""
+    import numpy as np
+
+    src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
+    ids, pos = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    return ids, pos[: len(src)], pos[len(src):]
+
+
+def _components_kernel(pdf):
+    """Min-label propagation with pointer jumping over a symmetric edge
+    list (every vertex is some edge's src): (vertex, component)."""
+    import numpy as np
+    import pandas as pd
+
+    ids, s, d = _factorize(pdf)
+    order = np.argsort(s, kind="stable")
+    s, d = s[order], d[order]
+    starts = np.flatnonzero(np.r_[True, s[1:] != s[:-1]])
+    heads = s[starts]
+    label = np.arange(len(ids))
+    while True:
+        new = label.copy()
+        new[heads] = np.minimum(label[heads], np.minimum.reduceat(label[d], starts))
+        while True:  # jump every label to its root
+            jumped = new[new]
+            if np.array_equal(jumped, new):
+                break
+            new = jumped
+        if np.array_equal(new, label):
+            break
+        label = new
+    return pd.DataFrame({"vertex": ids, "component": ids[label]})
+
+
+def _kcore_kernel(k, pdf):
+    """Peeling to the fixpoint over an edge multiset: drop every edge
+    with an endpoint of out-degree < ``k`` until none is dropped;
+    (vertex, core_degree) per surviving src."""
+    import numpy as np
+    import pandas as pd
+
+    ids, s, d = _factorize(pdf)
+    while True:
+        keep = np.bincount(s, minlength=len(ids)) >= k
+        alive = keep[s] & keep[d]
+        if alive.all():
+            break
+        s, d = s[alive], d[alive]
+    deg = np.bincount(s, minlength=len(ids))
+    v = np.flatnonzero(deg)
+    return pd.DataFrame({"vertex": ids[v], "core_degree": deg[v]})
+
+
+def _communities_kernel(n_iter, pdf):
+    """``n_iter`` synchronous label-propagation rounds over a distinct
+    edge list: each labeled src sends its label to its dsts; a dst
+    takes its most frequent label, ties to the smallest, and only
+    dsts stay labeled. (vertex, community)."""
+    import numpy as np
+    import pandas as pd
+
+    ids, s, d = _factorize(pdf)
+    n = len(ids)
+    labeled = np.zeros(n, dtype=bool)
+    labeled[s] = True
+    label = np.arange(n)
+    for _ in range(n_iter):
+        sent = labeled[s]
+        key, votes = np.unique(d[sent] * n + label[s[sent]], return_counts=True)
+        dd, ll = key // n, key % n
+        order = np.lexsort((ll, -votes, dd))
+        dd, ll = dd[order], ll[order]
+        first = np.r_[True, dd[1:] != dd[:-1]]
+        labeled = np.zeros(n, dtype=bool)
+        labeled[dd[first]] = True
+        label = label.copy()
+        label[dd[first]] = ll[first]
+    v = np.flatnonzero(labeled)
+    return pd.DataFrame({"vertex": ids[v], "community": ids[label[v]]})
+
+
+def _pagerank_kernel(n_iter, damping, seeds, pdf):
+    """``n_iter`` power-iteration rounds over (src, dst, w) rows: the
+    vertices are the srcs, deg a src's out-strength Σw, p the uniform
+    (or ``seeds``) teleport vector, and each round
+    r ← (1−d)·p + d·Σ r[src]·w/deg[src] over the in-edges. Edges are
+    summed in (dst, src) order, so equal inputs give equal bits
+    whatever the row order. (vertex, pagerank)."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pdf.sort_values(["dst", "src"], kind="stable")
+    ids, s, d = _factorize(pdf)
+    w = pdf["w"].to_numpy(dtype=np.float64)
+    deg = np.bincount(s, weights=w, minlength=len(ids))[s]
+    verts = np.unique(s)
+    if seeds is None:
+        p = np.full(len(verts), 1.0 / len(verts))
+    else:
+        p = np.where(np.isin(ids[verts], seeds), 1.0 / len(seeds), 0.0)
+    r = np.zeros(len(ids))
+    r[verts] = p
+    for _ in range(n_iter):
+        sums = np.bincount(d, weights=r[s] * w / deg, minlength=len(ids))
+        r = np.zeros(len(ids))
+        r[verts] = (1.0 - damping) * p + damping * sums[verts]
+    return pd.DataFrame({"vertex": ids[verts], "pagerank": r[verts]})
 
 
 def _sym(edges, src, dst, *carry):
@@ -81,17 +273,23 @@ def connected_components(
     """(vertex, component) for every vertex in ``edges``; component =
     the minimum vertex id reachable from it.
 
-    Deterministic: labels are ids, min is order-free. Raises
-    ``RuntimeError`` when the labels have not reached their fixpoint
-    within ``max_iter`` rounds (the round that sees an unchanged label
-    sum counts, so a graph whose labels settle in r rounds needs
-    ``max_iter >= r + 1``).
+    Deterministic: labels are ids, min is order-free. On the
+    distributed path, raises ``RuntimeError`` when the labels have not
+    reached their fixpoint within ``max_iter`` rounds (the round that
+    sees an unchanged label sum counts, so a graph whose labels settle
+    in r rounds needs ``max_iter >= r + 1``). The in-memory finish
+    always reaches the fixpoint, so ``max_iter`` bounds only the
+    distributed rounds.
+
+    Construction jobs: the symmetric edge checkpoint's (two under
+    adaptive execution), plus one probe job per distributed round;
+    the in-memory finish runs in the caller's action.
     """
     # Materialize the symmetric edge set ONCE: it is re-read every
     # round, and `edges` may itself be an expensive pipeline (the
     # near-dup candidate join in curate_documents) that must not be
     # recomputed per iteration.
-    sym = _sym(edges, src, dst).distinct().localCheckpoint(eager=True)
+    sym, rows, nulls = _checkpoint(_sym(edges, src, dst).distinct())
     labels = sym.select(F.col("src").alias("vertex")).distinct().select(
         "vertex", F.col("vertex").alias("component")
     )
@@ -130,9 +328,13 @@ def connected_components(
     # to NULL, which matches the default prev=None: it settles in its
     # first round.
     label_sum = F.sum(F.col("component").cast("decimal(38,0)"))
-    return _fixpoint(
-        "connected_components", labels, step, lambda s: _probe(s, label_sum)[0],
-        max_iter, "max_iter",
+    return _finish(
+        "connected_components", sym, rows, nulls, _components_kernel,
+        lambda: step(labels),
+        lambda: _fixpoint(
+            "connected_components", labels, step,
+            lambda s: _probe(s, label_sum)[0], max_iter, "max_iter",
+        ),
     )
 
 
@@ -323,6 +525,10 @@ def pagerank(
     instead of all vertices (p_v = 1/|S| on S, else 0; init = p) —
     similarity-to-seed ranking for recommendation / related-item
     queries. Vertices unreachable from S converge toward 0.
+
+    Construction jobs: the edge checkpoint's; the distributed path
+    adds the teleport vector's checkpoint, and its caller's action
+    runs the unrolled rounds.
     """
     if weight_col is not None:
         # weighted: contributions are rank·w/out-strength. Integer
@@ -333,48 +539,62 @@ def pagerank(
         e = _edges(
             edges, src, dst, undirected, F.col(weight_col).alias("w")
         ).groupBy("src", "dst").agg(F.sum("w").alias("w"))
-        deg = e.groupBy("src").agg(F.sum("w").alias("deg"))
+        strength = F.sum("w")
     else:
         e = _edges(edges, src, dst, undirected).distinct().withColumn("w", F.lit(1))
-        deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # one materialization reused by every round
-    ed = e.join(deg, "src").localCheckpoint(eager=True)
+        strength = F.count("*")
+    # the edge list, materialized once for either path
+    e, rows, nulls = _checkpoint(e)
+    deg = e.groupBy("src").agg(strength.alias("deg"))
+    ed = e.join(deg, "src")
     verts = deg.select(F.col("src").alias("vertex"))
     n = verts.agg(F.count("*").alias("n"))
-    if personalization is None:
+    seeds = None if personalization is None else sorted(set(personalization))
+    if seeds is None:
         base = verts.crossJoin(F.broadcast(n)).select(
             "vertex", (F.lit(1.0) / F.col("n")).alias("p")
         )
     else:
-        seeds = sorted(set(personalization))
         seed_df = edges.sparkSession.createDataFrame(
             [(v,) for v in seeds], ["vertex"]
         ).withColumn("p", F.lit(1.0 / len(seeds)))
         base = verts.join(F.broadcast(seed_df), "vertex", "left").select(
             "vertex", F.coalesce(F.col("p"), F.lit(0.0)).alias("p")
         )
-    # the teleport vector is re-read every round — pin it once
-    base = base.localCheckpoint(eager=True)
-    ranks = base.select("vertex", F.col("p").alias("pagerank"))
-    for _ in range(n_iter):
-        contrib = ed.join(
-            ranks, ed.src == ranks.vertex
-        ).select(
-            F.col("dst"),
-            (F.col("pagerank") * F.col("w") / F.col("deg")).alias("c"),
-        )
-        s = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            base.join(s, base.vertex == s.dst, "left")
-            .select(
-                "vertex",
-                (
-                    (F.lit(1.0) - F.lit(damping)) * F.col("p")
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("pagerank"),
+
+    def power(base: DataFrame, ed: DataFrame) -> DataFrame:
+        ranks = base.select("vertex", F.col("p").alias("pagerank"))
+        for _ in range(n_iter):
+            contrib = ed.join(
+                ranks, ed.src == ranks.vertex
+            ).select(
+                F.col("dst"),
+                (F.col("pagerank") * F.col("w") / F.col("deg")).alias("c"),
             )
-        )
-    return ranks
+            s = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+            ranks = (
+                base.join(s, base.vertex == s.dst, "left")
+                .select(
+                    "vertex",
+                    (
+                        (F.lit(1.0) - F.lit(damping)) * F.col("p")
+                        + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+                    ).alias("pagerank"),
+                )
+            )
+        return ranks
+
+    return _finish(
+        "pagerank", e, rows, nulls,
+        lambda pdf: _pagerank_kernel(n_iter, damping, seeds, pdf),
+        lambda: power(base, ed),
+        # the teleport vector and the edge+degree side are re-read
+        # every round — pin them once (the latter by the first round)
+        lambda: (
+            power(base.localCheckpoint(eager=True), ed.localCheckpoint(eager=False)),
+            n_iter,
+        ),
+    )
 
 
 def bfs_distances(
@@ -452,35 +672,51 @@ def label_propagation(
     (dst, label) count aggregation, one per-dst windowed argmax —
     all shuffles keyed on vertices, the same per-round budget as
     connected components / PageRank, checkpointed per round.
-    Returns (vertex, community) after exactly ``n_iter`` rounds.
+    Returns (vertex, community) after exactly ``n_iter`` rounds, on
+    either path.
+
+    Construction jobs: the edge checkpoint's; the distributed path
+    adds the initial labels' checkpoint, and its caller's action runs
+    the rounds.
     """
-    e = _edges(edges, src, dst, undirected).distinct().localCheckpoint(eager=True)
+    e, rows, nulls = _checkpoint(_edges(edges, src, dst, undirected).distinct())
     labels = (
         e.select(F.col("src").alias("vertex"))
         .distinct()
         .withColumn("community", F.col("vertex"))
-        .localCheckpoint(eager=True)
     )
     w = Window.partitionBy("vertex").orderBy(
         F.desc("n"), F.asc("community")
     )
-    for _ in range(n_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         counts = (
             e.join(labels, e["src"] == labels["vertex"])
             .select(F.col("dst").alias("vertex"), "community")
             .groupBy("vertex", "community")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        labels = (
+        return (
             counts.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .select("vertex", "community")
+        )
+
+    def distributed():
+        state = labels.localCheckpoint(eager=True)
+        for _ in range(n_iter):
             # lazy (r13): fixed round count, no convergence probe —
             # the caller's action materializes all rounds in one job
             # while each round's checkpoint still cuts the plan
-            .localCheckpoint(eager=False)
-        )
-    return labels
+            state = step(state).localCheckpoint(eager=False)
+        return state, n_iter
+
+    return _finish(
+        "label_propagation", e, rows, nulls,
+        lambda pdf: _communities_kernel(n_iter, pdf),
+        lambda: step(labels) if n_iter else labels,
+        distributed,
+    )
 
 
 def kcore(
@@ -501,10 +737,16 @@ def kcore(
     localCheckpoint-ed so round i never re-executes rounds < i. The
     driver-side convergence probe reads ONE count per round (same
     pattern as connected_components; the previous round's count is
-    carried forward, never recounted). Rounds needed ≤ the peel depth
+    carried forward, never recounted, and the first one is the edge
+    checkpoint's observed row count). Rounds needed ≤ the peel depth
     (graph-dependent, log-ish on real co-occurrence graphs); raises
     if max_rounds is hit without convergence so a silent partial
-    peel can never masquerade as the core.
+    peel can never masquerade as the core. The in-memory finish
+    always peels to the fixpoint, so ``max_rounds`` bounds only the
+    distributed rounds.
+
+    Construction jobs: the edge checkpoint's, plus one count job per
+    distributed round.
 
     ``canonical=True`` asserts the caller's edges are already
     deduplicated with ``src < dst`` per row — then the symmetrized
@@ -523,7 +765,7 @@ def kcore(
         # src < dst — also excludes self-loops; violating it
         # detectably inflates degrees, contract-tested.)
         e = e.where(F.col("src") != F.col("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
+    e, rows, nulls = _checkpoint(e)
 
     def peel(e: DataFrame) -> DataFrame:
         keep = (
@@ -536,13 +778,22 @@ def kcore(
             keep.select(F.col("src").alias("dst")), "dst", "left_semi"
         )
 
-    core = _fixpoint(
-        "kcore", e, peel, DataFrame.count, max_rounds, "max_rounds", prev=e.count()
-    )
-    return (
-        core.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .select(F.col("src").alias("vertex"), "core_degree")
+    def degrees(core: DataFrame) -> DataFrame:
+        return (
+            core.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("core_degree"))
+            .select(F.col("src").alias("vertex"), "core_degree")
+        )
+
+    def distributed():
+        core, rounds = _fixpoint(
+            "kcore", e, peel, DataFrame.count, max_rounds, "max_rounds", prev=rows
+        )
+        return degrees(core), rounds
+
+    return _finish(
+        "kcore", e, rows, nulls, lambda pdf: _kcore_kernel(k, pdf),
+        lambda: degrees(e), distributed,
     )
 
 
@@ -600,4 +851,4 @@ def bellman_ford(
     return _fixpoint(
         "bellman_ford", dist, relax, lambda d: _probe(d, F.count(F.lit(1)), moved),
         max_rounds, "max_rounds", prev=(n_src, 0 if n_src else None),
-    )
+    )[0]

@@ -35,6 +35,37 @@ def spark():
     yield spark
 
 
+_BROADCAST_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@pytest.fixture
+def graph_paths(spark):
+    """The two paths of the graph operators, for a test to loop over:
+    ``for path in graph_paths():`` runs its body once with the
+    session's own broadcast threshold (small graphs finish in memory)
+    and once at -1 (every graph runs the distributed loops). Teardown
+    restores the session's threshold."""
+    own = spark.conf.get(_BROADCAST_THRESHOLD)
+
+    def paths():
+        for path, threshold in (("in_memory", own), ("distributed", "-1")):
+            spark.conf.set(_BROADCAST_THRESHOLD, threshold)
+            yield path
+
+    yield paths
+    spark.conf.set(_BROADCAST_THRESHOLD, own)
+
+
+@pytest.fixture
+def distributed_graphs(spark):
+    """The session with broadcast threshold -1: every graph operator
+    runs its distributed loops (and no join broadcasts)."""
+    own = spark.conf.get(_BROADCAST_THRESHOLD)
+    spark.conf.set(_BROADCAST_THRESHOLD, "-1")
+    yield spark
+    spark.conf.set(_BROADCAST_THRESHOLD, own)
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -95,3 +95,28 @@ def test_keep_best_quality_policy(spark):
     assert sorted(r.doc_id for r in kept_best.collect()) == [11, 12]
     fates = {r.doc_id: r.fate for r in fate.collect()}
     assert fates == {10: "near_dup", 11: "kept", 12: "kept"}
+
+
+def test_curate_corpus_construction_jobs(spark):
+    """Spark jobs ``curate_corpus`` runs while it builds its frames:
+    the eager MinHash band checkpoint and the near-dup graph's eager
+    edge checkpoint, each one job per adaptive-execution stage, while
+    the in-memory components finish runs in the caller's action. The
+    band checkpoint's input is already shuffled (the quality join and
+    exact dedup), so ``fan_out_narrow_input`` passes it through
+    without running it. The count moves by one between identical
+    calls (6 or 7 band-checkpoint jobs, as adaptive execution orders
+    its stages), so it is pinned to that range."""
+    from .conftest import _jobs
+
+    (_, fate), build = _jobs(
+        spark, "curate_build",
+        lambda: curate_corpus(
+            _docs(spark),
+            config=CurationConfig(min_quality=0.5, minhash_threshold=0.5),
+        ),
+    )
+    assert 11 <= build <= 12
+    assert {r.doc_id: r.fate for r in fate.collect()} == {
+        1: "kept", 2: "kept", 3: "exact_dup", 4: "near_dup", 5: "low_quality"
+    }
