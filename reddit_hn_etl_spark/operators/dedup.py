@@ -89,21 +89,53 @@ def fan_out_narrow_input(df: DataFrame) -> DataFrame:
     cluster, and shuffling a narrow input is by definition cheap.
     Results are partition-invariant either way.
 
-    The decision reads the physical plan and runs no Spark job. An
-    input planned under adaptive execution — one with an exchange or
-    a subquery, or one reading a cached plan that has one — passes
-    through unchanged: adaptive execution sizes a shuffle's output
-    partitions itself, and asking such a plan for its partition count
-    would execute its stages then and there, only for the caller's
-    job to compute them again. Any other input's partition count is
-    known without running it.
+    The decision runs no Spark job. An input with no exchange or
+    subquery knows its partition count without running, and so does
+    one whose last exchange is a ``repartition(n)``: adaptive
+    execution keeps that count. Any other input planned under
+    adaptive execution does not: asking it would execute its stages
+    then and there, only for the caller's job to compute them again.
+    Adaptive execution sizes such an input's partitions from its
+    shuffle bytes and merges a small shuffle into fewer partitions
+    than cores, often one. So the bytes its plan's leaves hold (their
+    plan statistics) decide instead: under one advisory partition
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) per core,
+    the input is small enough to fan out — one more shuffle of at
+    most that much — and above it, adaptive execution's partitions
+    pass through.
     """
-    if "AdaptiveSparkPlan" in df._jdf.queryExecution().executedPlan().toString():
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    width = _planned_width(df)
+    if width is None:
+        conf = spark._jsparkSession.sessionState().conf()
+        advisory = conf.getConf(
+            spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+        )
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        held = sum(leaves.apply(i).stats().sizeInBytes() for i in range(leaves.size()))
+        narrow = held < target * advisory
+    else:
+        narrow = width < target
+    return df.repartition(target) if narrow else df
+
+
+def _planned_width(df: DataFrame) -> int | None:
+    """``df``'s partition count when its plan fixes it without running
+    (``fan_out_narrow_input``), else None."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() != "AdaptiveSparkPlan":
+        # a cached plan may hold an adaptive one, which would run
+        if "AdaptiveSparkPlan" in plan.toString():
+            return None
+        return df.rdd.getNumPartitions()
+    # down to the exchange that sets the output partitioning
+    plan = plan.inputPlan()
+    while plan.nodeName() != "Exchange" and plan.children().size() == 1:
+        plan = plan.children().head()
+    if plan.nodeName() == "Exchange" and plan.shuffleOrigin().toString() == "REPARTITION_BY_NUM":
+        return plan.outputPartitioning().numPartitions()
+    return None
 
 
 def tokens(text_col: str | Column, lowercase: bool = True) -> Column:

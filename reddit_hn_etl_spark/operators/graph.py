@@ -33,21 +33,24 @@ Three private seams carry the operators:
   ``kcore``, ``label_propagation`` and ``pagerank`` (Kiveris et al.,
   SoCC 2014: once what remains is small, finish it in memory). Each
   of them checkpoints its edge frame eagerly once (``_checkpoint``),
-  and an ``Observation`` on that checkpoint's own job counts its rows
-  and null rows — no extra Spark job. When the frame is at most
-  ``spark.sql.autoBroadcastJoinThreshold`` (rows × the schema's
-  default row size; the rule Spark uses to broadcast a relation, 64
-  MiB in the engine's session, about 4M two-long edges), holds no
-  null and its ids are integers or strings, one Python-worker task
-  (``coalesce(1).mapInPandas``) runs a numpy kernel over the whole
-  edge list and the result is checkpointed lazily: building the
-  result then runs only the edge checkpoint's jobs, and the caller's
-  action runs one more. Otherwise — and always at a threshold of −1
-  — the distributed loops run unchanged. Both paths give the same
-  rows under the same schema; PageRank may differ by float summation
-  order (≤ 1e-12). One ``logging`` record per call names the
-  operator, the path taken, the edge rows and size against the
-  threshold, and the distributed rounds run.
+  and an ``Observation`` on that checkpoint's own job counts its
+  rows, its null rows and its bytes (string values at their UTF-8
+  length, any other value at its type's default size) — no extra
+  Spark job. The size rule (``_in_memory``) is the one Spark uses to
+  broadcast a relation: when those bytes are at most
+  ``spark.sql.autoBroadcastJoinThreshold`` (64 MiB in the engine's
+  session, about 4M two-long edges; 10 MiB in a vanilla session),
+  no row holds a null and the ids are integers or strings, one
+  Python-worker task (``coalesce(1).mapInPandas``) runs a numpy
+  kernel over the whole edge list and the result is checkpointed
+  lazily: building the result then runs only the edge checkpoint's
+  jobs, and the caller's action runs one more. Otherwise — and
+  always at a threshold of −1 — the distributed loops run
+  unchanged. Both paths give the same rows under the same schema;
+  PageRank may differ by float summation order (≤ 1e-12). One
+  ``logging`` record per call names the operator, the path taken,
+  the edge rows and bytes against the threshold, and the
+  distributed rounds run.
 """
 
 from __future__ import annotations
@@ -82,35 +85,52 @@ def _fixpoint(op, state, step, probe, max_rounds, budget, prev=None):
     raise RuntimeError(f"{op}: no fixpoint within {budget}={max_rounds} rounds")
 
 
-def _checkpoint(frame: DataFrame) -> tuple[DataFrame, int, int]:
-    """``frame`` checkpointed eagerly, with its row count and the count
-    of rows holding a null, both observed on the checkpoint's own job."""
+def _checkpoint(frame: DataFrame) -> tuple[DataFrame, dict]:
+    """``frame`` checkpointed eagerly, with its ``rows``, the count of
+    rows holding a null (``nulls``) and its ``bytes`` (module
+    docstring), all observed on the checkpoint's own job."""
     obs = Observation()
-    null = F.lit(False)
-    for c in frame.columns:
-        null = null | F.col(c).isNull()
+    jschema = frame._jdf.schema()
+    null, width = F.lit(False), F.lit(0)
+    for f in frame.schema:
+        null = null | F.col(f.name).isNull()
+        if isinstance(f.dataType, T.StringType):
+            width = width + F.octet_length(f.name)
+        else:
+            width = width + F.lit(jschema.apply(f.name).dataType().defaultSize())
     frame = frame.observe(
-        obs, F.count(F.lit(1)).alias("rows"), F.count_if(null).alias("nulls")
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if(null).alias("nulls"),
+        F.coalesce(F.sum(width), F.lit(0)).alias("bytes"),
     ).localCheckpoint(eager=True)
-    return frame, obs.get["rows"], obs.get["nulls"]
+    return frame, obs.get
 
 
-def _finish(op, edges, rows, nulls, kernel, like, distributed):
-    """The size rule of the graph operators (module docstring).
+def _in_memory(edges: DataFrame, stats: dict, limit: int) -> bool:
+    """The size rule of the graph operators (module docstring): the
+    observed edge frame fits under the broadcast threshold ``limit``,
+    holds no null and has integer or string ids."""
+    ids = (edges.schema[c].dataType for c in ("src", "dst"))
+    return (
+        stats["bytes"] <= limit
+        and not stats["nulls"]
+        and all(isinstance(t, (T.IntegralType, T.StringType)) for t in ids)
+    )
+
+
+def _finish(op, edges, stats, kernel, like, distributed):
+    """The in-memory finish or the distributed loops, by ``_in_memory``.
 
     ``edges`` is the operator's eagerly checkpointed edge frame with
-    ``(src, dst)`` first, ``rows`` and ``nulls`` its observed counts.
+    ``(src, dst)`` first, ``stats`` its ``_checkpoint`` observation.
     In memory, ``kernel`` maps a pandas frame of all edge rows to the
     result rows, typed by the schema of ``like()``, a lazy frame of
     the distributed result (analysis only, no job). ``distributed()``
     returns the distributed result and the rounds it ran."""
     conf = edges.sparkSession._jsparkSession.sessionState().conf()
     limit = conf.autoBroadcastJoinThreshold()
-    size = rows * edges._jdf.schema().defaultSize()
-    ids = (edges.schema[c].dataType for c in ("src", "dst"))
-    if size <= limit and not nulls and all(
-        isinstance(t, (T.IntegralType, T.StringType)) for t in ids
-    ):
+    if _in_memory(edges, stats, limit):
         path, rounds = "in-memory", 0
         result = (
             edges.coalesce(1)
@@ -122,7 +142,7 @@ def _finish(op, edges, rows, nulls, kernel, like, distributed):
         result, rounds = distributed()
     _log.info(
         "%s: %s path, %d edge rows, %d B against autoBroadcastJoinThreshold=%d B, "
-        "%d distributed rounds", op, path, rows, size, limit, rounds,
+        "%d distributed rounds", op, path, stats["rows"], stats["bytes"], limit, rounds,
     )
     return result
 
@@ -289,7 +309,7 @@ def connected_components(
     # round, and `edges` may itself be an expensive pipeline (the
     # near-dup candidate join in curate_documents) that must not be
     # recomputed per iteration.
-    sym, rows, nulls = _checkpoint(_sym(edges, src, dst).distinct())
+    sym, stats = _checkpoint(_sym(edges, src, dst).distinct())
     labels = sym.select(F.col("src").alias("vertex")).distinct().select(
         "vertex", F.col("vertex").alias("component")
     )
@@ -324,12 +344,17 @@ def connected_components(
         ).select("vertex", F.coalesce("_lc", "component").alias("component"))
 
     # Σlabel is exact over decimal(38,0): a long sum overflows (ANSI
-    # error) on large or negative hash-style ids. The empty graph sums
-    # to NULL, which matches the default prev=None: it settles in its
-    # first round.
-    label_sum = F.sum(F.col("component").cast("decimal(38,0)"))
+    # error) on large or negative hash-style ids. Ids that are not
+    # integers (strings) probe an order-free checksum of (vertex,
+    # label) instead, as bellman_ford does for fractional weights. The
+    # empty graph probes NULL, which matches the default prev=None: it
+    # settles in its first round.
+    if isinstance(sym.schema["src"].dataType, T.IntegralType):
+        label_sum = F.sum(F.col("component").cast("decimal(38,0)"))
+    else:
+        label_sum = F.bit_xor(F.xxhash64("vertex", "component"))
     return _finish(
-        "connected_components", sym, rows, nulls, _components_kernel,
+        "connected_components", sym, stats, _components_kernel,
         lambda: step(labels),
         lambda: _fixpoint(
             "connected_components", labels, step,
@@ -544,7 +569,7 @@ def pagerank(
         e = _edges(edges, src, dst, undirected).distinct().withColumn("w", F.lit(1))
         strength = F.count("*")
     # the edge list, materialized once for either path
-    e, rows, nulls = _checkpoint(e)
+    e, stats = _checkpoint(e)
     deg = e.groupBy("src").agg(strength.alias("deg"))
     ed = e.join(deg, "src")
     verts = deg.select(F.col("src").alias("vertex"))
@@ -585,7 +610,7 @@ def pagerank(
         return ranks
 
     return _finish(
-        "pagerank", e, rows, nulls,
+        "pagerank", e, stats,
         lambda pdf: _pagerank_kernel(n_iter, damping, seeds, pdf),
         lambda: power(base, ed),
         # the teleport vector and the edge+degree side are re-read
@@ -679,7 +704,7 @@ def label_propagation(
     adds the initial labels' checkpoint, and its caller's action runs
     the rounds.
     """
-    e, rows, nulls = _checkpoint(_edges(edges, src, dst, undirected).distinct())
+    e, stats = _checkpoint(_edges(edges, src, dst, undirected).distinct())
     labels = (
         e.select(F.col("src").alias("vertex"))
         .distinct()
@@ -712,7 +737,7 @@ def label_propagation(
         return state, n_iter
 
     return _finish(
-        "label_propagation", e, rows, nulls,
+        "label_propagation", e, stats,
         lambda pdf: _communities_kernel(n_iter, pdf),
         lambda: step(labels) if n_iter else labels,
         distributed,
@@ -765,7 +790,7 @@ def kcore(
         # src < dst — also excludes self-loops; violating it
         # detectably inflates degrees, contract-tested.)
         e = e.where(F.col("src") != F.col("dst")).distinct()
-    e, rows, nulls = _checkpoint(e)
+    e, stats = _checkpoint(e)
 
     def peel(e: DataFrame) -> DataFrame:
         keep = (
@@ -787,12 +812,12 @@ def kcore(
 
     def distributed():
         core, rounds = _fixpoint(
-            "kcore", e, peel, DataFrame.count, max_rounds, "max_rounds", prev=rows
+            "kcore", e, peel, DataFrame.count, max_rounds, "max_rounds", prev=stats["rows"]
         )
         return degrees(core), rounds
 
     return _finish(
-        "kcore", e, rows, nulls, lambda pdf: _kcore_kernel(k, pdf),
+        "kcore", e, stats, lambda pdf: _kcore_kernel(k, pdf),
         lambda: degrees(e), distributed,
     )
 

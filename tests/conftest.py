@@ -35,35 +35,40 @@ def spark():
     yield spark
 
 
-_BROADCAST_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+def _distributed(*_):
+    """A size rule that sends every graph down the distributed loops;
+    the session's settings, broadcast joins included, stay as they
+    are."""
+    return False
 
 
 @pytest.fixture
-def graph_paths(spark):
+def graph_paths(spark, monkeypatch):
     """The two paths of the graph operators, for a test to loop over:
-    ``for path in graph_paths():`` runs its body once with the
-    session's own broadcast threshold (small graphs finish in memory)
-    and once at -1 (every graph runs the distributed loops). Teardown
-    restores the session's threshold."""
-    own = spark.conf.get(_BROADCAST_THRESHOLD)
+    ``for path in graph_paths():`` runs its body once under the size
+    rule (the test's small graphs finish in memory) and once with
+    every graph on the distributed loops. Each loop starts from the
+    size rule, also when a property test reuses the fixture."""
+    from reddit_hn_etl_spark.operators import graph
+
+    rule = graph._in_memory
 
     def paths():
-        for path, threshold in (("in_memory", own), ("distributed", "-1")):
-            spark.conf.set(_BROADCAST_THRESHOLD, threshold)
-            yield path
+        monkeypatch.setattr(graph, "_in_memory", rule)
+        yield "in_memory"
+        monkeypatch.setattr(graph, "_in_memory", _distributed)
+        yield "distributed"
 
-    yield paths
-    spark.conf.set(_BROADCAST_THRESHOLD, own)
+    return paths
 
 
 @pytest.fixture
-def distributed_graphs(spark):
-    """The session with broadcast threshold -1: every graph operator
-    runs its distributed loops (and no join broadcasts)."""
-    own = spark.conf.get(_BROADCAST_THRESHOLD)
-    spark.conf.set(_BROADCAST_THRESHOLD, "-1")
-    yield spark
-    spark.conf.set(_BROADCAST_THRESHOLD, own)
+def distributed_graphs(spark, monkeypatch):
+    """The session with every graph operator on its distributed loops."""
+    from reddit_hn_etl_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_in_memory", _distributed)
+    return spark
 
 
 @pytest.fixture(scope="session")

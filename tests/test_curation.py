@@ -103,7 +103,7 @@ def test_curate_corpus_construction_jobs(spark):
     edge checkpoint, each one job per adaptive-execution stage, while
     the in-memory components finish runs in the caller's action. The
     band checkpoint's input is already shuffled (the quality join and
-    exact dedup), so ``fan_out_narrow_input`` passes it through
+    exact dedup); ``fan_out_narrow_input`` decides it from its plan
     without running it. The count moves by one between identical
     calls (6 or 7 band-checkpoint jobs, as adaptive execution orders
     its stages), so it is pinned to that range."""

@@ -427,6 +427,28 @@ def test_fan_out_narrow_input(spark):
     ) == list(range(100))
 
 
+
+def test_fan_out_narrow_input_decides_shuffled_input_without_a_job(spark):
+    """An input planned under adaptive execution is decided from its
+    plan, running no Spark job: a small aggregate — which adaptive
+    execution would merge into fewer partitions than cores — fans
+    out, and a ``repartition(n)`` keeps its n."""
+    from pyspark.sql import functions as F
+
+    from reddit_hn_etl_spark.operators.dedup import fan_out_narrow_input
+
+    from .conftest import _jobs
+
+    target = spark.sparkContext.defaultParallelism
+    small = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    out, jobs = _jobs(spark, "fan_out_shuffled", lambda: fan_out_narrow_input(small))
+    assert jobs == 0
+    assert out.rdd.getNumPartitions() == target
+    assert sorted(r.k for r in out.collect()) == list(range(7))
+    wide = spark.range(100).repartition(target + 4)
+    out, jobs = _jobs(spark, "fan_out_repartitioned", lambda: fan_out_narrow_input(wide))
+    assert jobs == 0 and out.rdd.getNumPartitions() == target + 4
+
 def test_duplicate_spans_planted(spark):
     """Two docs share one 7-token passage (k=5 → 3 consecutive gram
     starts merge into ONE maximal span per doc, exact offsets); a

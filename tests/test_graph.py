@@ -19,40 +19,53 @@ def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "doc_a long, doc_b long")
 
 
-def test_components_chains_and_islands(spark):
-    # chain 1-2-3-4, triangle 10-11-12, island pair 20-21
-    edges = _edges(spark, [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)])
-    cc = {r.vertex: r.component for r in connected_components(edges).collect()}
-    assert {cc[1], cc[2], cc[3], cc[4]} == {1}
-    assert {cc[10], cc[11], cc[12]} == {10}
-    assert {cc[20], cc[21]} == {20}
+def test_components_chains_and_islands(spark, graph_paths):
+    # chain 1-2-3-4, triangle 10-11-12, island pair 20-21; the same
+    # graph with string ids, whose labels are the minimum string
+    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)]
+    edges = _edges(spark, pairs)
+    named = spark.createDataFrame(
+        [(f"v{a:02d}", f"v{b:02d}") for a, b in pairs], "doc_a string, doc_b string"
+    )
+    for _ in graph_paths():
+        for g, v in ((edges, int), (named, lambda i: f"v{i:02d}")):
+            cc = {r.vertex: r.component for r in connected_components(g).collect()}
+            assert {cc[v(i)] for i in (1, 2, 3, 4)} == {v(1)}
+            assert {cc[v(i)] for i in (10, 11, 12)} == {v(10)}
+            assert {cc[v(i)] for i in (20, 21)} == {v(20)}
 
 
-def test_dedup_clusters_transitive(spark):
+def test_dedup_clusters_transitive(spark, graph_paths):
     # (1,3),(2,3): 2 is a dup of 1 only transitively via 3 — the case
     # a greedy drop-doc_b pass gets wrong (it would keep 2).
-    drops = {r.drop_id for r in dedup_clusters(_edges(spark, [(1, 3), (2, 3)])).collect()}
-    assert drops == {2, 3}
+    for _ in graph_paths():
+        drops = {
+            r.drop_id for r in dedup_clusters(_edges(spark, [(1, 3), (2, 3)])).collect()
+        }
+        assert drops == {2, 3}
 
 
-def test_long_chain_converges(spark):
+def test_long_chain_converges(spark, graph_paths):
     n = 12
     edges = _edges(spark, [(i, i + 1) for i in range(n)])
-    cc = {r.vertex: r.component for r in connected_components(edges).collect()}
-    assert set(cc.values()) == {0} and len(cc) == n + 1
+    for _ in graph_paths():
+        cc = {r.vertex: r.component for r in connected_components(edges).collect()}
+        assert set(cc.values()) == {0} and len(cc) == n + 1
 
 
-def test_very_long_chain_converges_within_default_iters(spark):
+def test_very_long_chain_converges_within_default_iters(spark, graph_paths):
     """r13 pointer-jumping pin: a 200-vertex path has diameter 200 —
     plain neighbor-min needs ~200 rounds and would exhaust the
-    default max_iter=20 SILENTLY (wrong labels, no error); with the
-    label-compression pass rounds are O(log diameter), so the default
-    budget converges to the true min label. Guards against losing
-    the jump pass in a refactor."""
+    default max_iter=20 (and raise); with the label-compression pass
+    rounds are O(log diameter), so the default budget converges to
+    the true min label. Guards against losing the jump pass in a
+    refactor: the round budget binds only the distributed loops,
+    which the second path runs."""
     n = 200
     edges = _edges(spark, [(i, i + 1) for i in range(n)])
-    cc = {r.vertex: r.component for r in connected_components(edges).collect()}
-    assert set(cc.values()) == {0} and len(cc) == n + 1
+    for _ in graph_paths():
+        cc = {r.vertex: r.component for r in connected_components(edges).collect()}
+        assert set(cc.values()) == {0} and len(cc) == n + 1
 
 
 def test_components_raise_when_max_iter_runs_out(spark, distributed_graphs):
@@ -174,7 +187,7 @@ def test_triangle_stats_clique_pendant_star(spark):
     assert out[11] == (1, 0, 0.0)
 
 
-def test_pagerank_mass_hub_and_numpy_reference(spark):
+def test_pagerank_mass_hub_and_numpy_reference(spark, graph_paths):
     """Undirected path-plus-hub graph: rank mass sums to exactly 1,
     the hub outranks everyone, and three unrolled rounds match an
     independent numpy power iteration to float tolerance."""
@@ -185,13 +198,6 @@ def test_pagerank_mass_hub_and_numpy_reference(spark):
     # star 0-{1,2,3,4} plus tail 4-5-6
     pairs = [(0, 1), (0, 2), (0, 3), (0, 4), (4, 5), (5, 6)]
     edges = spark.createDataFrame(pairs, "src long, dst long")
-    got = {
-        r["vertex"]: r["pagerank"]
-        for r in pagerank(edges, n_iter=3, damping=0.875).collect()
-    }
-    assert abs(sum(got.values()) - 1.0) < 1e-12
-    assert max(got, key=got.get) == 0
-
     sym = pairs + [(b, a) for a, b in pairs]
     n = 7
     deg = np.zeros(n)
@@ -203,11 +209,18 @@ def test_pagerank_mass_hub_and_numpy_reference(spark):
         for a, b in sym:
             s[b] += r[a] / deg[a]
         r = 0.125 / n + 0.875 * s
-    for v in range(n):
-        assert abs(got[v] - r[v]) <= 1e-12 * abs(r[v])
+    for _ in graph_paths():
+        got = {
+            r["vertex"]: r["pagerank"]
+            for r in pagerank(edges, n_iter=3, damping=0.875).collect()
+        }
+        assert abs(sum(got.values()) - 1.0) < 1e-12
+        assert max(got, key=got.get) == 0
+        for v in range(n):
+            assert abs(got[v] - r[v]) <= 1e-12 * abs(r[v])
 
 
-def test_pagerank_directed_mass_leaks_to_sinks(spark):
+def test_pagerank_directed_mass_leaks_to_sinks(spark, graph_paths):
     """Directed mode keeps the raw semantics: a sink keeps absorbing
     mass (no dangling redistribution), so total mass < 1 — documented
     behavior callers opt into with undirected=False."""
@@ -216,16 +229,17 @@ def test_pagerank_directed_mass_leaks_to_sinks(spark):
     edges = spark.createDataFrame(
         [(1, 2), (3, 2)], "src long, dst long"
     )
-    got = {
-        r["vertex"]: r["pagerank"]
-        for r in pagerank(edges, n_iter=2, damping=0.875, undirected=False).collect()
-    }
-    # vertices = those with out-edges only (1, 3); sink 2 absorbs
-    assert set(got) == {1, 3}
-    assert sum(got.values()) < 1.0
+    for _ in graph_paths():
+        got = {
+            r["vertex"]: r["pagerank"]
+            for r in pagerank(edges, n_iter=2, damping=0.875, undirected=False).collect()
+        }
+        # vertices = those with out-edges only (1, 3); sink 2 absorbs
+        assert set(got) == {1, 3}
+        assert sum(got.values()) < 1.0
 
 
-def test_personalized_pagerank_concentrates_on_seed_side(spark):
+def test_personalized_pagerank_concentrates_on_seed_side(spark, graph_paths):
     """Barbell graph 0-1-2 — 3 — 4-5-6 with seeds {0}: mass
     concentrates on the seed side, matches a numpy reference with
     the identical update, and total mass stays exactly 1 (undirected
@@ -236,16 +250,6 @@ def test_personalized_pagerank_concentrates_on_seed_side(spark):
 
     pairs = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 6)]
     edges = spark.createDataFrame(pairs, "src long, dst long")
-    got = {
-        r["vertex"]: r["pagerank"]
-        for r in pagerank(
-            edges, n_iter=4, damping=0.875, personalization=[0]
-        ).collect()
-    }
-    assert abs(sum(got.values()) - 1.0) < 1e-12
-    assert got[0] > got[6]          # seed side dominates
-    assert got[1] > got[5]
-
     sym = pairs + [(b, a) for a, b in pairs]
     n = 7
     deg = np.zeros(n)
@@ -259,11 +263,21 @@ def test_personalized_pagerank_concentrates_on_seed_side(spark):
         for a, b in sym:
             s[b] += r[a] / deg[a]
         r = 0.125 * p + 0.875 * s
-    for v in range(n):
-        assert abs(got[v] - r[v]) < 1e-12
+    for _ in graph_paths():
+        got = {
+            r["vertex"]: r["pagerank"]
+            for r in pagerank(
+                edges, n_iter=4, damping=0.875, personalization=[0]
+            ).collect()
+        }
+        assert abs(sum(got.values()) - 1.0) < 1e-12
+        assert got[0] > got[6]          # seed side dominates
+        assert got[1] > got[5]
+        for v in range(n):
+            assert abs(got[v] - r[v]) < 1e-12
 
 
-def test_weighted_pagerank_reduces_to_unweighted_on_unit_weights(spark):
+def test_weighted_pagerank_reduces_to_unweighted_on_unit_weights(spark, graph_paths):
     from pyspark.sql import functions as F
 
     from reddit_hn_etl_spark.operators import graph
@@ -271,36 +285,38 @@ def test_weighted_pagerank_reduces_to_unweighted_on_unit_weights(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)], "src long, dst long"
     )
-    base = {
-        r["vertex"]: r["pagerank"]
-        for r in graph.pagerank(edges, n_iter=3).collect()
-    }
-    weighted = {
-        r["vertex"]: r["pagerank"]
-        for r in graph.pagerank(
-            edges.withColumn("w", F.lit(1)), weight_col="w", n_iter=3
-        ).collect()
-    }
-    assert base == weighted  # x·1/deg ≡ x/deg bit-for-bit
+    for _ in graph_paths():
+        base = {
+            r["vertex"]: r["pagerank"]
+            for r in graph.pagerank(edges, n_iter=3).collect()
+        }
+        weighted = {
+            r["vertex"]: r["pagerank"]
+            for r in graph.pagerank(
+                edges.withColumn("w", F.lit(1)), weight_col="w", n_iter=3
+            ).collect()
+        }
+        assert base == weighted  # x·1/deg ≡ x/deg bit-for-bit
 
 
-def test_weighted_pagerank_mass_conserved_and_weight_sensitive(spark):
+def test_weighted_pagerank_mass_conserved_and_weight_sensitive(spark, graph_paths):
     from reddit_hn_etl_spark.operators import graph
 
     edges = spark.createDataFrame(
         [(1, 2, 10), (2, 3, 1), (3, 1, 1)], "src long, dst long, w long"
     )
-    pr = {
-        r["vertex"]: r["pagerank"]
-        for r in graph.pagerank(edges, weight_col="w", n_iter=5).collect()
-    }
-    assert abs(sum(pr.values()) - 1.0) < 1e-9  # undirected: mass conserved
-    # vertex 3 hangs off the heavy 1-2 edge only weakly; the heavy
-    # pair should outrank it
-    assert pr[1] > pr[3] and pr[2] > pr[3]
+    for _ in graph_paths():
+        pr = {
+            r["vertex"]: r["pagerank"]
+            for r in graph.pagerank(edges, weight_col="w", n_iter=5).collect()
+        }
+        assert abs(sum(pr.values()) - 1.0) < 1e-9  # undirected: mass conserved
+        # vertex 3 hangs off the heavy 1-2 edge only weakly; the heavy
+        # pair should outrank it
+        assert pr[1] > pr[3] and pr[2] > pr[3]
 
 
-def test_kcore_clique_plus_chain(spark):
+def test_kcore_clique_plus_chain(spark, graph_paths):
     """3-core of (K5 clique + pendant chain) keeps exactly the clique
     with degree 4 each; a tree has an empty 2-core."""
     from pyspark.sql import functions as F  # noqa: F401
@@ -310,12 +326,13 @@ def test_kcore_clique_plus_chain(spark):
     clique = [(a, b) for a in range(5) for b in range(a + 1, 5)]
     chain = [(4, 10), (10, 11), (11, 12)]
     edges = spark.createDataFrame(clique + chain, "src long, dst long")
-    got = {r["vertex"]: r["core_degree"] for r in kcore(edges, k=3).collect()}
-    assert got == {0: 4, 1: 4, 2: 4, 3: 4, 4: 4}
     tree = spark.createDataFrame(
         [(i, i // 2) for i in range(1, 16)], "src long, dst long"
     )
-    assert kcore(tree, k=2).count() == 0
+    for _ in graph_paths():
+        got = {r["vertex"]: r["core_degree"] for r in kcore(edges, k=3).collect()}
+        assert got == {0: 4, 1: 4, 2: 4, 3: 4, 4: 4}
+        assert kcore(tree, k=2).count() == 0
 
 
 def test_kcore_matches_brute_force(spark, graph_paths):
@@ -349,7 +366,7 @@ def test_kcore_matches_brute_force(spark, graph_paths):
         assert got == want
 
 
-def test_kcore_canonical_fast_path_equals_default(spark):
+def test_kcore_canonical_fast_path_equals_default(spark, graph_paths):
     """`canonical=True` (r6: skips the symmetrized-set re-dedup when
     the caller guarantees distinct src<dst edges) is result-identical
     to the default path on canonical input — the fast path changes
@@ -367,23 +384,25 @@ def test_kcore_canonical_fast_path_equals_default(spark):
         if a != b:
             edges.add((min(a, b), max(a, b)))
     df = spark.createDataFrame(sorted(edges), "src long, dst long")
-    default = {
-        r["vertex"]: r["core_degree"] for r in kcore(df, k=4).collect()
-    }
-    fast = {
-        r["vertex"]: r["core_degree"]
-        for r in kcore(df, k=4, canonical=True).collect()
-    }
-    assert fast == default and len(fast) > 0
-    # and the fast path really skips the dedup: feeding it NON-unique
-    # edges (a violated contract) must change the degrees, proving
-    # the distinct() is gone rather than silently still applied
     dup = df.unionByName(df)
-    violated = {
-        r["vertex"]: r["core_degree"]
-        for r in kcore(dup, k=4, canonical=True).collect()
-    }
-    assert violated != default
+    for _ in graph_paths():
+        default = {
+            r["vertex"]: r["core_degree"] for r in kcore(df, k=4).collect()
+        }
+        fast = {
+            r["vertex"]: r["core_degree"]
+            for r in kcore(df, k=4, canonical=True).collect()
+        }
+        assert fast == default and len(fast) > 0
+        # and the fast path really skips the dedup: feeding it
+        # NON-unique edges (a violated contract) must change the
+        # degrees, proving the distinct() is gone rather than
+        # silently still applied
+        violated = {
+            r["vertex"]: r["core_degree"]
+            for r in kcore(dup, k=4, canonical=True).collect()
+        }
+        assert violated != default
 
 
 def test_bellman_ford_matches_dijkstra(spark):
@@ -463,23 +482,23 @@ def _job_counts(spark, path, calls):
     return got
 
 
-def test_graph_construction_jobs(spark, distributed_graphs):
+def test_graph_construction_jobs(spark, graph_paths):
     """Spark jobs each graph operator runs while it builds its plan
     and when its result is collected, on a fixed small graph.
 
-    In memory (the session's broadcast threshold), CC, k-core, LPA and
-    PageRank run only their eager edge checkpoint's jobs while they
-    build (two for a distinct edge list under adaptive execution) and
-    one job to collect.
+    In memory, CC, k-core, LPA and PageRank run only their eager edge
+    checkpoint's jobs while they build (two for a distinct edge list
+    under adaptive execution) and one job to collect.
 
-    Distributed (threshold -1, which also turns every join into a
-    sort-merge join): eager edge checkpoints, one probe job per
-    fixpoint round — the round's lazy checkpoint is computed by its
-    probe. k-core's first probe value is the checkpoint's observed
-    row count, not a count job. Bellman-Ford's probe is one (count,
-    Σdist) aggregate per round — no per-round join against the
-    previous distances. BFS and Bellman-Ford have no in-memory
-    finish."""
+    Distributed (the size rule forced off, joins still broadcast):
+    eager edge checkpoints, one probe job per fixpoint round — the
+    round's lazy checkpoint is computed by its probe. k-core's first
+    probe value is the checkpoint's observed row count, not a count
+    job. CC's count is not exact: a probe round runs 7 or 8 jobs
+    depending on adaptive-execution stage timing, so it is pinned to
+    its range. Bellman-Ford's probe is one (count, Σdist) aggregate
+    per round — no per-round join against the previous distances.
+    BFS and Bellman-Ford have no in-memory finish."""
     import hashlib
 
     from reddit_hn_etl_spark.operators import graph
@@ -493,35 +512,38 @@ def test_graph_construction_jobs(spark, distributed_graphs):
     edges = spark.createDataFrame(rows, "src long, dst long, w long").cache()
     edges.count()
     seeds = spark.createDataFrame([(0,)], "v long")
-    finished = {
+    calls = {
         "connected_components": lambda: graph.connected_components(edges, "src", "dst"),
         "kcore": lambda: graph.kcore(edges, 3),
         "label_propagation": lambda: graph.label_propagation(edges),
         "pagerank": lambda: graph.pagerank(edges),
     }
-    looped = {
-        "bfs_distances": lambda: graph.bfs_distances(edges, seeds),
-        "bellman_ford": lambda: graph.bellman_ford(edges, sources=[0]),
-    }
+    got = {}
     try:
-        distributed = _job_counts(spark, "distributed", {**finished, **looped})
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        in_memory = _job_counts(spark, "in_memory", finished)
+        for path in graph_paths():
+            got[path] = _job_counts(spark, path, calls)
+            calls = {
+                **calls,
+                "bfs_distances": lambda: graph.bfs_distances(edges, seeds),
+                "bellman_ford": lambda: graph.bellman_ford(edges, sources=[0]),
+            }
     finally:
         edges.unpersist()
-    assert in_memory == {
+    assert got["in_memory"] == {
         "connected_components": (2, 1),
         "kcore": (2, 1),
         "label_propagation": (2, 1),
         "pagerank": (2, 1),
     }
+    distributed = got["distributed"]
+    cc_build, cc_exec = distributed.pop("connected_components")
+    assert 30 <= cc_build <= 34 and cc_exec == 1, distributed
     assert distributed == {
-        "connected_components": (35, 1),
         "kcore": (17, 2),
-        "label_propagation": (12, 1),
-        "pagerank": (8, 8),
-        "bfs_distances": (15, 1),
-        "bellman_ford": (32, 1),
+        "label_propagation": (10, 1),
+        "pagerank": (8, 10),
+        "bfs_distances": (16, 1),
+        "bellman_ford": (26, 1),
     }
 
 
@@ -574,3 +596,36 @@ def test_graph_outputs_match_across_paths(spark, graph_paths, caplog):
         assert abs(mass - sum(r for _, r in want)) <= 1e-9
         if name != "pagerank_directed":
             assert abs(mass - 1.0) <= 1e-9
+
+
+def test_edge_bytes_count_string_ids_at_their_length(spark, caplog):
+    """The size rule counts string ids at their UTF-8 length, not at
+    the 20 B a string type defaults to. The symmetric edge list of
+    one edge between two 221-byte URL ids holds 884 B, so a 300 B
+    threshold sends it down the distributed loops; the default size
+    would count 80 B and finish it in memory."""
+    import logging
+
+    from reddit_hn_etl_spark.operators import graph
+
+    url = "https://example.com/" + "x" * 200
+    edges = spark.createDataFrame([(url + "a", url + "b")], "src string, dst string")
+    _, stats = graph._checkpoint(edges)
+    assert stats == {"rows": 1, "nulls": 0, "bytes": 2 * (len(url) + 1)}
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    own = spark.conf.get(key)
+    caplog.set_level(logging.INFO, logger=graph.__name__)
+    try:
+        # -1, as for broadcasts, keeps every graph distributed
+        for threshold in ("300", "-1"):
+            spark.conf.set(key, threshold)
+            core = graph.kcore(edges, 1)
+            assert " distributed path, 2 edge rows, 884 B " in caplog.records[-1].getMessage()
+            assert {r.vertex: r.core_degree for r in core.collect()} == {
+                url + "a": 1, url + "b": 1
+            }
+            cc = graph.connected_components(edges, "src", "dst")
+            assert " distributed path, 2 edge rows, 884 B " in caplog.records[-1].getMessage()
+            assert {r.component for r in cc.collect()} == {url + "a"}
+    finally:
+        spark.conf.set(key, own)
