@@ -430,9 +430,11 @@ def test_fan_out_narrow_input(spark):
 
 def test_fan_out_narrow_input_decides_shuffled_input_without_a_job(spark):
     """An input planned under adaptive execution is decided from its
-    plan, running no Spark job: a small aggregate — which adaptive
-    execution would merge into fewer partitions than cores — fans
-    out, and a ``repartition(n)`` keeps its n."""
+    plan, running no Spark job: an aggregate over a small input (1.6
+    MB of ids) — which adaptive execution would merge into fewer
+    partitions than cores — fans out, one over a tiny input (8 KB,
+    under one minimum partition) keeps adaptive execution's single
+    task, and a ``repartition(n)`` keeps its n."""
     from pyspark.sql import functions as F
 
     from reddit_hn_etl_spark.operators.dedup import fan_out_narrow_input
@@ -440,11 +442,14 @@ def test_fan_out_narrow_input_decides_shuffled_input_without_a_job(spark):
     from .conftest import _jobs
 
     target = spark.sparkContext.defaultParallelism
-    small = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    small = spark.range(200_000).groupBy((F.col("id") % 7).alias("k")).count()
     out, jobs = _jobs(spark, "fan_out_shuffled", lambda: fan_out_narrow_input(small))
     assert jobs == 0
     assert out.rdd.getNumPartitions() == target
     assert sorted(r.k for r in out.collect()) == list(range(7))
+    tiny = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    out, jobs = _jobs(spark, "fan_out_tiny", lambda: fan_out_narrow_input(tiny))
+    assert jobs == 0 and out is tiny
     wide = spark.range(100).repartition(target + 4)
     out, jobs = _jobs(spark, "fan_out_repartitioned", lambda: fan_out_narrow_input(wide))
     assert jobs == 0 and out.rdd.getNumPartitions() == target + 4
