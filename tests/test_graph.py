@@ -2,8 +2,8 @@
 triangles, PageRank, k-core, label propagation, BFS, Bellman-Ford.
 
 Tests taking ``graph_paths`` run on both paths of the four operators
-with an in-memory finish (the session's broadcast threshold, then
--1 for the distributed loops)."""
+with an in-memory finish (the size rule, where these small graphs
+finish in memory, then the distributed loops)."""
 
 from __future__ import annotations
 
@@ -73,7 +73,7 @@ def test_components_raise_when_max_iter_runs_out(spark, distributed_graphs):
     operator (CC, k-core peeling, Bellman-Ford relaxation) raises
     naming itself and its budget instead of returning unconverged
     state. The round budgets bound the distributed loops only, so
-    this runs at broadcast threshold -1."""
+    this forces those loops."""
     import pytest
 
     from reddit_hn_etl_spark.operators.graph import bellman_ford, kcore
