@@ -438,9 +438,9 @@ def main(argv: list[str] | None = None) -> int:
     rec = audit.start_run("staging_publish")
     try:
         # write-new-then-promote keeps readers consistent
-        from .streaming.ingest import _write_swap
+        from .localfs import write_swap
 
-        _write_swap(target, staging_root, "_next")
+        write_swap(target, staging_root, "_next")
         n = spark.read.parquet(staging_root).count()
         audit.succeed(rec, rows_copied=n, inserted=0, updated=0)
     except Exception as exc:  # noqa: BLE001

@@ -171,6 +171,53 @@ def ngram_array(toks: Column, n: int) -> Column:
     return out
 
 
+def _set_bits(n: int) -> list[int]:
+    """The powers of two that sum to ``n``, largest first."""
+    return [1 << b for b in reversed(range(n.bit_length())) if n & (1 << b)]
+
+
+def _doubling_levels(base: Column, n: int, size: Column, combine) -> dict:
+    """The power-of-two gram levels up to ``n``: L₁ = ``base``,
+    L_{2k}[i] = combine(L_k[i], L_k[i+k])."""
+    levels = {1: base}
+    k = 1
+    while k * 2 <= n:
+        levels[k * 2] = F.zip_with(
+            levels[k],
+            F.slice(levels[k], 1 + k, F.greatest(size - k, F.lit(0))),
+            combine,
+        )
+        k *= 2
+    return levels
+
+
+def _compose_set_bits(levels: dict, n: int, size: Column, combine) -> Column:
+    """Positional n-grams from power-of-two ``levels`` (columns keyed
+    by gram length): n's set bits joined largest first, each level
+    shifted by the length composed so far. Positions 1..size−n+1 are
+    complete n-grams; the tail entries are partial/null (zip_with
+    null-pads the shorter side), so they are sliced off. ``combine``
+    joins two adjacent grams (string concat or `xxhash64`)."""
+    bits = _set_bits(n)
+    out, acc = levels[bits[0]], bits[0]
+    for b in bits[1:]:
+        out = F.zip_with(
+            out,
+            F.slice(levels[b], 1 + acc, F.greatest(size - acc, F.lit(0))),
+            combine,
+        )
+        acc += b
+    return F.slice(out, 1, F.greatest(size - (n - 1), F.lit(0)))
+
+
+def _concat_grams(a: Column, b: Column) -> Column:
+    return F.concat(a, F.lit(" "), b)
+
+
+def _hash_grams(a: Column, b: Column) -> Column:
+    return F.xxhash64(a, b)
+
+
 def ngram_array_doubling(toks: Column, n: int) -> Column:
     """`ngram_array` for LARGE n: the same zip_with/concat
     construction, but composed by BINARY DOUBLING — G_{2k}[i] =
@@ -182,31 +229,9 @@ def ngram_array_doubling(toks: Column, n: int) -> Column:
     the original to leave their audited plans untouched."""
     if n <= 1:
         return F.filter(toks, lambda t: t.isNotNull())
-    pow2: dict[int, Column] = {1: toks}
-    k = 1
-    while k * 2 <= n:
-        pow2[k * 2] = F.zip_with(
-            pow2[k],
-            F.slice(pow2[k], 1 + k, F.greatest(F.size(toks) - k, F.lit(0))),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-        k *= 2
-    bits = [1 << b for b in range(n.bit_length()) if n & (1 << b)]
-    bits.sort(reverse=True)
-    out = pow2[bits[0]]
-    acc = bits[0]
-    for b in bits[1:]:
-        out = F.zip_with(
-            out,
-            F.slice(
-                pow2[b], 1 + acc, F.greatest(F.size(toks) - acc, F.lit(0))
-            ),
-            lambda a, bb: F.concat(a, F.lit(" "), bb),
-        )
-        acc += b
-    # positions 1..size-n+1 are complete n-grams; the tail entries are
-    # partial/null (zip_with null-pads the shorter side) — slice off
-    return F.slice(out, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
+    size = F.size(toks)
+    levels = _doubling_levels(toks, n, size, _concat_grams)
+    return _compose_set_bits(levels, n, size, _concat_grams)
 
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -989,31 +1014,9 @@ def gram_hash_doubling(toks: Column, n: int) -> Column:
     htoks = F.transform(toks, lambda t: F.xxhash64(t))
     if n <= 1:
         return htoks
-    pow2: dict[int, Column] = {1: htoks}
-    k = 1
-    while k * 2 <= n:
-        pow2[k * 2] = F.zip_with(
-            pow2[k],
-            F.slice(
-                pow2[k], 1 + k, F.greatest(F.size(toks) - k, F.lit(0))
-            ),
-            lambda a, b: F.xxhash64(a, b),
-        )
-        k *= 2
-    bits = [1 << b for b in range(n.bit_length()) if n & (1 << b)]
-    bits.sort(reverse=True)
-    out = pow2[bits[0]]
-    acc = bits[0]
-    for b in bits[1:]:
-        out = F.zip_with(
-            out,
-            F.slice(
-                pow2[b], 1 + acc, F.greatest(F.size(toks) - acc, F.lit(0))
-            ),
-            lambda a, bb: F.xxhash64(a, bb),
-        )
-        acc += b
-    return F.slice(out, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
+    size = F.size(toks)
+    levels = _doubling_levels(htoks, n, size, _hash_grams)
+    return _compose_set_bits(levels, n, size, _hash_grams)
 
 
 def _gram_base(df, id_col: str, text_col: str, k: int):
@@ -1249,7 +1252,7 @@ def longest_repeated_span_length(
                         1 + k,
                         F.greatest(F.size("_htoks") - k, F.lit(0)),
                     ),
-                    lambda a, b: F.xxhash64(a, b),
+                    _hash_grams,
                 ),
             )
             lvl_cols[k * 2] = f"_h{k * 2}"
@@ -1266,23 +1269,9 @@ def longest_repeated_span_length(
             identical composition to `gram_hash_doubling`."""
             if n <= 1:
                 return F.col("_htoks")
-            bits = [1 << b for b in range(n.bit_length()) if n & (1 << b)]
-            bits.sort(reverse=True)
-            out = F.col(lvl_cols[bits[0]])
-            acc = bits[0]
-            for b in bits[1:]:
-                out = F.zip_with(
-                    out,
-                    F.slice(
-                        F.col(lvl_cols[b]),
-                        1 + acc,
-                        F.greatest(F.size("_htoks") - acc, F.lit(0)),
-                    ),
-                    lambda a, bb: F.xxhash64(a, bb),
-                )
-                acc += b
-            return F.slice(
-                out, 1, F.greatest(F.size("_htoks") - (n - 1), F.lit(0))
+            return _compose_set_bits(
+                {b: F.col(c) for b, c in lvl_cols.items()},
+                n, F.size("_htoks"), _hash_grams,
             )
 
         if min_count is not None:
@@ -1320,8 +1309,7 @@ def longest_repeated_span_length(
         def gram_hash_at(n: int) -> Column:
             """Hash of the n-gram at 0-based `pos` — the per-position
             twin of gram_hashes (identical composition order)."""
-            bits = [1 << b for b in range(n.bit_length()) if n & (1 << b)]
-            bits.sort(reverse=True)
+            bits = _set_bits(n)
             out = F.element_at(F.col(lvl_cols[bits[0]]), F.col("pos") + 1)
             acc = bits[0]
             for b in bits[1:]:
@@ -1339,9 +1327,8 @@ def longest_repeated_span_length(
                 return levels.select(
                     "_id", F.posexplode(gram_hashes(n)).alias("pos", "h")
                 )
-            bits = {1 << b for b in range(n.bit_length()) if n & (1 << b)}
             need = ["_htoks"] + [
-                lvl_cols[b] for b in sorted(bits) if lvl_cols[b] != "_htoks"
+                lvl_cols[b] for b in sorted(_set_bits(n)) if b > 1
             ]
             return (
                 wp.join(levels.select("_id", *need), "_id")

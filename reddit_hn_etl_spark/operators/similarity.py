@@ -503,32 +503,6 @@ def cosine_pairs_grid(
     )
 
 
-def _assign_cells(df, id_col, vec_col, centroids, extra_cols=()):
-    """(id, cell) assignment via blocked GEMM against broadcast
-    centroids (numpy in ``mapInPandas``: one GEMM per Arrow batch instead
-    of interpreted per-element array functions)."""
-    import numpy as np
-
-    spark = df.sparkSession
-    c = np.asarray(centroids, dtype=np.float64)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1), 1e-12)[:, None]
-    b_c = spark.sparkContext.broadcast(cn)
-    cols = [id_col, vec_col, *extra_cols]
-    out_schema = f"{id_col} long, cell int"
-
-    def assign(batches):
-        import pandas as pd
-
-        cm = b_c.value
-        for pdf in batches:
-            m = np.array(list(pdf[vec_col]), dtype=np.float64)
-            mn = m / np.maximum(np.linalg.norm(m, axis=1), 1e-12)[:, None]
-            cells = (mn @ cm.T).argmax(axis=1).astype("int32")
-            yield pd.DataFrame({id_col: pdf[id_col], "cell": cells})
-
-    return df.select(*cols).mapInPandas(assign, out_schema)
-
-
 def _assign_probe_cells(
     queries,
     query_id_col,
@@ -541,10 +515,12 @@ def _assign_probe_cells(
     """(id, cell, <vec_out>, <norm_out>): the ``n_probe`` nearest
     centroid cells per row, computed DISTRIBUTEDLY (blocked GEMM
     against the broadcast centroid matrix, n_probe rows emitted per
-    input row) — the IVF probe list for the query side, and with
-    ``n_probe=1`` the CARRYING cell assignment for the corpus side
-    (the vector rides along, so no join back to the source table is
-    ever needed). Tie-break: (-sim, cell index) on sims QUANTIZED to
+    input row). Three callers: the IVF probe list for the query side;
+    with ``n_probe=1`` the CARRYING cell assignment that builds the
+    index rows (`_ivf_index_rows`: the vector rides along, so no join
+    back to the source table is ever needed); and the same carrying
+    assignment as every Lloyd step of :func:`kmeans_centroids`.
+    Tie-break: (-sim, cell index) on sims QUANTIZED to
     12 decimals — without the rounding, a mathematically exact tie
     can round differently under different BLAS accumulation orders
     (batch GEMM vs matrix-vector product) and a query would probe a
@@ -655,6 +631,19 @@ def _score_cells_cogroup(
     )
 
 
+def _ivf_index_rows(df, id_col, vec_col, centroids):
+    """The IVF index rows (id, cell, <vec_col>, _cn) that
+    `_score_cells_cogroup` reads: each vector's nearest cell by the
+    carrying assignment, its Spark-side `l2_norm` alongside. One
+    builder for the batch corpus side, the registry query, the
+    streaming index, the offline recenter and every Lloyd step of
+    :func:`kmeans_centroids` (which reads no `_cn`: Catalyst prunes
+    the norm)."""
+    return _assign_probe_cells(
+        df, id_col, vec_col, centroids, 1, vec_out=vec_col, norm_out="_cn"
+    )
+
+
 def kmeans_centroids(
     corpus,
     dim: int,
@@ -666,33 +655,26 @@ def kmeans_centroids(
     """Spherical k-means coarse quantizer, deterministic.
 
     Init: the ``n_cells`` vectors with the smallest ids (seed-free,
-    replay-stable). Each Lloyd iteration: assign (blocked GEMM) →
-    per-cell per-dimension mean (posexplode + partial-aggregated
-    avg) → renormalize driver-side (centroid matrix is tiny:
-    n_cells × dim). Returns list[list[float]].
+    replay-stable). Each Lloyd iteration is the carrying assignment
+    (`_ivf_index_rows`: cosine argmax over the normalized vector and
+    centroids, 1e-12-quantized (-sim, index) tie-break, the vector
+    riding along) followed by `kmeans.update_centroids` — the
+    per-cell per-dimension mean (posexplode + partial-aggregated avg;
+    a cell that lost every member keeps its centroid). The means are
+    NOT renormalized: the next assignment normalizes the centroids
+    itself. Returns list[list[float]].
     """
-    import numpy as np
+    from .kmeans import update_centroids
 
     init = (
         corpus.orderBy(id_col).limit(n_cells).select(vec_col).collect()
     )
     centroids = [list(r[0]) for r in init]
-
     for _ in range(iters):
-        assigned = _assign_cells(corpus, id_col, vec_col, centroids)
-        joined = corpus.select(id_col, vec_col).join(assigned, id_col)
-        sums = (
-            joined.select(
-                "cell", F.posexplode(vec_col).alias("pos", "val")
-            )
-            .groupBy("cell", "pos")
-            .agg(F.avg("val").alias("mean"))
-            .collect()
+        centroids = update_centroids(
+            _ivf_index_rows(corpus, id_col, vec_col, centroids),
+            centroids, vec_col=vec_col, cluster_col="cell",
         )
-        new = np.array(centroids, dtype=np.float64)
-        for r in sums:
-            new[r.cell][r.pos] = r.mean
-        centroids = new.tolist()
     return centroids
 
 
@@ -745,10 +727,10 @@ def knn_cosine_ivf(
     query row is collected.
 
     Construction runs Spark jobs: the k-means fit
-    (:func:`kmeans_centroids`: a seed collect plus three jobs per
-    Lloyd iteration under adaptive execution — 10 at the default
+    (:func:`kmeans_centroids`: a seed collect plus two jobs per
+    Lloyd iteration under adaptive execution — 7 at the default
     ``iters=3``) and, with ``n_cells="auto"``, the corpus count (two
-    more: 12 at the defaults). Output: (query_id, vec_id, cosine_sim,
+    more: 9 at the defaults). Output: (query_id, vec_id, cosine_sim,
     rank) with rank 1..k, deterministic tie-break on vec_id.
     """
     import math
@@ -768,12 +750,9 @@ def knn_cosine_ivf(
     # with the cell, so the corpus is never joined back to itself.
     # Cell tie-break matches the probe side: (-sim, index) on
     # 1e-12-quantized sims.
-    corpus_cells = _assign_probe_cells(
-        corpus, id_col, vec_col, centroids, 1,
-        vec_out=vec_col, norm_out="_cn",
-    )
     return knn_join_ivf_index(
-        corpus_cells, queries, centroids, k, n_probe,
+        _ivf_index_rows(corpus, id_col, vec_col, centroids),
+        queries, centroids, k, n_probe,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )
 
@@ -1466,22 +1445,11 @@ def pq_encode_residual(
     (‖(q − cc) − codeword‖² for each probed cell) — same inlined-
     constant discipline, nprobe×m×k doubles.
     """
-    from .kmeans import _centroid_literal, squared_distances
+    from .kmeans import _centroid_literal, assign
 
     coarse_lit = _centroid_literal(coarse_centroids)
-    cd = squared_distances(F.col(vec_col), coarse_centroids)
-    # Name the coarse-distance array once (r12, kmeans.assign's
-    # `_dists` pattern) so argmin evaluates the interpreted fold once
-    # per row, not twice.
-    with_cell = df.select(
-        F.col(id_col), F.col(vec_col), cd.alias("_cd")
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        (
-            F.array_position(F.col("_cd"), F.array_min(F.col("_cd")))
-            .cast("int") - F.lit(1)
-        ).alias("cluster_id"),
+    with_cell = assign(
+        df, coarse_centroids, id_col=id_col, vec_col=vec_col
     ).select(
         id_col,
         "cluster_id",

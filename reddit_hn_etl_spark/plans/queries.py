@@ -23609,10 +23609,7 @@ def ivf_index_knn_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-computation — same reason embedding_knn_join's is a bound)."""
     emb = read_table(spark, sf_dir, "embeddings")
     centroids = similarity.kmeans_centroids(emb, dim=64, n_cells=8, iters=2)
-    index = similarity._assign_probe_cells(
-        emb, "vec_id", "embedding", centroids, 1,
-        vec_out="embedding", norm_out="_cn",
-    )
+    index = similarity._ivf_index_rows(emb, "vec_id", "embedding", centroids)
     q = emb.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )

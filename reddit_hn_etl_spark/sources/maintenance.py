@@ -30,14 +30,12 @@ warehouse for free and a parquet-lake user must own.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..localfs import require_local
+from ..localfs import require_local, write_swap
 
 _SWAPPED = "compacted and erased tables"
 
@@ -96,28 +94,18 @@ def compact_partitions(
         )
         .drop("n_files")
     )
-    tmp = root.rstrip("/") + ".compact.tmp"
-    old = root.rstrip("/") + ".compact.old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
+    # Counted before the swap: `plan` reads the files the swap deletes.
+    n_parts = plan.count()
+    write_swap(
         bucketed.repartition(*[F.col(c) for c in pcols], F.col("_bucket"))
         # sort must LEAD with the partition columns: FileFormatWriter
         # requires task rows ordered by them and would otherwise
         # insert its own (non-stable) sort on just the partition
         # cols, destroying the sort_col order inside each file
         .sortWithinPartitions(*pcols, sort_col)
-        .drop("_bucket")
-        .write.partitionBy(*pcols)
-        .mode("errorifexists")
-        .parquet(tmp)
+        .drop("_bucket"),
+        root, "_compacting", pcols,
     )
-    n_parts = plan.count()
-    # Commit point: two renames. A crash between them leaves the old
-    # data at `.compact.old` and the new at `root` — never neither.
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(root, old)
-    os.rename(tmp, root)
-    shutil.rmtree(old, ignore_errors=True)
     return n_parts
 
 
@@ -224,15 +212,8 @@ def erase_keys(
     before = df.count()
     vals = list(values)
     kept = df.where(~F.col(key_col).isin(vals) | F.col(key_col).isNull())
-    tmp = table_dir.rstrip("/") + ".__erasing__"
-    old = table_dir.rstrip("/") + ".__erased_old__"
-    shutil.rmtree(tmp, ignore_errors=True)
-    kept.write.mode("errorifexists").parquet(tmp)
-    after = spark.read.parquet(tmp).count()
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(table_dir.rstrip("/"), old)
-    os.replace(tmp, table_dir.rstrip("/"))
-    shutil.rmtree(old, ignore_errors=True)
+    write_swap(kept, table_dir, "_erasing")
+    after = spark.read.parquet(table_dir).count()
     return {
         "rows_before": before,
         "rows_erased": before - after,

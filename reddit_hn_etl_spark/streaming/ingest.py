@@ -30,12 +30,12 @@ retry a no-op, each written once in the private helpers:
   rows carry ``batch_id`` and a null ``thru`` (`_append_index_rows`).
   Compaction folds history into one snapshot (``batch_id = -1``,
   ``thru`` = the highest batch folded, `_watermarks`) and promotes it
-  with write-new-then-swap (`_write_swap`). A reader sees the snapshot
-  plus partials above its ``thru`` and, for a batch reading the index
-  it is about to append to, below its own ``batch_id`` (`_visible`);
-  row-identity indexes then resolve each key last-write-wins
-  (`_latest`). A replay of a folded batch is dropped by the watermark,
-  one above it dedups.
+  with write-new-then-swap (`localfs.write_swap`). A reader sees the
+  snapshot plus partials above its ``thru`` and, for a batch reading
+  the index it is about to append to, below its own ``batch_id``
+  (`_visible`); row-identity indexes then resolve each key
+  last-write-wins (`_latest`). A replay of a folded batch is dropped
+  by the watermark, one above it dedups.
 
 The swaps and the gram-scheme marker use local-filesystem calls, so
 those dirs must be local paths: `_require_local` refuses a
@@ -45,14 +45,13 @@ those dirs must be local paths: `_require_local` refuses a
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
-from ..localfs import require_local
+from ..localfs import require_local, write_swap
 from ..plans.hn_pipeline import transform_raw
 from ..schema import RAW_SCHEMA
 
@@ -162,37 +161,6 @@ def _has_data(path: str) -> bool:
     return os.path.isdir(path) and any(
         not f.startswith(("_", ".")) for f in os.listdir(path)
     )
-
-
-def _write_swap(
-    df: DataFrame, live: str, suffix: str,
-    partition_col: str | None = None, before_swap=None,
-) -> None:
-    """Replace ``live`` by ``df``: write it to ``<live><suffix>``,
-    call ``before_swap(new_dir)`` if given, then promote the new dir
-    with a two-rename swap.
-
-    Stale artifacts of a crash (a half-written new dir, a ``<live>_old``
-    left between the renames) are cleaned first, or the renames would
-    raise. Not atomic for concurrent readers (the mart path uses the
-    versioned-pointer protocol in sources/publish.py for that): every
-    caller is the single writer of ``live``, with readers only between
-    its batches."""
-    _require_local(live)
-    live = live.rstrip("/")
-    new, old = live + suffix, live + "_old"
-    shutil.rmtree(new, ignore_errors=True)
-    writer = df.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(new)
-    if before_swap is not None:
-        before_swap(new)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(live):
-        os.rename(live, old)
-    os.rename(new, live)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
@@ -351,12 +319,14 @@ def _swap_snapshot(
     partition_col: str | None = None, before_swap=None,
 ) -> int:
     """Stamp ``merged`` as the snapshot folding batches up to ``fold``
-    and swap it in (`_write_swap`); returns the rows written, counted
-    by an ``Observation`` on the write instead of a read-back job."""
+    and swap it in (`localfs.write_swap`); returns the rows written,
+    counted by an ``Observation`` on the write instead of a read-back
+    job."""
     obs = Observation()
-    _write_swap(
+    write_swap(
         _as_snapshot(merged, fold).observe(obs, F.count(F.lit(1)).alias("n")),
-        index_dir, suffix, partition_col, before_swap,
+        index_dir, suffix, [partition_col] if partition_col else [],
+        before_swap,
     )
     return obs.get["n"]
 
@@ -561,7 +531,7 @@ def stream_merge_to_staging(
             merged, _ = load_merge(target, staged)
         else:
             merged = staged
-        _write_swap(merged, staging_root, f"_b{batch_id}")
+        write_swap(merged, staging_root, f"_b{batch_id}")
         if marts_root is not None:
             from ..plans.hn_pipeline import refresh_marts_incremental
 
@@ -1088,7 +1058,7 @@ def ivf_index_stream(
 ) -> StreamingQuery:
     """Streaming incremental IVF index: each micro-batch of new
     vectors is assigned to its nearest EXISTING cell executor-side
-    (`similarity._assign_probe_cells` with n_probe=1 — the carrying
+    (`similarity._ivf_index_rows`, the carrying n_probe=1
     assignment, bit-identical to `knn_cosine_ivf`'s corpus side
     including the 1e-12-quantized (-sim, index) tie-break) and
     appended to ``index_dir`` partitioned by cell — completing the
@@ -1107,14 +1077,11 @@ def ivf_index_stream(
     Scale shape per batch: one Arrow GEMM stage over the batch (the
     broadcast centroid matrix is tiny), zero shuffles, O(batch)
     rows appended; the corpus is never re-read or re-assigned."""
-    from ..operators.similarity import _assign_probe_cells
+    from ..operators.similarity import _ivf_index_rows
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         _append_index_rows(
-            _assign_probe_cells(
-                batch_df.select(id_col, vec_col), id_col, vec_col,
-                centroids, 1, vec_out=vec_col, norm_out="_cn",
-            ),
+            _ivf_index_rows(batch_df, id_col, vec_col, centroids),
             batch_id, index_dir, "cell",
         )
 
@@ -1460,7 +1427,7 @@ def recenter_ivf_index(
     candidate quantizer from each compaction's newly-indexed rows at
     O(batch) cost, and the triggered recenter then pays only the
     O(corpus) reassign+rewrite, not the O(corpus × iters) refit."""
-    from ..operators.similarity import _assign_probe_cells, kmeans_centroids
+    from ..operators.similarity import _ivf_index_rows, kmeans_centroids
 
     df = spark.read.parquet(index_dir)
     thru, fold = _watermarks(df)
@@ -1481,11 +1448,8 @@ def recenter_ivf_index(
             vectors, dim, n_cells=n_cells, iters=iters,
             id_col=id_col, vec_col=vec_col,
         )
-    rebuilt = _assign_probe_cells(
-        vectors, id_col, vec_col, centroids, 1,
-        vec_out=vec_col, norm_out="_cn",
-    )
-    _write_swap(_as_snapshot(rebuilt, fold), index_dir, "_recentering", "cell")
+    rebuilt = _ivf_index_rows(vectors, id_col, vec_col, centroids)
+    write_swap(_as_snapshot(rebuilt, fold), index_dir, "_recentering", ["cell"])
     return centroids
 
 
@@ -1671,7 +1635,7 @@ def compact_gram_index(spark: SparkSession, index_dir: str) -> int:
     compaction: a batch replayed after its rows were folded in is
     dropped by `read_gram_index_merged`'s watermark filter instead of
     double-counting. Run between batches (single writer — the
-    `_write_swap` window); the trigger=availableNow drain or a stopped
+    `write_swap` window); the trigger=availableNow drain or a stopped
     stream gives it. The scheme marker is stamped on the new dir
     before the swap, so the compacted dir stays readable.
 
@@ -2316,7 +2280,7 @@ def cdc_apply_stream(
         # Tombstones (last op = D) STAY in the state table: dropping
         # them would let a replayed pre-delete U out-rank nothing and
         # resurrect the key. Readers filter via read_cdc_state.
-        _write_swap(
+        write_swap(
             _latest(merged, [key_col], (seq_a, seq_b)), state_dir, "_next"
         )
 

@@ -31,7 +31,7 @@ ALLOWED = {
     ("operators/kmeans.py", "update_centroids_minibatch"): "k·dim partial rows (k-means k)",
     ("operators/graph.py", "_probe"): "1-row convergence probe aggregate (one per fixpoint round)",
     ("operators/similarity.py", "knn_cosine_bruteforce"): "guarded: loud rows×dim budget (max_query_rows×64 cells, r13) and row ceiling (max_query_rows×8) checked BEFORE the collect (r12 Arrow scoring kernel; same memory class as the broadcast relation it replaced)",
-    ("operators/similarity.py", "kmeans_centroids"): "n_cells seed rows + n_cells centroid rows per iter",
+    ("operators/similarity.py", "kmeans_centroids"): "n_cells seed rows (each Lloyd step collects in kmeans.update_centroids)",
     ("operators/checks.py", "assert_unique_key"): "limit(1) probe",
     ("operators/checks.py", "assert_not_null"): "limit(1) probe",
     ("operators/checks.py", "assert_non_empty"): "limit(1) probe",

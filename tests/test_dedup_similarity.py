@@ -685,7 +685,7 @@ def test_knn_construction_jobs(spark, sf_dir):
     """Spark jobs each kNN operator runs while it builds its plan, as
     their docstrings declare: brute force its budget aggregate (two
     jobs under adaptive execution) and query collect; the IVF k-means
-    fit (10 at iters=3) plus the auto-n_cells corpus count (2); the
+    fit (7 at iters=3) plus the auto-n_cells corpus count (2); the
     index joins none."""
     from reddit_hn_etl_spark.sources.tables import read_table
 
@@ -722,9 +722,9 @@ def test_knn_construction_jobs(spark, sf_dir):
     got = {name: _jobs(spark, f"jobs_{name}", fn)[1] for name, fn in calls.items()}
     assert got == {
         "knn_cosine_bruteforce": 3,
-        "knn_cosine_ivf": 12,
-        "knn_cosine_ivf_explicit": 10,
-        "knn_cosine_ivf_distributed": 12,
+        "knn_cosine_ivf": 9,
+        "knn_cosine_ivf_explicit": 7,
+        "knn_cosine_ivf_distributed": 9,
         "knn_join_ivf_index": 0,
         "pq_knn_join": 0,
     }

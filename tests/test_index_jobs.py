@@ -114,7 +114,7 @@ def test_compaction_jobs_and_reader_rows(spark, tmp_path):
         spark, "jobs_recenter",
         lambda: ingest.recenter_ivf_index(spark, ivf, dim=dim, n_cells=4, iters=2),
     )
-    assert n == 13 and len(refit) == 4
+    assert n == 11 and len(refit) == 4
 
     cb = similarity.pq_codebooks(dim=dim, n_sub=2, k=4, seed=101)
     pq = str(tmp_path / "pq")

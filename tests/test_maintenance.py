@@ -79,8 +79,8 @@ def test_compact_rewrites_bounded_sorted_identical(spark, tmp_path):
         ids = [r.id for r in spark.read.parquet(path).collect()]
         assert ids == sorted(ids)
     # no temp/old dirs left behind
-    assert not os.path.exists(root + ".compact.tmp")
-    assert not os.path.exists(root + ".compact.old")
+    assert not os.path.exists(root + "_compacting")
+    assert not os.path.exists(root + "_old")
 
 
 def test_write_globally_sorted_total_order(spark, tmp_path):
@@ -204,16 +204,15 @@ def test_erase_keys_rewrites_atomically(spark, tmp_path):
     # no leftover temp/old dirs
     import os
 
-    names = os.listdir(tmp_path)
-    assert not [n for n in names if "__eras" in n]
+    assert os.listdir(tmp_path) == ["users_tbl"]
 
 
 def test_swaps_refuse_uri_paths(spark, tmp_path, monkeypatch):
-    """Both hand-rolled swaps rename through os/shutil, which would
-    take ``s3://bucket/t`` for the relative local path ``s3:/bucket/t``
-    and a ``file://`` URI for a path that does not exist after Spark
-    wrote next to it. Each refuses a URI with a ValueError naming it
-    before anything is read or written."""
+    """Both swaps rename through os/shutil (`localfs.write_swap`),
+    which would take ``s3://bucket/t`` for the relative local path
+    ``s3:/bucket/t`` and a ``file://`` URI for a path that does not
+    exist after Spark wrote next to it. Each refuses a URI with a
+    ValueError naming it before anything is read or written."""
     import re
 
     import pytest

@@ -235,3 +235,45 @@ def test_bruteforce_budget_is_rows_times_dim(spark):
             narrow, narrow.selectExpr("vec_id as query_id", "embedding"),
             k=1, max_query_rows=2,
         )
+
+
+def test_kmeans_centroids_match_numpy_spherical_lloyd(spark, sf_dir):
+    """The IVF quantizer fit computes spherical Lloyd exactly: a numpy
+    reference with the same smallest-id init, the same 1e-12-quantized
+    (-sim, index) assignment and plain per-cell means (an empty cell
+    keeps its centroid) gives the same cell for every vector at every
+    iteration and the same centroids to 1e-12."""
+    from reddit_hn_etl_spark.sources.tables import read_table
+
+    n_cells, iters = 8, 3
+    emb = read_table(spark, sf_dir, "embeddings")
+    rows = sorted((r.vec_id, list(r.embedding)) for r in emb.collect())
+    ids = np.array([i for i, _ in rows])
+    x = np.array([v for _, v in rows], dtype=np.float64)
+
+    def unit(m):
+        return m / np.maximum(np.linalg.norm(m, axis=1), 1e-12)[:, None]
+
+    def spark_cells(cents):
+        got = {
+            r.vec_id: r.cell
+            for r in similarity._ivf_index_rows(
+                emb, "vec_id", "embedding", cents.tolist()
+            ).collect()
+        }
+        return np.array([got[i] for i in ids])
+
+    cents = x[:n_cells].copy()
+    for it in range(iters + 1):
+        sims = np.round(unit(x) @ unit(cents).T, 12)
+        cells = np.argsort(-sims, axis=1, kind="stable")[:, 0]
+        assert (spark_cells(cents) == cells).all(), f"iteration {it}"
+        if it == iters:
+            break
+        for c in np.unique(cells):
+            cents[c] = x[cells == c].mean(axis=0)
+    got = np.array(
+        similarity.kmeans_centroids(emb, dim=64, n_cells=n_cells, iters=iters)
+    )
+    assert got.shape == cents.shape
+    assert np.abs(got - cents).max() <= 1e-12

@@ -9,12 +9,13 @@ import pytest
 
 import json
 
+from reddit_hn_etl_spark import localfs
 from reddit_hn_etl_spark.streaming import ingest
 
 # The persisted-index protocol battery is exhaustive-marked per test
 # (~2-3 min; run_suite chunk C2 runs it all). The four unmarked tests
 # are the default-run smoke slice: together they cover the shared
-# index helpers (_read_or_none, _visible, _latest, _write_swap).
+# index helpers (_read_or_none, _visible, _latest, localfs.write_swap).
 
 
 def _write_events_jsonl(path, rows):
@@ -1176,7 +1177,7 @@ def test_local_protocol_refuses_uri_paths(spark, tmp_path, monkeypatch):
     with pytest.raises(ValueError, match="URI"):
         ingest._read_index_dir(spark, uri)
     with pytest.raises(ValueError, match="URI"):
-        ingest._write_swap(spark.range(1), uri, "_compacting")
+        localfs.write_swap(spark.range(1), uri, "_compacting")
 
     raw = tmp_path / "raw"
     raw.mkdir()
